@@ -1,6 +1,7 @@
 package graft.enrich
 
-import java.io.{DataInputStream, DataOutputStream, File, FileInputStream, FileOutputStream}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream,
+  File, FileInputStream, FileOutputStream}
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.SparkFiles
 
@@ -89,7 +90,7 @@ object ModelFileEmbedder {
       val path =
         if (local.exists()) local.getPath
         else SparkFiles.get(new File(n).getName) // shipped via addFile
-      val in = new DataInputStream(new FileInputStream(path))
+      val in = new DataInputStream(new BufferedInputStream(new FileInputStream(path)))
       try {
         val magic = new Array[Byte](4); in.readFully(magic)
         require(new String(magic, "US-ASCII") == "GFTE",
@@ -112,7 +113,7 @@ object ModelFileEmbedder {
     * stand-in for exporting a trained model. */
   def save(path: String, inDim: Int, outDim: Int, seed: Long = 42L): Unit = {
     val rnd = new scala.util.Random(seed)
-    val out = new DataOutputStream(new FileOutputStream(path))
+    val out = new DataOutputStream(new BufferedOutputStream(new FileOutputStream(path)))
     try {
       out.writeBytes("GFTE")
       out.writeInt(inDim); out.writeInt(outDim)

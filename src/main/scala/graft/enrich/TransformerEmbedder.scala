@@ -1,6 +1,7 @@
 package graft.enrich
 
-import java.io.{DataInputStream, DataOutputStream, File, FileInputStream, FileOutputStream}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream,
+  File, FileInputStream, FileOutputStream}
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.SparkFiles
 import scala.collection.mutable
@@ -316,7 +317,7 @@ object TransformerEmbedder {
       val path =
         if (local.exists()) local.getPath
         else SparkFiles.get(new File(n).getName)
-      val in = new DataInputStream(new java.io.BufferedInputStream(
+      val in = new DataInputStream(new BufferedInputStream(
         new FileInputStream(path)))
       try {
         val magic = new Array[Byte](4); in.readFully(magic)
@@ -376,7 +377,7 @@ object TransformerEmbedder {
       "vocabTokens must be distinct")
     val vocabN = if (wordPiece) vocabTokens.length else vocab
     val rnd = new scala.util.Random(seed)
-    val out = new DataOutputStream(new FileOutputStream(path))
+    val out = new DataOutputStream(new BufferedOutputStream(new FileOutputStream(path)))
     def mat(m: Int, n: Int): Unit = {
       val s = math.sqrt(2.0 / (m + n)).toFloat
       var i = 0

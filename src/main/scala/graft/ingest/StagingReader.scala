@@ -59,12 +59,19 @@ object StagingReader {
   }
 
   /** S3 — stage a DTO frame, date-partitioned (y/m/d from scrape_time,
-    * mirroring the reference's key layout). */
-  def writeStaged(df: DataFrame, path: String): Unit =
-    df.withColumn("y", date_format(to_date(col("scrape_time")), "yyyy"))
-      .withColumn("m", date_format(to_date(col("scrape_time")), "MM"))
-      .withColumn("d", date_format(to_date(col("scrape_time")), "dd"))
-      .write.mode("append").partitionBy("y", "m", "d").json(path)
+    * mirroring the reference's key layout): one JSON array file per
+    * partition, the layout [[readStaged]] reads back. Partition columns
+    * a previous [[readStaged]] added are dropped before the write. */
+  def writeStaged(df: DataFrame, path: String): Unit = {
+    val data = df.drop("y", "m", "d")
+    val day = to_date(col("scrape_time"))
+    data.select(date_format(day, "yyyy").as("y"), date_format(day, "MM").as("m"),
+        date_format(day, "dd").as("d"),
+        to_json(struct(data.columns.map(col).toIndexedSeq: _*)).as("_doc"))
+      .groupBy("y", "m", "d")
+      .agg(concat(lit("["), concat_ws(",", collect_list("_doc")), lit("]")).as("value"))
+      .write.mode("append").partitionBy("y", "m", "d").text(path)
+  }
 
   /** Normalize the polymorphic `related_artists` (§1.3): the extractor
     * emits `{name, wwoz_artist_href}` objects, cache round-trips emit

@@ -65,4 +65,16 @@ class ModelFileEmbedderSpec extends SparkSpec {
     val cos = a.zip(b).map { case (x, y) => x * y }.sum
     assert(cos < 0.99f)
   }
+
+  private def sha256(path: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(Files.readAllBytes(java.nio.file.Paths.get(path)))
+      .map("%02x".format(_)).mkString
+
+  test("artifact bytes: a seeded artifact keeps its pinned SHA-256") {
+    val f = Files.createTempDirectory("graft-model-sha").resolve("m.gfte").toString
+    ModelFileEmbedder.save(f, inDim = 64, outDim = 16)
+    assert(Files.size(java.nio.file.Paths.get(f)) == 4108L)
+    assert(sha256(f) == "8396dd1876ffa7488aae270c1c1204052a8488df8d89ccad06868973177d3095")
+  }
 }

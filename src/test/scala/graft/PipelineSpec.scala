@@ -209,4 +209,44 @@ class PipelineSpec extends SparkSpec {
       .head().getAs[String]("description")
     assert(desc456 == "Jazz performance") // existing description kept
   }
+
+  test("S3/S4 writeStaged round-trips through readStaged into the pipeline") {
+    // two scrape dates: the fixture and a copy re-keyed to the next day
+    val nextDay = staged
+      .withColumn("event_data", col("event_data").withField("wwoz_event_href",
+        concat(col("event_data.wwoz_event_href"), lit("-b"))))
+      .withColumn("scrape_time", lit("2025-03-21T03:00:00-05:00"))
+    val dir = Files.createTempDirectory("graft-staging-rt").resolve("raw_events").toString
+    StagingReader.writeStaged(staged.unionByName(nextDay), dir)
+
+    // one JSON array file per y/m/d partition
+    val files = Files.walk(java.nio.file.Paths.get(dir)).toArray
+      .map(_.asInstanceOf[java.nio.file.Path]).filter { f =>
+        val n = f.getFileName.toString
+        Files.isRegularFile(f) && !n.startsWith(".") && !n.startsWith("_")
+      }
+    assert(files.map(_.getParent.toString.stripPrefix(dir)).sorted.toSeq ==
+      Seq("/y=2025/m=03/d=20", "/y=2025/m=03/d=21"))
+    assert(files.forall(f => Files.readString(f).startsWith("[")))
+
+    val back = StagingReader.readStaged(spark, dir)
+    assert(back.count() == 6)
+    assert(Set("y", "m", "d").subsetOf(back.columns.toSet))
+    val hrefs = (df: org.apache.spark.sql.DataFrame, c: String) =>
+      df.select(c).collect().map(_.getString(0)).toSet
+    assert(hrefs(back, "event_data.wwoz_event_href") ==
+      hrefs(staged.unionByName(nextDay), "event_data.wwoz_event_href"))
+
+    // the partition columns ride along without breaking validation
+    val w = Pipeline.run(spark, back, Pipeline.emptyWarehouse(spark),
+      today = "2025-03-20")
+    assert(w.summary("events_validated") == 4)
+    assert(w.summary("events_quarantined") == 2)
+    assert(hrefs(w.events, "wwoz_event_href") ==
+      Set("/events/456", "/events/457", "/events/456-b", "/events/457-b"))
+
+    // staging a read-back frame again drops its partition columns first
+    StagingReader.writeStaged(back, dir)
+    assert(StagingReader.readStaged(spark, dir).count() == 12)
+  }
 }

@@ -166,4 +166,19 @@ class TransformerEmbedderSpec extends SparkSpec {
     assert(emb.embed((1 to 64).map(i => s"w$i").mkString(" ")).toSeq ==
       emb.embed((1 to 80).map(i => s"w$i").mkString(" ")).toSeq)
   }
+
+  private def sha256(path: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(Files.readAllBytes(java.nio.file.Paths.get(path)))
+      .map("%02x".format(_)).mkString
+
+  test("artifact bytes: seeded GFT3 and GFT2 artifacts keep their pinned SHA-256") {
+    val dir = Files.createTempDirectory("graft-tfm-sha")
+    val gft3 = dir.resolve("t.gft3").toString
+    val gft2 = dir.resolve("t.gft2").toString
+    TransformerEmbedder.save(gft3)
+    TransformerEmbedder.save(gft2, wordPiece = false)
+    assert(sha256(gft3) == "3ee1f2f7099049f66e96dcc43fcd2f5f049cd091fbe63c1ef51540a4697b79ac")
+    assert(sha256(gft2) == "ce54caaec540adc7e5dee0570e077e7d4d24d9781a01556efdfeec9673983850")
+  }
 }
