@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): times every declared query on
   * SPARK_GRAFT_SF_DIR and prints one JSON line. A short warmup runs first
   * (JIT + codegen caches + parquet footers) so per-query numbers measure
@@ -9,24 +7,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // r13 (§5): the ContextCleaner only reclaims dead broadcasts /
-      // shuffle state / RDD blocks when a driver GC runs; on a large
-      // heap the JVM can go many queries without one, so hundreds of
-      // queries' worth of dead broadcast blocks pile up and the
-      // big-hash queries then run under avoidable memory pressure
-      // (round-12 driver run: q236 24 s vs 1.4 s isolated). Spark's own
-      // knob for exactly this long-lived-driver situation — default
-      // 30min, far longer than a whole bench run.
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local(cpus)
 
     // warmup (not timed): run every query once at the smallest scale
     // factor so codegen compilation and JIT are paid before timing — the
@@ -41,29 +23,11 @@ object Bench {
       case Some(set) => SparkEntry.queries.filter { case (k, _) => set(k) }
       case None => SparkEntry.queries
     }
-    // r12: clearCache() drops SQL-level caches but NOT the RDD-level
-    // persists behind every localCheckpoint — those leaked across the
-    // 300+-query run (warmup included) and taxed every later query's
-    // memory (measured: q124 6.1 s isolated vs 15.0 s mid-bench on the
-    // same binary). Between queries nothing references a prior query's
-    // checkpoints, so dropping them is exactly the cache hygiene the
-    // clearCache call already intends.
-    // r13: blocking — with blocking=false the block removal races the
-    // NEXT query's timed region (the next query starts while the prior
-    // query's checkpoint blocks still occupy the heap), which is one
-    // plausible trigger for the round-12 driver-run blowups on the
-    // q234..q243 alphabetical block. Removal is an in-memory map drop;
-    // blocking costs microseconds between queries.
-    def dropLeftoverState(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-    }
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
       selected.foreach { case (_, fn) =>
         try { fn(spark, warmDir).count() } catch { case _: Throwable => () }
-        dropLeftoverState()
+        GraftSession.dropLeftoverState(spark)
       }
     }
     Seq("lineitem", "orders", "customer", "supplier", "part", "nation",
@@ -92,7 +56,7 @@ object Bench {
         val dt = (System.nanoTime() - t0) / 1e9
         // drop caches a query may have left behind (e.g. the pipeline's
         // merge frames) so later queries aren't timed under memory pressure
-        dropLeftoverState()
+        GraftSession.dropLeftoverState(spark)
         dt
       }
       name -> times.min

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan audit: prints the formatted physical plan for selected queries so
   * scan pushdown (`PushedFilters`/`ReadSchema`), broadcast choices, and
   * WholeStageCodegen spans can be reviewed. Usage:
@@ -14,13 +12,7 @@ object Explain {
       else Seq("q01_pricing_summary", "q03_region_rollup",
         "q16_serve_events_by_date", "q18_cosine_topk", "q22_ngram_jaccard",
         "q31_asof_join")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(4)
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

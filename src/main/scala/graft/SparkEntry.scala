@@ -7186,11 +7186,8 @@ object SparkEntry {
             // the funnel reads the batch once per stage — pin it so the
             // file source isn't re-scanned 7× per day (r12 + r13 A/B:
             // spreading the tiny day batch costs more in task launches
-            // than the single-task stages cost in compute — the knob
-            // stays conf-overridable for clusters with bigger days)
-            val day = s.conf.getOption("spark.graft.funnel.batchSpread")
-              .map(n => batch.repartition(n.toInt)).getOrElse(batch)
-              .persist()
+            // than the single-task stages cost in compute)
+            val day = batch.persist()
             // r13: ONE window-hash pass per day. The distinct
             // (doc, win) pairs frame feeds BOTH the probe and (via
             // batchWindowStatsFromPairs — identical rows, min over

@@ -1,7 +1,6 @@
 package graft.enrich
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{ArrayType, FloatType, StructField, StructType}
+import org.apache.spark.sql.DataFrame
 
 /** Pluggable sentence-embedding stage (SURVEY.md M1-M5).
   *
@@ -11,9 +10,10 @@ import org.apache.spark.sql.types.{ArrayType, FloatType, StructField, StructType
   * token → murmur3 bucket ±sign, L2-normalized — interface-compatible
   * with a real encoder and reproducible for tests/oracles.
   *
-  * Executed via `mapPartitions` so a real model would be loaded once per
-  * partition (not per row) — the standard Spark pattern for per-executor
-  * model state. One embed pass = one narrow stage, no shuffle.
+  * Executed as a plain Scala UDF inside the surrounding projection, so
+  * one embed pass is one narrow stage, no shuffle. The embedder ships in
+  * the UDF closure; the model-backed embedders load their weights
+  * lazily, once per executor JVM.
   */
 trait Embedder extends Serializable {
   def dim: Int
@@ -52,41 +52,16 @@ final class HashingEmbedder(val dim: Int = 64) extends Embedder {
 
 object EmbedStage {
 
-  /** Fast path for cheap embedders: a plain Scala UDF column, which stays
-    * inside the surrounding projection (no RDD round-trip, no full-row
-    * re-encode). Use this when the embedder has no expensive per-partition
-    * init; use [[embedColumn]] when a real model must be loaded once per
-    * partition. Same null/empty semantics. */
-  def embedColumnFast(df: DataFrame, textCol: String, outCol: String,
-                      embedder: Embedder = new HashingEmbedder()): DataFrame = {
-    import org.apache.spark.sql.functions.{col, udf}
-    val embedUdf = udf { (t: String) =>
-      if (t == null || t.trim.isEmpty) null else embedder.embed(t)
-    }
-    df.withColumn(outCol, embedUdf(col(textCol)))
-  }
-
   /** Append `outCol: array<float>` = embedding of `textCol`. Null/empty
     * text → null embedding (M1 failure semantics,
     * loader/service.py:75-83). */
   def embedColumn(df: DataFrame, textCol: String, outCol: String,
                   embedder: Embedder = new HashingEmbedder()): DataFrame = {
-    val spark = df.sparkSession
-    val outSchema = StructType(df.schema.fields :+
-      StructField(outCol, ArrayType(FloatType), nullable = true))
-    val textIdx = df.schema.fieldIndex(textCol)
-    val rdd = df.rdd.mapPartitions { it =>
-      // embedder instantiated per partition — model-loading boundary
-      val model = embedder
-      it.map { row =>
-        val t = row.get(textIdx)
-        val emb =
-          if (t == null || t.toString.trim.isEmpty) null
-          else model.embed(t.toString)
-        Row.fromSeq(row.toSeq :+ emb)
-      }
+    import org.apache.spark.sql.functions.{col, udf}
+    val embedUdf = udf { (t: String) =>
+      if (t == null || t.trim.isEmpty) null else embedder.embed(t)
     }
-    spark.createDataFrame(rdd, outSchema)
+    df.withColumn(outCol, embedUdf(col(textCol)))
   }
 
   /** M5 — conditional (re-)embedding: only rows whose embedding is null

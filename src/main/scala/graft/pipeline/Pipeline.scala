@@ -71,7 +71,7 @@ object Pipeline {
       .distinct()
       .withColumn("id", idOf(col("name")))
       .withColumn("description", genreDescription(col("name")))
-    val genresEmbedded = EmbedStage.embedColumnFast(
+    val genresEmbedded = EmbedStage.embedColumn(
       batchGenres.withColumn("_text",
         concat(lit("Genre: "), col("name"), lit(". "), col("description"))),
       "_text", "genre_embedding", embedder).drop("_text")
@@ -90,7 +90,7 @@ object Pipeline {
       .withColumn("popularity_score", lit(null).cast("double"))
     val artistText = Parsers.composeEmbedText(Seq(
       "" -> col("name"), "" -> col("description"), "Website" -> col("website")))
-    val artistsEmbedded = EmbedStage.embedColumnFast(
+    val artistsEmbedded = EmbedStage.embedColumn(
       batchArtists.withColumn("_text", artistText),
       "_text", "description_embedding", embedder).drop("_text")
     val artists = CoalesceMerge
@@ -131,7 +131,7 @@ object Pipeline {
       "" -> col("name"), "Address" -> col("full_address"),
       "" -> when(col("is_indoors"), lit("indoor venue"))
         .otherwise(lit("outdoor venue"))))
-    val venuesEmbedded = EmbedStage.embedColumnFast(
+    val venuesEmbedded = EmbedStage.embedColumn(
       batchVenuesGeo.withColumn("_text", venueText),
       "_text", "venue_info_embedding", embedder).drop("_text")
     val venues = CoalesceMerge.upsert(prev.venues, venuesEmbedded,
@@ -211,8 +211,8 @@ object Pipeline {
       .withColumn("is_indoors", Parsers.isIndoors(col("venue_name")))
       .withColumn("is_streaming", Parsers.isStreaming(col("venue_name")))
       .drop("_venue_addr", "_event_date", "_perf_raw", "_scrape_raw")
-    val eventsEmbedded = EmbedStage.embedColumnFast(
-      EmbedStage.embedColumnFast(batchEvents0, "description", "description_embedding",
+    val eventsEmbedded = EmbedStage.embedColumn(
+      EmbedStage.embedColumn(batchEvents0, "description", "description_embedding",
         embedder)
         .withColumn("_text", concat_ws(" ",
           col("artist_name"), col("venue_name"), col("description"))),

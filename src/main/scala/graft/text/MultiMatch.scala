@@ -104,11 +104,4 @@ object AhoCorasick {
       (total, distinct)
     }
   }
-
-  /** `multi_match_counts(text)` → per-pattern count array (aligned to
-    * the pattern list order), for callers that weight patterns. */
-  def perPatternUdf(patterns: Seq[String]): UserDefinedFunction = {
-    val ac = build(patterns)
-    udf { (text: String) => ac.countMatches(text).map(_.toLong) }
-  }
 }

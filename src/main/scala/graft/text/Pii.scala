@@ -36,67 +36,4 @@ object Pii {
         regexp_replace(text, EmailRe, "<EMAIL>"),
         PhoneRe, "<PHONE>"),
       IpRe, "<IP>")
-
-  // ------------------------------------------------------- fused scrub
-
-  private lazy val EmailP = java.util.regex.Pattern.compile(EmailRe)
-  private lazy val PhoneP = java.util.regex.Pattern.compile(PhoneRe)
-  private lazy val IpP    = java.util.regex.Pattern.compile(IpRe)
-
-  /** One-pass-per-pattern scrub: (redacted text, n_email+n_phone+n_ip).
-    * Same engine (java.util.regex), same patterns, same sequential
-    * replace order as [[redact]], and counts over the ORIGINAL text as
-    * the three count columns — so the struct is value-identical to the
-    * 4-expression form while scanning the text 4 times instead of 6
-    * (email count+replace share one matcher pass; no match-array
-    * materialization for the counts; a cheap charset pre-scan skips
-    * whole patterns when their alphabet is absent).
-    *
-    * MEASURED A WASH at sf0.1 (AbBench `pii_fused_scrub`, ratio 1.01
-    * on the q317 chain where every row carries PII): the UDF ser/de
-    * boundary costs what the two saved regex passes buy, so the
-    * declared queries keep the codegen'd 4-expression form. Kept as
-    * the measured alternative — on PII-sparse corpora the charset
-    * pre-scan short-circuits whole patterns and this form wins. */
-  val scrubUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (text: String) =>
-      if (text == null) null
-      else {
-        var hasAt = false; var hasDigit = false
-        var i = 0
-        while (i < text.length && !(hasAt && hasDigit)) {
-          val c = text.charAt(i)
-          if (c == '@') hasAt = true
-          else if (c >= '0' && c <= '9') hasDigit = true
-          i += 1
-        }
-        var n = 0L
-        // email: count and replace in ONE matcher pass (pass 1 runs on
-        // the original text, so its replacement count IS emailCount)
-        var t1 = text
-        if (hasAt) {
-          val m = EmailP.matcher(text)
-          val sb = new java.lang.StringBuilder()
-          var last = 0
-          while (m.find()) {
-            n += 1
-            sb.append(text, last, m.start()).append("<EMAIL>")
-            last = m.end()
-          }
-          if (last > 0) { sb.append(text, last, text.length); t1 = sb.toString }
-        }
-        var t2 = t1
-        if (hasDigit) {
-          // phone/ip counts run on the ORIGINAL text (independent
-          // per-pattern counts, exactly the 3-count sum's semantics)
-          val mc = PhoneP.matcher(text)
-          while (mc.find()) n += 1
-          val mi = IpP.matcher(text)
-          while (mi.find()) n += 1
-          t2 = IpP.matcher(PhoneP.matcher(t1).replaceAll("<PHONE>"))
-            .replaceAll("<IP>")
-        }
-        (t2, n)
-      }
-    }
 }

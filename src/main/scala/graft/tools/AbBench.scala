@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Same-session interleaved A/B harness — the ONLY valid perf instrument
@@ -21,225 +20,9 @@ object AbBench {
   final case class Pair(name: String, labelA: String, labelB: String,
                         prepare: (SparkSession, String) => (() => DataFrame, () => DataFrame))
 
-  /** The round-6 perf-relevant changes. */
+  /** Pairs whose two sides both run shipped code, so a rerun measures
+    * the current build. */
   def pairs: Seq[Pair] = Seq(
-
-    // round-6 change: q88 dropped its explicit broadcast() hints on the
-    // data-proportional bigram/unigram count frames (a 100 TB
-    // scale-killer — Heaps-law-unbounded build side) in favor of AQE's
-    // runtime choice. A = the old hinted plan, B = the shipped plan.
-    Pair("q88_lm_perplexity", "broadcast_hints", "aqe_choice",
-      (s, d) => {
-        def variant(hinted: Boolean): DataFrame = {
-          val toks = s.read.parquet(s"$d/documents.parquet")
-            .repartition(32) // mirror the query's tSpread input shape
-            .select(col("doc_id"), posexplode(
-              split(trim(lower(col("text"))), "\\s+")).as(Seq("pos", "w")))
-            .filter(col("w") =!= "")
-          val seqW = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-          val big = toks.withColumn("w2", lead(col("w"), 1).over(seqW))
-            .filter(col("w2").isNotNull)
-          val biCounts = big.groupBy(col("w"), col("w2"))
-            .agg(count(lit(1)).as("cb"))
-          val uniCounts = toks.groupBy(col("w")).agg(count(lit(1)).as("cu"))
-          val vocab = toks.agg(countDistinct(col("w")).as("v"))
-          val j1 = if (hinted) big.join(broadcast(biCounts), Seq("w", "w2"))
-                   else big.join(biCounts, Seq("w", "w2"))
-          val j2 = if (hinted) j1.join(broadcast(uniCounts), Seq("w"))
-                   else j1.join(uniCounts, Seq("w"))
-          j2.crossJoin(broadcast(vocab))
-            .withColumn("logp",
-              log2((col("cb") + 1).cast("double") / (col("cu") + col("v"))))
-            .groupBy(col("doc_id"))
-            .agg(count(lit(1)).as("n_bigrams"),
-              round(-avg(col("logp")), 4).as("ppl_bits"))
-            .withColumn("keep", col("ppl_bits") < 7.0)
-            .orderBy(col("doc_id"))
-        }
-        (() => variant(hinted = true), () => variant(hinted = false))
-      }),
-
-    // round-12 OPTIMIZATION change: the bigram-LM family (q88/q225/
-    // q243/q246/q248/q267/q269) moved from posexplode + window-lead
-    // bigrams (a full token-stream Exchange+Sort per use, and separate
-    // corpus scans for cb/cu/V) to the map-side adjacentPairs array
-    // with ONE checkpointed pair-grain model aggregate. A = the old
-    // window-lead q243 lineage, B = the shipped q243. Counts identical.
-    Pair("bigram_mapside_q243", "window_lead", "adjacent_pairs",
-      (s, d) => {
-        def oldQ243(): DataFrame = {
-          val tok = s.read.parquet(s"$d/documents.parquet")
-            .repartition(s.sparkContext.defaultParallelism)
-            .select(col("doc_id"), col("lang"), posexplode(
-              split(trim(lower(col("text"))), "\\s+")).as(Seq("pos", "w")))
-            .filter(col("w") =!= "")
-          val seqW = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-          val big = tok.withColumn("w2", lead(col("w"), 1).over(seqW))
-            .filter(col("w2").isNotNull)
-          val biCounts = big.groupBy(col("w"), col("w2"))
-            .agg(count(lit(1)).as("cb"))
-          val uniCounts = tok.groupBy(col("w")).agg(count(lit(1)).as("cu"))
-          val vocab = tok.agg(countDistinct(col("w")).as("v"))
-          val scored = big.join(biCounts, Seq("w", "w2"))
-            .join(uniCounts, Seq("w"))
-            .crossJoin(broadcast(vocab))
-            .withColumn("logp",
-              log2((col("cb") + 1).cast("double") / (col("cu") + col("v"))))
-            .groupBy(col("doc_id"), col("lang"))
-            .agg(round(-avg(col("logp")), 4).as("ppl_bits"))
-            .withColumn("ppl10k",
-              expr("cast(round(ppl_bits * 10000) as bigint)"))
-            .select(col("doc_id"), col("lang"), col("ppl10k"))
-            .localCheckpoint()
-          val hist = scored.groupBy(col("lang"), col("ppl10k"))
-            .agg(count(lit(1)).as("c"))
-          val wl = Window.partitionBy(col("lang")).orderBy(col("ppl10k"))
-            .rowsBetween(Window.unboundedPreceding, 0)
-          val cuts = hist.withColumn("cum", sum(col("c")).over(wl))
-            .join(broadcast(hist.groupBy(col("lang"))
-              .agg(sum(col("c")).as("n"))), Seq("lang"))
-            .groupBy(col("lang"))
-            .agg(min(when(col("cum") >= expr("(n + 2) div 3"),
-              col("ppl10k"))).as("c33"),
-              min(when(col("cum") >= expr("(2 * n + 2) div 3"),
-                col("ppl10k"))).as("c66"))
-          scored.join(broadcast(cuts), Seq("lang"))
-            .withColumn("bucket",
-              when(col("ppl10k") <= col("c33"), lit("head"))
-                .when(col("ppl10k") <= col("c66"), lit("middle"))
-                .otherwise(lit("tail")))
-            .groupBy(col("lang"), col("bucket"))
-            .agg(count(lit(1)).as("n_docs"), min(col("ppl10k")).as("ppl_lo"),
-              max(col("ppl10k")).as("ppl_hi"))
-            .orderBy(col("lang"), col("bucket"))
-        }
-        (() => oldQ243(),
-         () => graft.SparkEntry.queries("q243_ccnet_buckets")(s, d))
-      }),
-
-    // same round-12 rework measured on q88 itself (integer-bp tail, no
-    // checkpoint in the OLD form — the purest old-vs-new comparison).
-    Pair("bigram_mapside_q88", "window_lead", "adjacent_pairs",
-      (s, d) => {
-        def oldQ88(): DataFrame = {
-          val tok = s.read.parquet(s"$d/documents.parquet")
-            .repartition(s.sparkContext.defaultParallelism)
-            .select(col("doc_id"), posexplode(
-              split(trim(lower(col("text"))), "\\s+")).as(Seq("pos", "w")))
-            .filter(col("w") =!= "")
-          val seqW = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-          val big = tok.withColumn("w2", lead(col("w"), 1).over(seqW))
-            .filter(col("w2").isNotNull)
-          val biCounts = big.groupBy(col("w"), col("w2"))
-            .agg(count(lit(1)).as("cb"))
-          val uniCounts = tok.groupBy(col("w")).agg(count(lit(1)).as("cu"))
-          val vocab = tok.agg(countDistinct(col("w")).as("v"))
-          big.join(biCounts, Seq("w", "w2"))
-            .join(uniCounts, Seq("w"))
-            .crossJoin(broadcast(vocab))
-            .withColumn("lp_bp", floor(
-              log2((col("cb") + 1).cast("double") / (col("cu") + col("v")))
-                * 10000).cast("bigint"))
-            .groupBy(col("doc_id"))
-            .agg(count(lit(1)).as("n_bigrams"),
-              (-expr("cast(sum(lp_bp) as bigint) div count(1)"))
-                .as("ppl_bits_bp"))
-            .withColumn("keep", col("ppl_bits_bp") < 70000L)
-            .orderBy(col("doc_id"))
-        }
-        (() => oldQ88(),
-         () => graft.SparkEntry.queries("q88_lm_perplexity")(s, d))
-      }),
-
-    // round-12 change: q317/q319's Gopher gates moved from join-back
-    // gate frames (two corpus-grain shuffles of (doc_id, text)) to
-    // inline struct evaluation in the scan pass (zero gate shuffles).
-    // A = the draft's join form, B = the shipped inline form; the
-    // regex work is identical on both sides, so the pair isolates the
-    // shuffle cost. Replicated corpus so the variable term dominates.
-    Pair("curation_gate_form", "gate_joins", "inline_structs",
-      (s, d) => {
-        import graft.text.{Pii, TextFunctions}
-        val tmp = java.nio.file.Files
-          .createTempDirectory("ab-curation").toString + "/docs"
-        s.read.parquet(s"$d/documents.parquet")
-          .select(col("doc_id"), col("text"))
-          .select(explode(expr("sequence(0, 19)")).as("c"),
-            col("doc_id"), col("text"))
-          .select((col("doc_id") + col("c") * 10000000L).as("doc_id"),
-            col("text"))
-          .write.mode("overwrite").parquet(tmp)
-        def inj(df: DataFrame): DataFrame =
-          df.select(col("doc_id"), concat(col("text"),
-            lit(" Contact: user"), col("doc_id").cast("string"),
-            lit("@mail.example.com")).as("text"))
-        def downstream(gated: DataFrame): DataFrame =
-          gated.select(col("doc_id"), Pii.redact(col("text")).as("clean"))
-            .withColumn("_h", md5(col("clean")))
-            .withColumn("_rn", row_number().over(
-              Window.partitionBy(col("_h")).orderBy(col("doc_id"))))
-            .filter(col("_rn") === 1)
-            .groupBy().agg(count(lit(1)).as("n"),
-              sum(length(col("clean"))).as("b"))
-        val a = () => {
-          val docs = inj(s.read.parquet(tmp).repartition(32))
-          val rep = TextFunctions.gopherRepetition(docs, "text", "doc_id")
-            .select(col("doc_id"), col("keep").as("_k1"))
-          val qual = TextFunctions.gopherQuality(docs, "text", "doc_id")
-            .select(col("doc_id"), col("keep").as("_k2"))
-          downstream(docs
-            .join(rep, Seq("doc_id")).join(qual, Seq("doc_id"))
-            .filter(col("_k1") && col("_k2"))
-            .select(col("doc_id"), col("text")))
-        }
-        val b = () => {
-          val docs = inj(s.read.parquet(tmp).repartition(32))
-          downstream(docs
-            .filter(length(trim(col("text"))) > 0)
-            .filter(
-              TextFunctions.gopherRepetitionStruct(col("text"))("keep") &&
-              TextFunctions.gopherQualityStruct(col("text"))("keep")))
-        }
-        (a, b)
-      }),
-
-    // second pair: the two-separate-structs inline filter (each
-    // tokenizes the text itself) vs the shipped fused gate
-    // (gopherGateKeep — ONE tokenization shared by both rule sets).
-    Pair("curation_gate_fused", "two_structs", "fused_gate",
-      (s, d) => {
-        import graft.text.{Pii, TextFunctions}
-        val tmp = java.nio.file.Files
-          .createTempDirectory("ab-curation2").toString + "/docs"
-        s.read.parquet(s"$d/documents.parquet")
-          .select(col("doc_id"), col("text"))
-          .select(explode(expr("sequence(0, 19)")).as("c"),
-            col("doc_id"), col("text"))
-          .select((col("doc_id") + col("c") * 10000000L).as("doc_id"),
-            col("text"))
-          .write.mode("overwrite").parquet(tmp)
-        def inj(df: DataFrame): DataFrame =
-          df.select(col("doc_id"), concat(col("text"),
-            lit(" Contact: user"), col("doc_id").cast("string"),
-            lit("@mail.example.com")).as("text"))
-        def rest(gated: DataFrame): DataFrame = gated
-          .select(col("doc_id"), Pii.redact(col("text")).as("clean"))
-          .withColumn("_h", md5(col("clean")))
-          .withColumn("_rn", row_number().over(
-            Window.partitionBy(col("_h")).orderBy(col("doc_id"))))
-          .filter(col("_rn") === 1)
-          .groupBy().agg(count(lit(1)).as("n"),
-            sum(length(col("clean"))).as("b"))
-        val a = () => rest(inj(s.read.parquet(tmp).repartition(32))
-          .filter(length(trim(col("text"))) > 0)
-          .filter(
-            TextFunctions.gopherRepetitionStruct(col("text"))("keep") &&
-            TextFunctions.gopherQualityStruct(col("text"))("keep")))
-        val b = () => rest(inj(s.read.parquet(tmp).repartition(32))
-          .filter(length(trim(col("text"))) > 0)
-          .filter(TextFunctions.gopherGateKeep(col("text"))))
-        (a, b)
-      }),
 
     // round-6 feature: filtered top-k through the transparent ANN
     // planner. A = brute force (catalog cleared), B = stored-HNSW probe
@@ -270,197 +53,6 @@ object AbBench {
     annPair("ann_plain_routed_2000x", copies = 2000, kind = "routed",
       filtered = false),
 
-    // late round-6: int8-at-rest routed graphs. A = float blobs, B =
-    // quantized blobs of the SAME corpus/centroids/params — the pair
-    // isolates blob-decode cost, the routed probe's measured single-
-    // node constant (both sides warm through the resident cache, so
-    // the delta is parquet read + the smaller deserialize + hash).
-    Pair("ann_routed_sq8_2000x", "float_blobs", "sq8_blobs",
-      (s, d) => {
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft-ab-sq8").toString
-        val emb = s.read.parquet(s"$d/embeddings.parquet")
-          .select(col("vec_id"), col("embedding"))
-        val OFF = 100000000L
-        val perturb = udf { (v: Seq[Float], id: Long, c: Long) =>
-          val out = new Array[Float](v.length)
-          var i = 0
-          while (i < v.length) {
-            val h = graft.text.RollingHash.hashToken(
-              org.apache.spark.unsafe.types.UTF8String.fromString(s"$c:$id:$i"))
-            out(i) = v(i) + (((h % 1000L + 1000L) % 1000L) / 1000.0f - 0.5f) * 0.02f
-            i += 1
-          }
-          out
-        }
-        val corpus = emb
-          .crossJoin(s.range(2000).select(col("id").as("_copy")))
-          .select((col("vec_id") + col("_copy") * OFF).as("vec_id"),
-            perturb(col("embedding"), col("vec_id"), col("_copy")).as("embedding"))
-          .repartition(32)
-        corpus.write.mode("overwrite").parquet(s"$tmp/base")
-        val base = s.read.parquet(s"$tmp/base")
-        val cs = graft.vector.IvfIndex.centroids(base, "embedding", "vec_id", 16)
-        val p = graft.vector.HnswIndex.Params(m = 8, efConstruction = 32,
-          efSearch = 256)
-        graft.vector.RoutedHnsw.writeRoutedIndex(base, "embedding", "vec_id",
-          s"$tmp/f", cs, p)
-        graft.vector.RoutedHnsw.writeRoutedIndex(base, "embedding", "vec_id",
-          s"$tmp/q", cs, p, quantized = true)
-        val q = emb.filter(col("vec_id") === 0)
-          .select(col("embedding")).head().getSeq[Float](0).toArray
-        def probe(dir: String): DataFrame =
-          graft.vector.RoutedHnsw.search(s, dir, "vec_id", cs, q,
-            k = 20, nProbe = 4, p)
-        (() => probe(s"$tmp/f"), () => probe(s"$tmp/q"))
-      }),
-
-    // round-7 change: the seg_hash manifest fast path — warm probes
-    // scan only (centroid_id, seg_hash) of the routed cells and serve
-    // graphs from the executor-resident cache by stored content key;
-    // blob bytes are read only on a miss. A = the legacy at-rest format
-    // (no seg_hash column → the full bytes-scan probe), B = the shipped
-    // manifest format. Same corpus/centroids/params; both sides warm.
-    Pair("ann_routed_manifest_2000x", "bytes_scan", "manifest_resident",
-      (s, d) => {
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft-ab-manifest").toString
-        val emb = s.read.parquet(s"$d/embeddings.parquet")
-          .select(col("vec_id"), col("embedding"))
-        val OFF = 100000000L
-        val perturb = udf { (v: Seq[Float], id: Long, c: Long) =>
-          val out = new Array[Float](v.length)
-          var i = 0
-          while (i < v.length) {
-            val h = graft.text.RollingHash.hashToken(
-              org.apache.spark.unsafe.types.UTF8String.fromString(s"$c:$id:$i"))
-            out(i) = v(i) + (((h % 1000L + 1000L) % 1000L) / 1000.0f - 0.5f) * 0.02f
-            i += 1
-          }
-          out
-        }
-        val corpus = emb
-          .crossJoin(s.range(2000).select(col("id").as("_copy")))
-          .select((col("vec_id") + col("_copy") * OFF).as("vec_id"),
-            perturb(col("embedding"), col("vec_id"), col("_copy")).as("embedding"))
-          .repartition(32)
-        corpus.write.mode("overwrite").parquet(s"$tmp/base")
-        val base = s.read.parquet(s"$tmp/base")
-        val cs = graft.vector.IvfIndex.centroids(base, "embedding", "vec_id", 16)
-        val p = graft.vector.HnswIndex.Params(m = 8, efConstruction = 32,
-          efSearch = 256)
-        graft.vector.RoutedHnsw.writeRoutedIndex(base, "embedding", "vec_id",
-          s"$tmp/m", cs, p)
-        // legacy replica of the SAME index: strip the manifest column —
-        // searchMany's schema check then takes the bytes-scan path
-        s.read.parquet(s"$tmp/m")
-          .select(col("centroid_id"), col("n_vectors"), col("graph"))
-          .repartition(col("centroid_id"))
-          .write.mode("overwrite").partitionBy("centroid_id")
-          .parquet(s"$tmp/l")
-        val q = emb.filter(col("vec_id") === 0)
-          .select(col("embedding")).head().getSeq[Float](0).toArray
-        def probe(dir: String): DataFrame =
-          graft.vector.RoutedHnsw.search(s, dir, "vec_id", cs, q,
-            k = 20, nProbe = 4, p)
-        (() => probe(s"$tmp/l"), () => probe(s"$tmp/m"))
-      }),
-
-    // round-8 change: q205's RRF vector leg moved from a brute
-    // crossJoin+window (corpus-proportional cartesian) onto the stored
-    // graph via the lateral rewrite. Fixed 8-anchor panel so the pair
-    // isolates probe-vs-cartesian cost; 200× replicated corpus so the
-    // cartesian's O(anchors × n) work dominates job overhead. B builds
-    // the index in prepare() (un-timed — the serve-path contract).
-    Pair("rrf_vector_leg_200x", "brute_cartesian", "graph_probe",
-      (s, d) => {
-        import graft.plans.{AnnCatalog, AnnIndexRule}
-        AnnIndexRule.install(s)
-        s.conf.set("spark.graft.ann.minTableBytes", "0")
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft-ab-rrfleg").toString
-        val emb = s.read.parquet(s"$d/embeddings.parquet")
-          .select(col("vec_id"), col("embedding"))
-        val OFF = 100000000L
-        val perturb = udf { (v: Seq[Float], id: Long, c: Long) =>
-          val out = new Array[Float](v.length)
-          var i = 0
-          while (i < v.length) {
-            val h = graft.text.RollingHash.hashToken(
-              org.apache.spark.unsafe.types.UTF8String.fromString(s"$c:$id:$i"))
-            out(i) = v(i) + (((h % 1000L + 1000L) % 1000L) / 1000.0f - 0.5f) * 0.02f
-            i += 1
-          }
-          out
-        }
-        emb.crossJoin(s.range(200).select(col("id").as("_copy")))
-          .select((col("vec_id") + col("_copy") * OFF).as("vec_id"),
-            perturb(col("embedding"), col("vec_id"), col("_copy")).as("embedding"))
-          .repartition(32).write.mode("overwrite").parquet(s"$tmp/base")
-        val base = s.read.parquet(s"$tmp/base")
-        graft.vector.HnswIndex.writeGraphIndex(base, "embedding", "vec_id",
-          s"$tmp/graphs",
-          graft.vector.HnswIndex.Params(m = 8, efConstruction = 32))
-        val entry = AnnCatalog.HnswEntry(s"$tmp/graphs", "embedding",
-          "vec_id", graft.vector.HnswIndex.Params(efSearch = 256))
-        val anchors = emb.filter(col("vec_id") < 8)
-          .select(col("vec_id").as("qid"), col("embedding").as("qemb"))
-          .localCheckpoint()
-        def leg(): DataFrame = {
-          import org.apache.spark.sql.expressions.Window
-          anchors.crossJoin(base)
-            .select(col("qid"), col("vec_id"),
-              graft.vector.VectorFunctions.cosine_sim(col("embedding"),
-                col("qemb")).as("cs"))
-            .withColumn("vrank", row_number().over(
-              Window.partitionBy(col("qid"))
-                .orderBy(col("cs").desc, col("vec_id"))))
-            .filter(col("vrank") <= 20)
-        }
-        (() => { AnnCatalog.clear(); leg() },
-         () => { AnnCatalog.register(s"$tmp/base", entry); leg() })
-      }),
-
-    // round-8 change: selectByBudget's boundary band moved from a
-    // global Window.orderBy cumsum (ONE task) to GlobalOrder's
-    // range-shuffled running sum. Worst-case input: 2M rows sharing a
-    // single score, so the boundary band IS the whole frame — the
-    // exact skew the fix targets.
-    Pair("budget_boundary_skew_2m", "single_task_window", "global_order",
-      (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft-ab-budget").toString
-        s.range(2000000L)
-          .select(col("id"), lit(0.5d).as("score"),
-            (col("id") % 100L + 1L).as("tokens"))
-          .repartition(32).write.mode("overwrite").parquet(s"$tmp/docs")
-        val docs = s.read.parquet(s"$tmp/docs")
-        val budget = 50000000L // ~half the corpus tokens
-        def windowForm(): DataFrame = {
-          val w = Window.orderBy(col("score").desc, col("id"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-          docs.withColumn("_cum", sum(col("tokens")).over(w))
-            .filter(col("_cum") <= budget).drop("_cum")
-        }
-        def globalOrderForm(): DataFrame =
-          graft.operators.Curation.selectByBudget(docs, "score", "id",
-            "tokens", budget, nBands = 10)
-        (() => windowForm(), () => globalOrderForm())
-      }),
-
-    // round-12 change: q305's per-host slot assignment moved from
-    // Window.partitionBy(h) to GlobalOrder.withGroupedRowNumber. Two
-    // pairs, same 2M-row frontier, same downstream wave aggregate:
-    // uniform hosts (the window form's best case — its one hash
-    // shuffle vs the two-phase's two) and 90%-one-host skew (the case
-    // the window form serializes onto one task). The claim that ships:
-    // B degrades gracefully at 1× and wins under skew — at 100 TB the
-    // skew arm is the only one that exists (every real frontier has a
-    // CDN-sized host).
-    hostSlotPair("host_slot_uniform_2m", skewed = false),
-    hostSlotPair("host_slot_skew_2m", skewed = true),
-
     // round-7 bench recorded nominal regressions on these four queries
     // (q78 2.40×, q92 2.12×, q59 1.93×, q56 1.54×) with no commit
     // touching them; an interleaved SELF-pair gives the same-session
@@ -482,85 +74,6 @@ object AbBench {
     driftPair("q21_dedup_exact"),
     driftPair("q225_domain_reweight"),
     driftPair("q218_token_shards"),
-
-    // round-6 change: crossDocSpans' wide shuffle keys on xxhash64 of
-    // the window (8 bytes/occurrence) instead of the 40-char substring.
-    // A = substring key (the oracle's engine-agnostic plan), B = hashed
-    // key (the shipped default). 10× replicated corpus so the shuffle,
-    // not job overhead, is what's measured.
-    Pair("crossdoc_hashkey_10x", "substring_key", "hashed_key",
-      (s, d) => {
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft-ab-xdoc").toString
-        val OFF = 100000000L
-        s.read.parquet(s"$d/documents.parquet")
-          .select(col("doc_id"), col("text"))
-          .crossJoin(s.range(10).select(col("id").as("_copy")))
-          .select((col("doc_id") + col("_copy") * OFF).as("doc_id"),
-            col("text"))
-          .repartition(32).write.mode("overwrite").parquet(s"$tmp/docs")
-        val docs = s.read.parquet(s"$tmp/docs")
-        def run(hashed: Boolean): DataFrame =
-          graft.dedup.Dedup.crossDocSpans(docs, "text", "doc_id",
-            window = 40, keepFirst = true, hashKey = hashed)
-        (() => run(hashed = false), () => run(hashed = true))
-      }),
-
-    // round-10 change: q293/q295 shuffle 8-byte xxhash64 keys for the
-    // CDC chunk dedup instead of the chunk strings. A = join/group on
-    // the raw chunk text, B = the shipped hash-keyed plan (chunk text
-    // never crosses an exchange — PlanShapeSpec asserts it). This pair
-    // is WHY the key is xxhash64 and not md5: an earlier md5 variant
-    // measured 1.24x SLOWER than text keying at sf0.1 — the crypto
-    // hash cost more than a 32-hex key saved over ~64-char chunks.
-    Pair("cdc_chunk_join_key", "chunk_text_key", "xxhash64_key",
-      (s, d) => {
-        import graft.text.Chunker
-        def base = s.read.parquet(s"$d/documents.parquet")
-          .repartition(32)
-          .select(col("doc_id"),
-            explode(Chunker.chunksUdf()(col("text"))).as("chunk"))
-        def byText: DataFrame = {
-          val ch = base
-          val g = ch.groupBy(col("chunk")).agg(count(lit(1)).as("c"))
-          ch.join(g, "chunk").groupBy(col("doc_id"))
-            .agg(sum(when(col("c") > 1, 1L).otherwise(0L)).as("n_dup"))
-        }
-        def byHash: DataFrame = {
-          val ch = base.select(col("doc_id"), xxhash64(col("chunk")).as("h"))
-          val g = ch.groupBy(col("h")).agg(count(lit(1)).as("c"))
-          ch.join(g, "h").groupBy(col("doc_id"))
-            .agg(sum(when(col("c") > 1, 1L).otherwise(0L)).as("n_dup"))
-        }
-        (() => byText, () => byHash)
-      }),
-
-    // round-10 feature: q292 matches the whole blocklist in ONE
-    // automaton walk. A = the naive plan — one codegen'd position-scan
-    // HOF per pattern, summed (13 scans of every byte); B = the
-    // Aho-Corasick UDF (one walk). The crossover moves further toward
-    // B as the pattern list grows (the cdc ScaleProbe shows B's cost
-    // is pattern-count-invariant).
-    Pair("blocklist_multi_match", "per_pattern_scans", "aho_corasick",
-      (s, d) => {
-        import graft.text.AhoCorasick
-        val pats = Seq("scan", "can", "an", "table", "tab", "ab",
-          "le", "order", "rde", "value", "al", "fast sort", "zebra")
-        def docs = s.read.parquet(s"$d/documents.parquet").repartition(32)
-        def naive: DataFrame = {
-          val counts = pats.map { p =>
-            val lp = p.length
-            expr(s"size(filter(sequence(1, greatest(length(text) - " +
-              s"$lp + 1, 1)), i -> substring(text, i, $lp) = '$p'))")
-          }.reduce(_ + _)
-          docs.select(counts.cast("long").as("n"))
-            .agg(sum(col("n")).as("total"))
-        }
-        def aho: DataFrame =
-          docs.select(AhoCorasick.countsUdf(pats)(col("text")).as("m"))
-            .agg(sum(col("m._1")).as("total"))
-        (() => naive, () => aho)
-      }),
 
     // round-11: the q16 serving read (the reference's one production
     // read path) against two at-rest layouts of the SAME 400x events
@@ -599,158 +112,6 @@ object AbBench {
           date = day, today = day)
         (() => flat, () => pruned)
       }),
-
-    // round-13 measurement: does spreading q284's pinned day batch
-    // (8-way repartition before the flag computations) beat the
-    // single-partition file-source batch? Answer at sf0.1: NO —
-    // spread_8 measured ratio 1.117 (task launches cost more than the
-    // single-task stages' compute), confirming r12's 32-way result, so
-    // the shipped default stays unspread with the conf knob available
-    // for clusters whose day batches are big. Each thunk runs the
-    // WHOLE declared query (its own temp dirs per run).
-    // round-13: the q317/q319 scrub stage — 4 regex expressions
-    // (3 regexp_replace + 3 regexp_extract_all inside the counts) vs
-    // the fused Pii.scrubUdf (4 matcher passes, no match arrays).
-    // Value-identical struct; the agg forces both columns.
-    Pair("pii_fused_scrub", "four_exprs", "fused_udf",
-      (s, d) => {
-        import graft.text.{Pii, TextFunctions}
-        val docs = s.read.parquet(s"$d/documents.parquet")
-          .repartition(s.sparkContext.defaultParallelism)
-          .select(col("doc_id"), col("text"))
-        val contact = concat(col("text"),
-          lit(" Contact: user"), col("doc_id").cast("string"),
-          lit("@mail.example.com or 504-555-"),
-          lpad((col("doc_id") % 10000).cast("string"), 4, "0"),
-          lit(" at 192.168."), (col("doc_id") % 256).cast("string"),
-          lit(".7"))
-        def gated = docs.select(col("doc_id"), contact.as("text"))
-          .filter(length(trim(col("text"))) > 0)
-          .filter(TextFunctions.gopherGateKeepFastUdf(col("text")))
-        def oldForm = gated.select(col("doc_id"),
-          Pii.redact(col("text")).as("clean"),
-          (Pii.emailCount(col("text")) + Pii.phoneCount(col("text")) +
-            Pii.ipCount(col("text"))).cast("bigint").as("n_pii"))
-        def newForm = gated
-          .select(col("doc_id"), Pii.scrubUdf(col("text")).as("_s"))
-          .select(col("doc_id"), col("_s._1").as("clean"),
-            col("_s._2").as("n_pii"))
-        def force(f: org.apache.spark.sql.DataFrame) =
-          f.agg(sum(length(col("clean"))), sum(col("n_pii")))
-        (() => force(oldForm), () => force(newForm))
-      }),
-
-    // SPARK_GRAFT_AB_SPREAD picks the B-side spread width (default 8) so
-    // the sensitivity of the knob can be measured without code edits.
-    Pair("q284_batch_spread", "no_spread", "spread_n",
-      (s, d) => {
-        val n = sys.env.getOrElse("SPARK_GRAFT_AB_SPREAD", "8")
-        val fn = graft.SparkEntry.queries("q284_streaming_funnel")
-        (() => { s.conf.unset("spark.graft.funnel.batchSpread"); fn(s, d) },
-         () => { s.conf.set("spark.graft.funnel.batchSpread", n); fn(s, d) })
-      }),
-
-    // round-13 change: the funnel's nd leg moved from
-    // crossDocSpansIncremental (position explode + island-merge
-    // windows + index-side distinct, then .select(doc_id).distinct)
-    // to dupDocIdsIncremental over ONE persisted windowDocPairs frame
-    // shared with the stats/append side; the contam leg to a
-    // pre-computed gramSet + semi-join; the DSIR ratio to the fused
-    // one-pass dsirRatioSplit. A replays the r12 lineage end-to-end
-    // (same streaming machinery, own temp dirs per run); B is the
-    // shipped query. A's stats side already benefits from the
-    // pairs-based batchWindowStats, so the ratio UNDERSTATES the win.
-    Pair("q284_funnel_docgrain", "span_probe_r12", "doc_grain_pairs",
-      (s, d) => {
-        import graft.dedup.Dedup
-        import graft.operators.ImportanceSelect
-        import graft.text.TextFunctions
-        def oldQ284(): DataFrame = {
-          val docs = graft.Tables.table(s, d, "documents")
-            .select(col("doc_id"), col("text"), col("lang"))
-          val hist = docs.filter(pmod(col("doc_id"), lit(3)) =!= 0).cache()
-          val evalSet = hist.filter(pmod(col("doc_id"), lit(97)) === 0)
-            .select(col("doc_id"), col("text")).cache()
-          val ratio = ImportanceSelect.dsirRatio(hist,
-            hist.filter(col("lang") === "en"), "text").cache()
-          ratio.count(); evalSet.count()
-          val tmp = java.nio.file.Files
-            .createTempDirectory("graft-ab-q284").toString
-          val idx = s"$tmp/fp_idx"
-          Dedup.writeWindowFingerprints(hist, "text", "doc_id", idx,
-            window = 40, nBuckets = 8)
-          val streamed = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
-            .select(col("doc_id"), col("text"))
-          val maxId = streamed.agg(max(col("doc_id"))).head().getLong(0)
-          val srcDir = s"$tmp/arrivals"; val outDir = s"$tmp/flags"
-          val ckpt = s"$tmp/ckpt"
-          val schema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("doc_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("text",
-              org.apache.spark.sql.types.StringType)))
-          def funnel(batch: DataFrame, stats: DataFrame): DataFrame = {
-            val gates = batch.filter(length(trim(col("text"))) > 0)
-              .select(col("doc_id"),
-                TextFunctions.gopherGatesUdf(col("text")).as("_g"))
-              .select(col("doc_id"), col("_g._1").as("_k1"),
-                col("_g._2").as("_k2"))
-            val nd = Dedup.crossDocSpansIncremental(s, idx, batch,
-                "text", "doc_id", window = 40, stats = Some(stats))
-              .select(col("doc_id")).distinct()
-              .withColumn("_nd", lit(true))
-            val contam = Dedup.decontaminate(batch, evalSet, "text",
-                "doc_id", n = 3)
-              .select(col("doc_id"), lit(true).as("_c"))
-            val dsir = ImportanceSelect.scoreWith(ratio, batch, "text",
-                "doc_id")
-              .select(col("doc_id"), col("selected").as("_k5"))
-            batch.select(col("doc_id"))
-              .join(gates, Seq("doc_id"), "left")
-              .join(nd, Seq("doc_id"), "left")
-              .join(contam, Seq("doc_id"), "left")
-              .join(dsir, Seq("doc_id"), "left")
-              .select(col("doc_id"),
-                coalesce(col("_k1"), lit(false)).as("k_rep"),
-                coalesce(col("_k2"), lit(false)).as("k_qual"),
-                col("_nd").isNull.as("k_nodup"),
-                col("_c").isNull.as("k_clean"),
-                coalesce(col("_k5"), lit(false)).as("k_dsir"))
-              .withColumn("selected",
-                col("k_rep") && col("k_qual") && col("k_nodup") &&
-                  col("k_clean") && col("k_dsir"))
-          }
-          val (b1, b2) = (maxId / 3, 2L * maxId / 3)
-          val days = Seq(
-            streamed.filter(col("doc_id") <= b1),
-            streamed.filter(col("doc_id") > b1 && col("doc_id") <= b2),
-            streamed.filter(col("doc_id") > b2))
-          days.foreach { day =>
-            day.coalesce(1).write.mode("append").parquet(srcDir)
-            val q = graft.streaming.StreamingIngest
-              .readStream(s, srcDir, schema)
-              .writeStream
-              .option("checkpointLocation", ckpt)
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .foreachBatch { (batch: DataFrame, _: Long) =>
-                val dayB = batch.persist()
-                val stats = Dedup.batchWindowStats(dayB, "text", "doc_id",
-                  window = 40).persist()
-                funnel(dayB, stats).write.mode("append").parquet(outDir)
-                Dedup.appendWindowFingerprintStats(stats, idx,
-                  window = 40, nBuckets = 8)
-                dayB.unpersist(); stats.unpersist()
-                ()
-              }
-              .start()
-            q.awaitTermination()
-          }
-          hist.unpersist(); evalSet.unpersist(); ratio.unpersist()
-          s.read.parquet(outDir).orderBy(col("doc_id"))
-        }
-        val fn = graft.SparkEntry.queries("q284_streaming_funnel")
-        (() => oldQ284(), () => fn(s, d))
-      }),
   )
 
   /** Interleaved self-pair of a shipped query: both sides run the same
@@ -761,40 +122,6 @@ object AbBench {
       (s, d) => {
         def run(): DataFrame = graft.SparkEntry.queries(q)(s, d)
         (() => run(), () => run())
-      })
-
-  /** A = per-host window rank, B = GlobalOrder two-phase rank, same
-    * 2M-row frontier and the q305 wave aggregate downstream. `skewed`
-    * puts 90% of rows on one host (the window form's one-task arm). */
-  private def hostSlotPair(name: String, skewed: Boolean): Pair =
-    Pair(name, "single_task_window", "grouped_two_phase",
-      (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft-ab-hostslot").toString
-        val host =
-          if (skewed) when(col("id") % 10 =!= 0L, lit(0L))
-            .otherwise(col("id") / 10L % 5000L + 1L)
-          else col("id") / 10L
-        s.range(2000000L)
-          .select(col("id"), host.as("h"),
-            (col("id") % 4L + 1L) * lit(500L))
-          .toDF("id", "h", "delay_ms")
-          .repartition(32).write.mode("overwrite").parquet(s"$tmp/frontier")
-        val frontier = s.read.parquet(s"$tmp/frontier")
-        def waves(slotted: DataFrame): DataFrame =
-          slotted.withColumn("start_ms", (col("slot") - 1) * col("delay_ms"))
-            .select(expr("start_ms div 1000").as("wave"), col("h"))
-            .groupBy(col("wave"))
-            .agg(count(lit(1)).as("n_fetches"),
-              countDistinct(col("h")).as("n_hosts"))
-        def windowForm(): DataFrame =
-          waves(frontier.withColumn("slot", row_number().over(
-            Window.partitionBy(col("h")).orderBy(col("id"))).cast("bigint")))
-        def groupedForm(): DataFrame =
-          waves(graft.operators.GlobalOrder.withGroupedRowNumber(
-            frontier, Seq("h"), Seq(col("id")), "slot"))
-        (() => windowForm(), () => groupedForm())
       })
 
   private def annPair(name: String, copies: Int, kind: String = "hnsw",
@@ -881,12 +208,7 @@ object AbBench {
     } else pairs
     val reps = sys.env.getOrElse("SPARK_GRAFT_AB_REPS", "5").toInt
 
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(32)
     spark.range(2000000L).selectExpr("sum(id)").collect()
 
     def median(xs: Seq[Double]): Double = {

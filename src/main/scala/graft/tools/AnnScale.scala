@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.vector.{HnswIndex, IvfIndex, VectorFunctions}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** ANN recall/latency scale-up experiment (PLANS.md "ANN at 10×"):
@@ -21,11 +21,7 @@ object AnnScale {
     val copies = args.lift(1).map(_.toInt).getOrElse(10)
     val kNN = args.lift(2).map(_.toInt).getOrElse(20)
     val nQueries = args.lift(3).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(32)
 
     val base = spark.read.parquet(s"$src/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))

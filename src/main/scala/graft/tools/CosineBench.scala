@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.vector.VectorFunctions.cosine_sim
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Substantiates the codegen-expression-vs-UDF claim for the cosine path:
@@ -9,10 +8,7 @@ import org.apache.spark.sql.functions._
 object CosineBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(2000000L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local(32)
     val dim = 64
     val q = Array.tabulate(dim)(i => math.sin(i).toFloat)
     val df = spark.range(n).select(col("id"),

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Physical-plan audit over every declared query: counts the operators
   * that determine scale behavior (shuffle exchanges, join strategies,
   * codegen spans, parquet pushdown) and prints one markdown row per
@@ -15,12 +13,7 @@ object ExplainAudit {
     // arg "full" also dumps each filtered query's final physical plan
     val only = args.lift(1).map(_.split(",").toSet)
     val dump = args.lift(2).contains("full")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local(4)
     println("| query | exchanges | bcast joins | SMJ | codegen spans | scans | pushed filters |")
     println("|---|---|---|---|---|---|---|")
     graft.SparkEntry.queries.toSeq.sortBy(_._1)

@@ -1,19 +1,26 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
-/** Per-query stage profiler: runs selected SparkEntry queries under a
-  * SparkListener and prints, per query, total wall time plus every stage
-  * ≥ 1% of it (duration, task count, shuffle read/write, input bytes,
-  * and the stage's callsite) — the measure-first instrument of
-  * spark_optimization_guide §1 for a UI-less environment.
+/** Per-query timer and stage profiler: runs selected SparkEntry queries
+  * under a SparkListener and prints, per query, total wall time plus
+  * every stage ≥ 1% of it (duration, task count, shuffle read/write,
+  * input bytes, peak task memory, spill, and the stage's callsite) — the
+  * measure-first instrument of spark_optimization_guide §1 for a UI-less
+  * environment.
+  *
+  * Each query runs once untimed (codegen + JIT) and once timed, both
+  * through the `noop` sink, so the profile times the plan the query
+  * declares. `count()` would re-plan with an Aggregate on top, which
+  * lets Catalyst prune payload columns and drop left joins against
+  * unique-key sides — the very work a profile is after (q182's excision
+  * fold and md5 vanish under `count()`). The session is
+  * [[graft.GraftSession.local]], the config Bench and Verify run under.
   *
   * Usage: runMain graft.tools.Profile <sfDir> <query>[,<query>...]
-  * Env: SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_PROFILE_REPS (default 1,
-  * timed run AFTER one untimed warmup at the same sf).
+  * Env: SPARK_GRAFT_CPUS (default 32).
   */
 object Profile {
 
@@ -27,15 +34,8 @@ object Profile {
     val names: Seq[String] =
       if (args.length > 1) args(1).split(",").toSeq
       else Seq("q01_pricing_summary")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.GraftSession.local(cpus)
 
     val stages = mutable.ArrayBuffer[StageRow]()
     // stage -> owning job's description (guide §1.5 labels), so per-phase
@@ -87,24 +87,28 @@ object Profile {
     names.foreach { n =>
       val fn = graft.SparkEntry.queries.getOrElse(n,
         sys.error(s"unknown query: $n"))
+      def runDeclared(): Unit =
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       // warmup (codegen + JIT) at the same sf, not listened
-      try fn(spark, sfDir).count() catch { case e: Throwable =>
+      try runDeclared() catch { case e: Throwable =>
         System.err.println(s"[profile] $n warmup failed: ${e.getMessage}")
       }
-      spark.catalog.clearCache()
+      graft.GraftSession.dropLeftoverState(spark)
       stages.clear()
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
-      val rows = try fn(spark, sfDir).count() catch { case _: Throwable => -1L }
+      val status = try { runDeclared(); "ok" } catch {
+        case e: Throwable => s"failed(${e.getClass.getSimpleName})"
+      }
       val wall = (System.nanoTime() - t0) / 1e9
       Thread.sleep(300) // let the listener bus drain
       spark.sparkContext.removeSparkListener(listener)
-      spark.catalog.clearCache()
+      graft.GraftSession.dropLeftoverState(spark)
       val snap = stages.synchronized(stages.toVector)
       val descSnap = stages.synchronized(stageDesc.toMap)
       stages.synchronized { stageDesc.clear(); stagePeakMem.clear(); stageSpill.clear() }
       val stageSum = snap.map(_.durMs).sum / 1e3
-      println(f"%n===== $n  wall=${wall}%.2fs  rows=$rows  " +
+      println(f"%n===== $n  wall=${wall}%.2fs  $status  " +
         f"stages=${snap.size} stage-sum=${stageSum}%.2fs =====")
       // per-job-description rollup (labels set via setJobDescription)
       val byDesc = snap.groupBy(r => descSnap.getOrElse(r.id, ""))

@@ -56,11 +56,7 @@ object ScaleProbe {
           "as float))").as("embedding"))
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(32)
     spark.range(2000000L).selectExpr("sum(id)").collect()
     val mode = args.lift(1).getOrElse("dedup")
 

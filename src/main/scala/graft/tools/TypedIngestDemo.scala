@@ -1,15 +1,12 @@
 package graft.tools
 
 import graft.ingest.StagingReader
-import org.apache.spark.sql.SparkSession
 
 /** Drives the typed Dataset[EventDto] ingest boundary end-to-end:
   * runMain graft.tools.TypedIngestDemo <stagingDir> */
 object TypedIngestDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(2)
     val ds = StagingReader.readStagedTyped(spark, args.head)
     val dtos = ds.collect()
     dtos.foreach { d =>

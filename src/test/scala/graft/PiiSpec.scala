@@ -38,24 +38,4 @@ class PiiSpec extends SparkSpec {
       .select(Pii.redact(col("text"))).head().getString(0)
     assert(red == "x <EMAIL> y")
   }
-
-  test("scrubUdf equals redact + summed counts on every row shape") {
-    val tricky = rows.unionByName(Seq(
-      (5L, "1.2.3.456-789-0123 phone-beats-ip overlap"),
-      (6L, "123-456-7890@x.com email swallows the phone"),
-      (7L, ""),
-    ).toDF("id", "text"))
-    val got = tricky.select(col("id"),
-        Pii.scrubUdf(col("text")).as("s"),
-        Pii.redact(col("text")).as("clean"),
-        (Pii.emailCount(col("text")) + Pii.phoneCount(col("text")) +
-          Pii.ipCount(col("text"))).cast("bigint").as("n"))
-      .collect()
-    got.foreach { r =>
-      assert(r.getStruct(1).getString(0) == r.getString(2),
-        s"clean mismatch on id=${r.getLong(0)}")
-      assert(r.getStruct(1).getLong(1) == r.getLong(3),
-        s"count mismatch on id=${r.getLong(0)}")
-    }
-  }
 }
