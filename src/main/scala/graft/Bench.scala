@@ -1,9 +1,12 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Benchmark main (driver contract): times every declared query on
   * SPARK_GRAFT_SF_DIR and prints one JSON line. A short warmup runs first
   * (JIT + codegen caches + parquet footers) so per-query numbers measure
-  * the queries, not JVM startup. */
+  * the queries, not JVM startup. A query that throws gets no time: it is
+  * listed under `failed` with its exception class instead. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -50,22 +53,18 @@ object Bench {
     val gcBetween = sys.env.get("SPARK_GRAFT_BENCH_GC").contains("1")
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       if (gcBetween) { System.gc(); Thread.sleep(200) }
-      val times = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // drop caches a query may have left behind (e.g. the pipeline's
-        // merge frames) so later queries aren't timed under memory pressure
-        GraftSession.dropLeftoverState(spark)
-        dt
-      }
-      name -> times.min
+      val r = timeQuery(spark, sfDir, reps, fn)
+      r.left.foreach(e => System.err.println(s"[bench] $name failed: $e"))
+      name -> r
     }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
+    val timed = results.collect { case (k, Right(t)) => k -> t }
+    val qs = timed.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    val failed = results.collect { case (k, Left(e)) =>
+      "\"" + k + "\":\"" + e.getClass.getName + "\"" }.mkString("{", ",", "}")
+    val total = if (timed.nonEmpty) timed.map(_._2).sum else 0.0
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"sf":"$sfDir"}"""
     println(line)
     // the driver's captured stdout tail can truncate before the total —
     // persist the full JSON so rounds compare without re-running
@@ -79,4 +78,17 @@ object Bench {
     }
     spark.stop()
   }
+
+  /** Best-of-`reps` wall time in seconds of one query's `count()`, or the
+    * first exception it throws: a failed query gets no time. */
+  def timeQuery(spark: SparkSession, sfDir: String, reps: Int,
+                fn: (SparkSession, String) => DataFrame): Either[Throwable, Double] =
+    try Right((1 to reps).map { _ =>
+      val t0 = System.nanoTime()
+      try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+      // drop caches a query may have left behind (e.g. the pipeline's
+      // merge frames) so later queries aren't timed under memory pressure
+      finally GraftSession.dropLeftoverState(spark)
+    }.min)
+    catch { case e: Throwable => Left(e) }
 }

@@ -203,7 +203,7 @@ object GlobalOrder {
     * totals. Long arithmetic is associative, so the partition-split
     * accumulation is bit-identical to the sequential window — the
     * reason this takes an integral column and not a double (callers
-    * quantize money to cents first; see SparkEntry.cents). Null values
+    * quantize money to cents first; see Parsers.cents). Null values
     * count as 0 (the window form instead carries the previous total). */
   def withRunningSumLong(df: DataFrame, order: Seq[Column], value: Column,
                          out: String, rnOut: Option[String] = None,

@@ -10,6 +10,13 @@ import org.apache.spark.sql.functions._
   */
 object Parsers {
 
+  /** Exact integer cents of a ~2dp money double: `floor(x*100 + 0.5)`
+    * recovers the exact cents integer in both engines, so sums and
+    * averages over cents are exact bigint math. SQL twin:
+    * `CAST(floor(x*100 + 0.5) AS BIGINT)`. */
+  def cents(c: Column): Column =
+    floor(c * lit(100d) + lit(0.5d)).cast("bigint")
+
   /** P5 — performance-time parse (extractor/service.py:447-471): extract
     * `h:mm am|pm` from a free-text time string (default 12:00am on no
     * match), combine with the event date, produce a timestamp. The

@@ -1,6 +1,7 @@
 package graft.serve
 
 import graft.parse.Parsers
+import graft.parse.Parsers.cents
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -15,13 +16,6 @@ import org.apache.spark.sql.functions._
   * order by time (O1) → TTL (C5).
   */
 object Serving {
-
-  /** Exact integer cents of a ~2dp money double — the same engine-
-    * portable quantization SparkEntry's oracles replay as
-    * `CAST(floor(x*100 + 0.5) AS BIGINT)`. Money stays bigint cents in
-    * every output column (universal output-typing contract). */
-  private def cents(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    floor(c * lit(100d) + lit(0.5d)).cast("bigint")
 
   /** Per-event serving rows for one day: each event with its user's
     * same-day activity eagerly attached (the "no N+1" join shape). */

@@ -196,7 +196,7 @@ object TextFunctions {
 
   /** 4-decimal quantization of an EXACT integer ratio, engine-agnostic:
     * scale in integer arithmetic, ONE double division, floor — the
-    * `ratioQ` idiom (see SparkEntry) that sidesteps `round()`'s
+    * `ratioQ` idiom (see graft.queries.QueryHelpers) that sidesteps `round()`'s
     * HALF_UP-vs-binary tie divergence between Spark and DuckDB. */
   private def rq4(num: Column, den: Column): Column =
     floor(num * lit(10000L) / den + lit(0.5d)) / lit(10000.0d)

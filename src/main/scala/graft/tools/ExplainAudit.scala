@@ -10,7 +10,7 @@ object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     // optional second arg: comma-separated query filter; optional third
-    // arg "full" also dumps each filtered query's final physical plan
+    // arg "full" also prints each filtered query's formatted plan
     val only = args.lift(1).map(_.split(",").toSet)
     val dump = args.lift(2).contains("full")
     val spark = graft.GraftSession.local(4)
@@ -36,7 +36,7 @@ object ExplainAudit {
         val scans = n("FileScan parquet|Scan parquet")
         val pushed = n("PushedFilters: \\[[^\\]]")
         println(s"| $name | $exchanges | $bhj | $smj | $wsc | $scans | $pushed |")
-        if (dump) println(plan)
+        if (dump) df.explain("formatted")
         spark.catalog.clearCache()
       } catch {
         case e: Throwable => println(s"| $name | ERR ${e.getClass.getSimpleName} | | | | | |")
