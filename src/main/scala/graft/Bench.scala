@@ -3,10 +3,11 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main (driver contract): times every declared query on
-  * SPARK_GRAFT_SF_DIR and prints one JSON line. A short warmup runs first
-  * (JIT + codegen caches + parquet footers) so per-query numbers measure
-  * the queries, not JVM startup. A query that throws gets no time: it is
-  * listed under `failed` with its exception class instead. */
+  * SPARK_GRAFT_SF_DIR, its full plan run through the `noop` sink, and
+  * prints one JSON line. A short warmup runs first (JIT + codegen caches
+  * + parquet footers) so per-query numbers measure the queries, not JVM
+  * startup. A query that throws gets no time: it is listed under
+  * `failed` with its exception class instead. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -29,7 +30,7 @@ object Bench {
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
       selected.foreach { case (_, fn) =>
-        try { fn(spark, warmDir).count() } catch { case _: Throwable => () }
+        try runDeclared(fn(spark, warmDir)) catch { case _: Throwable => () }
         GraftSession.dropLeftoverState(spark)
       }
     }
@@ -79,13 +80,19 @@ object Bench {
     spark.stop()
   }
 
-  /** Best-of-`reps` wall time in seconds of one query's `count()`, or the
-    * first exception it throws: a failed query gets no time. */
+  /** Run the plan the query declares, every projected column included,
+    * and discard the rows. `count()` would let the optimizer prune the
+    * SELECT list, so a failing or costly projection would go untimed. */
+  private def runDeclared(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** Best-of-`reps` wall time in seconds of one query's declared plan, or
+    * the first exception it throws: a failed query gets no time. */
   def timeQuery(spark: SparkSession, sfDir: String, reps: Int,
                 fn: (SparkSession, String) => DataFrame): Either[Throwable, Double] =
     try Right((1 to reps).map { _ =>
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+      try { runDeclared(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
       // drop caches a query may have left behind (e.g. the pipeline's
       // merge frames) so later queries aren't timed under memory pressure
       finally GraftSession.dropLeftoverState(spark)

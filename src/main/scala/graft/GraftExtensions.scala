@@ -5,12 +5,10 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** The engine's SQL-surface function builders, registered either
-  *  - at session build (`.withExtensions(new GraftExtensions)` /
-  *    `spark.sql.extensions=graft.GraftExtensions` — the way a library
-  *    jar ships Catalyst functions), or
-  *  - at runtime into an existing session (`GraftFunctions.register`).
-  */
+/** The engine's SQL-surface function builders. [[GraftExtensions]]
+  * injects them at session build (`GraftSession.local`, or
+  * `spark.sql.extensions=graft.GraftExtensions` — the way a library jar
+  * ships Catalyst functions). */
 object GraftFunctions {
 
   val cosineBuilder: Seq[Expression] => Expression =
@@ -420,22 +418,13 @@ object GraftFunctions {
     ("shard_by_tokens", shardByTokensTvf,
       graft.operators.Curation.getClass),
   )
-
-  /** Register into an already-built session. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    all.foreach { case (name, builder, _) =>
-      reg.createOrReplaceTempFunction(name, builder, "scala_udf")
-    }
-    val treg = spark.sessionState.tableFunctionRegistry
-    allTable.foreach { case (name, builder, _) =>
-      treg.createOrReplaceTempFunction(name, builder, "scala_udf")
-    }
-  }
 }
 
-/** Session-build-time injection of the same functions, plus the
-  * range-join optimizer rewrite ([[graft.plans.RangeJoinRule]]). */
+/** The engine, installed once at session build: the functions above,
+  * the range-join and transparent-ANN optimizer rewrites
+  * ([[graft.plans.RangeJoinRule]], [[graft.plans.AnnIndexRule]]), the
+  * as-of-join and ANN-fallback planner strategies, and the `GRAFT` SQL
+  * parser. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     GraftFunctions.all.foreach { case (name, builder, cls) =>
@@ -451,7 +440,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         builder))
     }
     e.injectOptimizerRule(_ => new graft.plans.RangeJoinRule)
-    e.injectOptimizerRule(_ => new graft.plans.AnnIndexRule)
+    // once, after operator optimisation: inside that fixed-point batch
+    // other rules rebuild the brute branch of a filtered/payload probe
+    // and drop its skip tag, so the rule re-fired every iteration and
+    // nested ~100 fallbacks (q174: 199 exchanges instead of 1)
+    e.injectPreCBORule(_ => new graft.plans.AnnIndexRule)
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     e.injectPlannerStrategy(_ => graft.plans.AnnFallbackStrategy)
     e.injectParser((_, delegate) => new graft.plans.GraftSqlParser(delegate))

@@ -2,13 +2,18 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one session config every main in this project runs under, so a
-  * profile, a bench and a correctness dump time and check the same
-  * engine. Tests (`TestSpark`) keep their own builder. */
+/** The one session config every main and the test harness run under, so
+  * a profile, a bench, a correctness dump and a test time and check the
+  * same engine. */
 object GraftSession {
 
   /** `local[cpus]` with one shuffle partition per core, UTC session time,
-    * AQE on, no UI, and log level WARN.
+    * AQE on, no UI, log level WARN, and the engine installed:
+    * [[GraftExtensions]] injects every function, planner rule, strategy
+    * and the `GRAFT` parser at session build, so no query switches a rule
+    * on and whether a rule fires never depends on what ran before.
+    * `extra` adds caller-specific settings (the tests' app name and
+    * warehouse dir) on top of the same config.
     *
     * `spark.cleaner.periodicGC.interval`: the ContextCleaner only
     * reclaims dead broadcasts / shuffle state / RDD blocks when a driver
@@ -17,14 +22,17 @@ object GraftSession {
     * the big-hash queries then run under avoidable memory pressure
     * (round-12 driver run: q236 24 s vs 1.4 s isolated). Spark's default
     * is 30 min, far longer than a whole bench run. */
-  def local(cpus: Int): SparkSession = {
-    val spark = SparkSession.builder()
+  def local(cpus: Int,
+            extra: SparkSession.Builder => SparkSession.Builder = identity)
+      : SparkSession = {
+    val spark = extra(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.cleaner.periodicGC.interval", "60s")
+      .withExtensions(new GraftExtensions))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

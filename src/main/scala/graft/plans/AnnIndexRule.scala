@@ -259,9 +259,10 @@ object AnnCatalog {
   * design point are far above the threshold, so the index engages
   * exactly where it pays.
   *
-  * Idempotent under fixed-point execution: probes contain a Filter or
-  * Join over their relations so they never re-match, and the embedded
-  * brute branch carries a skip tag.
+  * Runs once per query, after operator optimisation
+  * ([[graft.GraftExtensions]] injects it as a pre-CBO rule). Within one
+  * pass, probes contain a Filter or Join over their relations so they
+  * never re-match, and the embedded brute branch carries a skip tag.
   */
 class AnnIndexRule extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -731,17 +732,4 @@ object AnnIndexRule {
     * — it IS the shape this rule matches, by construction. */
   private[plans] val noRewriteTag =
     new org.apache.spark.sql.catalyst.trees.TreeNodeTag[Unit]("graft.ann.noRewrite")
-
-  /** Install transparent ANN planning into an EXISTING session
-    * (idempotent): the optimizer rule plus the fallback strategy. A
-    * session built `.withExtensions(new GraftExtensions)` has both
-    * already. */
-  def install(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[AnnIndexRule]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ new AnnIndexRule
-    if (!spark.experimental.extraStrategies.contains(AnnFallbackStrategy))
-      spark.experimental.extraStrategies =
-        AnnFallbackStrategy +: spark.experimental.extraStrategies
-  }
 }

@@ -206,9 +206,8 @@ object AsOfJoinPhysical {
     * comparison strict). `tolerance` drops a match farther than the
     * given bound from the left time — units are the time columns' own
     * integral units (pandas `merge_asof(tolerance=...)` semantics).
-    * Requires [[AsOfJoinStrategy]] to be injected (session extensions)
-    * or falls back to registering it on the fly via
-    * `spark.experimental.extraStrategies`. */
+    * Planned by [[AsOfJoinStrategy]], which [[graft.GraftExtensions]]
+    * injects at session build. */
   def join(left: DataFrame, right: DataFrame, key: String,
            leftTime: String, rightTime: String,
            direction: String = "backward",
@@ -218,11 +217,6 @@ object AsOfJoinPhysical {
       s"direction must be backward|forward, got $direction")
     require(tolerance.forall(_ >= 0L), "tolerance must be non-negative")
     val spark = SparkSession.active
-    if (!spark.sessionState.planner.strategies.contains(AsOfJoinStrategy) &&
-        !spark.experimental.extraStrategies.contains(AsOfJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        AsOfJoinStrategy +: spark.experimental.extraStrategies
-    }
     val lPlan = PlanBridge.analyzed(left)
     // fresh expr-ids on the right so a self-join can't alias attributes
     val rPlan = {

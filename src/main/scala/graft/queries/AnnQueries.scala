@@ -26,6 +26,18 @@ private[graft] object AnnQueries {
       graft.vector.HnswIndex.Params(m = 8, efConstruction = 128),
       knownCount = t(s, dir, "embeddings").count())
 
+  /** The transparent-ANN prologue: turn the size gate off (the gate
+    * stays off for the rest of the session), and copy `embeddings` to
+    * `base` in a private temp dir, returned. The copy keeps the catalog
+    * key private: registering the shared testdata path would rewrite
+    * every other exact-top-k query in the session. */
+  private def annBase(s: SparkSession, d: String, prefix: String): String = {
+    s.conf.set("spark.graft.ann.minTableBytes", "0")
+    val tmp = java.nio.file.Files.createTempDirectory(prefix).toString
+    t(s, d, "embeddings").write.mode("overwrite").parquet(s"$tmp/base")
+    tmp
+  }
+
   /** The IVF probe replayed end-to-end in DuckDB SQL: hash-spread
     * centroid pick, nearest-centroid assignment, 4-of-16 cell routing,
     * exact top-20 within the probed cells. Shared by q39 (IvfIndex
@@ -399,18 +411,12 @@ private[graft] object AnnQueries {
     // ONLY IF the rewrite fired: un-rewritten brute force returns the
     // exact global top-20, which differs from the 4-cell probe. The
     // CORRECTNESS row therefore gates the rewrite itself, not just the
-    // result. The table is COPIED to a private temp path first: the
-    // catalog key is the table path, and registering the shared
-    // testdata path would silently rewrite every other exact-top-k
-    // query in the session ----
+    // result. The table is COPIED to a private temp path first
+    // (`annBase`) ----
     QuerySpec("q169_ann_auto", (s, d) => {
-      import graft.plans.{AnnCatalog, AnnIndexRule}
+      import graft.plans.AnnCatalog
       import graft.vector.IvfIndex
-      AnnIndexRule.install(s)
-      s.conf.set("spark.graft.ann.minTableBytes", "0")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-ann-auto").toString
-      t(s, d, "embeddings").write.mode("overwrite").parquet(s"$tmp/base")
+      val tmp = annBase(s, d, "graft-ann-auto")
       val cs = IvfIndex.centroids(t(s, d, "embeddings"), "embedding", "vec_id", 16)
       IvfIndex.writeIndex(
         IvfIndex.build(tSpread(s, d, "embeddings"), "embedding", "vec_id", cs),
@@ -455,12 +461,8 @@ private[graft] object AnnQueries {
     // AnnIndexRuleSpec's plan assertions; this row gates that the
     // rule + stored-graph probe composition round-trips at every sf ----
     QuerySpec("q171_ann_auto_hnsw", (s, d) => {
-      import graft.plans.{AnnCatalog, AnnIndexRule}
-      AnnIndexRule.install(s)
-      s.conf.set("spark.graft.ann.minTableBytes", "0")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-ann-hnsw").toString
-      t(s, d, "embeddings").write.mode("overwrite").parquet(s"$tmp/base")
+      import graft.plans.AnnCatalog
+      val tmp = annBase(s, d, "graft-ann-hnsw")
       writeEmbGraphIndex(s, d, s"$tmp/graphs")
       AnnCatalog.register(s"$tmp/base",
         AnnCatalog.HnswEntry(s"$tmp/graphs", "embedding", "vec_id",
@@ -487,12 +489,8 @@ private[graft] object AnnQueries {
     // brute-force answer — the oracle is plain brute-force SQL and the
     // row stays green at every sf regardless of which branch serves ----
     QuerySpec("q174_ann_filtered", (s, d) => {
-      import graft.plans.{AnnCatalog, AnnIndexRule}
-      AnnIndexRule.install(s)
-      s.conf.set("spark.graft.ann.minTableBytes", "0")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-ann-filt").toString
-      t(s, d, "embeddings").write.mode("overwrite").parquet(s"$tmp/base")
+      import graft.plans.AnnCatalog
+      val tmp = annBase(s, d, "graft-ann-filt")
       writeEmbGraphIndex(s, d, s"$tmp/graphs")
       AnnCatalog.register(s"$tmp/base",
         AnnCatalog.HnswEntry(s"$tmp/graphs", "embedding", "vec_id",
@@ -526,12 +524,8 @@ private[graft] object AnnQueries {
     // scan reads (vec_id, label) only, not the embedding array, which is
     // the dominant IO saving at 100 TB ----
     QuerySpec("q175_ann_payload", (s, d) => {
-      import graft.plans.{AnnCatalog, AnnIndexRule}
-      AnnIndexRule.install(s)
-      s.conf.set("spark.graft.ann.minTableBytes", "0")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-ann-payload").toString
-      t(s, d, "embeddings").write.mode("overwrite").parquet(s"$tmp/base")
+      import graft.plans.AnnCatalog
+      val tmp = annBase(s, d, "graft-ann-payload")
       writeEmbGraphIndex(s, d, s"$tmp/graphs")
       AnnCatalog.register(s"$tmp/base",
         AnnCatalog.HnswEntry(s"$tmp/graphs", "embedding", "vec_id",
@@ -561,12 +555,8 @@ private[graft] object AnnQueries {
     // shape) with a payload column, so this row gates the fallback ×
     // join-back × distance composition at every sf ----
     QuerySpec("q176_ann_fallback", (s, d) => {
-      import graft.plans.{AnnCatalog, AnnIndexRule}
-      AnnIndexRule.install(s)
-      s.conf.set("spark.graft.ann.minTableBytes", "0")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-ann-fb").toString
-      t(s, d, "embeddings").write.mode("overwrite").parquet(s"$tmp/base")
+      import graft.plans.AnnCatalog
+      val tmp = annBase(s, d, "graft-ann-fb")
       writeEmbGraphIndex(s, d, s"$tmp/graphs")
       AnnCatalog.register(s"$tmp/base",
         AnnCatalog.HnswEntry(s"$tmp/graphs", "embedding", "vec_id",
@@ -600,12 +590,8 @@ private[graft] object AnnQueries {
     // 100 × |base| cosine evaluations. Covering efSearch keeps the
     // probe exact, so the window SQL is the oracle ----
     QuerySpec("q177_ann_multi", (s, d) => {
-      import graft.plans.{AnnCatalog, AnnIndexRule}
-      AnnIndexRule.install(s)
-      s.conf.set("spark.graft.ann.minTableBytes", "0")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-ann-multi").toString
-      t(s, d, "embeddings").write.mode("overwrite").parquet(s"$tmp/base")
+      import graft.plans.AnnCatalog
+      val tmp = annBase(s, d, "graft-ann-multi")
       writeEmbGraphIndex(s, d, s"$tmp/graphs")
       AnnCatalog.register(s"$tmp/base",
         AnnCatalog.HnswEntry(s"$tmp/graphs", "embedding", "vec_id",
@@ -674,13 +660,9 @@ private[graft] object AnnQueries {
     // The oracle is the 4-of-16-cell probe replay — it matches ONLY IF
     // the rewrite fired (brute force returns the global top-20) ----
     QuerySpec("q179_ann_routed_auto", (s, d) => {
-      import graft.plans.{AnnCatalog, AnnIndexRule}
+      import graft.plans.AnnCatalog
       import graft.vector.{IvfIndex, RoutedHnsw}
-      AnnIndexRule.install(s)
-      s.conf.set("spark.graft.ann.minTableBytes", "0")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-rhnsw-auto").toString
-      t(s, d, "embeddings").write.mode("overwrite").parquet(s"$tmp/base")
+      val tmp = annBase(s, d, "graft-rhnsw-auto")
       val cs = IvfIndex.centroids(t(s, d, "embeddings"), "embedding", "vec_id", 16)
       RoutedHnsw.writeRoutedIndex(tSpread(s, d, "embeddings"),
         "embedding", "vec_id", s"$tmp/routed", cs,
@@ -879,13 +861,9 @@ private[graft] object AnnQueries {
     // pipeline, so the gate is deterministic — not a recall gamble on
     // the filter's selectivity ----
     QuerySpec("q202_ann_hard_negatives", (s, d) => {
-      import graft.plans.{AnnCatalog, AnnIndexRule}
+      import graft.plans.AnnCatalog
       import graft.vector.HnswIndex
-      AnnIndexRule.install(s)
-      s.conf.set("spark.graft.ann.minTableBytes", "0")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-ann-hn").toString
-      t(s, d, "embeddings").write.mode("overwrite").parquet(s"$tmp/base")
+      val tmp = annBase(s, d, "graft-ann-hn")
       writeEmbGraphIndex(s, d, s"$tmp/graphs")
       AnnCatalog.register(s"$tmp/base",
         AnnCatalog.HnswEntry(s"$tmp/graphs", "embedding", "vec_id",
@@ -952,13 +930,9 @@ private[graft] object AnnQueries {
     // batched index pass as q202; nothing label-grain ever shuffles
     // corpus text or embeddings ----
     QuerySpec("q203_knn_label_noise", (s, d) => {
-      import graft.plans.{AnnCatalog, AnnIndexRule}
+      import graft.plans.AnnCatalog
       import graft.vector.HnswIndex
-      AnnIndexRule.install(s)
-      s.conf.set("spark.graft.ann.minTableBytes", "0")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-ann-noise").toString
-      t(s, d, "embeddings").write.mode("overwrite").parquet(s"$tmp/base")
+      val tmp = annBase(s, d, "graft-ann-noise")
       writeEmbGraphIndex(s, d, s"$tmp/graphs")
       AnnCatalog.register(s"$tmp/base",
         AnnCatalog.HnswEntry(s"$tmp/graphs", "embedding", "vec_id",
@@ -1078,18 +1052,10 @@ private[graft] object AnnQueries {
       // shape AnnIndexRule rewrites into ONE batched probe, and the
       // covering efSearch makes the probe exact, so the RRF fusion (and
       // the oracle hash) is unchanged.
-      locally {
-        import graft.plans.AnnIndexRule
-        AnnIndexRule.install(s)
-        s.conf.set("spark.graft.ann.minTableBytes", "0")
-      }
-      val tmpRrf = java.nio.file.Files
-        .createTempDirectory("graft-rrf").toString
       // r12 note: measured A/B — writing the base spread (32 files)
       // reads as three parallel probe scans but loses more to the
       // 32-file write/commit than it saves (6.4 s → 7.6 s); kept single
-      t(s, d, "embeddings").write.mode("overwrite")
-        .parquet(s"$tmpRrf/base")
+      val tmpRrf = annBase(s, d, "graft-rrf")
       writeEmbGraphIndex(s, d, s"$tmpRrf/graphs")
       graft.plans.AnnCatalog.register(s"$tmpRrf/base",
         graft.plans.AnnCatalog.HnswEntry(s"$tmpRrf/graphs", "embedding",

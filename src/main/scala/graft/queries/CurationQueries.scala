@@ -581,7 +581,6 @@ private[graft] object CurationQueries {
     // SQL==Column parity is gated in ExtensionsSpec (its weights come
     // from a trained model, which no relational oracle can replay) ----
     QuerySpec("q198_sql_curation", (s, d) => {
-      GraftFunctions.register(s)
       tSpread(s, d, "documents").createOrReplaceTempView("documents")
       tSpread(s, d, "documents").filter(col("lang") === "en")
         .createOrReplaceTempView("documents_en")

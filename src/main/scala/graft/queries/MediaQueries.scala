@@ -736,7 +736,6 @@ private[graft] object MediaQueries {
     // the Column API): one scan, a 2-row container rollup ----
     QuerySpec("q281_img_stats_sql", (s, d) => {
       import graft.multimodal.SyntheticMedia
-      GraftFunctions.register(s)
       val gen = udf { (d0: Long, c: String) =>
         if (c == "png") SyntheticMedia.pngPayload(d0)
         else SyntheticMedia.ppmPayload(d0)

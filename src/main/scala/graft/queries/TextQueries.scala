@@ -17,6 +17,35 @@ private[graft] object TextQueries {
   private val CmsProbeTerms: Seq[String] =
     Seq("agg", "data", "join", "scan", "spark", "table", "value", "zzz_absent")
 
+  /** The bigram LM that q88, q243, q246 and q269 score with, as `logp`
+    * on every bigram row of `docs`: add-one smoothed log2 P(w2|w1) =
+    * log2((c(w1,w2)+1) / (c(w1)+V)), carrying `keep` columns. Bigrams
+    * come from the map-side adjacentPairs array (w2 NULL on a doc's
+    * last token), and ONE checkpointed pair-grain aggregate derives the
+    * bigram counts, the unigram counts AND V, so the corpus is scanned
+    * twice (model + probe). The count-frame joins are deliberately
+    * UN-hinted: the bigram vocabulary grows with corpus content, so a
+    * forced broadcast would OOM the executors at scale; only the 1-row
+    * vocab-size frame keeps an explicit broadcast. */
+  private def bigramLogProb(docs: DataFrame, keep: String*): DataFrame = {
+    val pairs = docs
+      .select(keep.map(col) :+
+        explode(TextFunctions.adjacentPairs(lower(col("text")))).as("bg"): _*)
+      .select(keep.map(col) ++ Seq(col("bg.w").as("w"), col("bg.w2").as("w2")): _*)
+    val pc = pairs.groupBy(col("w"), col("w2"))
+      .agg(count(lit(1)).as("c")).localCheckpoint()
+    val biCounts = pc.filter(col("w2").isNotNull)
+      .select(col("w"), col("w2"), col("c").as("cb"))
+    val uniCounts = pc.groupBy(col("w")).agg(sum(col("c")).as("cu"))
+    val vocab = uniCounts.agg(count(lit(1)).as("v"))
+    pairs.filter(col("w2").isNotNull)
+      .join(biCounts, Seq("w", "w2"))
+      .join(uniCounts, Seq("w"))
+      .crossJoin(broadcast(vocab))
+      .withColumn("logp",
+        log2((col("cb") + 1).cast("double") / (col("cu") + col("v"))))
+  }
+
   /** q197's oracle: the FULL BPE training loop plus per-document
     * tokenization, unrolled to `n` argmax+replace iterations of plain
     * DuckDB SQL. Symbol sequences ride a double-space string encoding
@@ -269,7 +298,6 @@ private[graft] object TextQueries {
 
     // ---- pure-SQL text analysis via the engine's registered functions ----
     QuerySpec("q48_sql_text_surface", (s, d) => {
-      GraftFunctions.register(s)
       tSpread(s, d, "documents").createOrReplaceTempView("documents")
       s.sql(
         """SELECT lang, lang_id(text) AS predicted,
@@ -881,35 +909,10 @@ private[graft] object TextQueries {
     // ---- LM-perplexity quality filter (KenLM-family): a bigram model
     // trained ON the corpus scores each doc; P(w2|w1) = (c(w1,w2)+1) /
     // (c(w1)+V) with add-one smoothing. ONE token lineage feeds both the
-    // model counts and the per-doc scoring. The count-frame joins are
-    // deliberately UN-hinted: the bigram vocabulary grows with corpus
-    // content (Heaps-law sub-linear but unbounded — billions of distinct
-    // bigrams at 100 TB), so a forced broadcast would OOM the executors
-    // at scale; AQE broadcasts at bench scale and shuffle-hash-joins
-    // beyond the threshold. Only the 1-row vocab-size frame keeps an
-    // explicit broadcast ----
+    // model counts and the per-doc scoring (`bigramLogProb`) ----
     QuerySpec("q88_lm_perplexity", (s, d) => {
-      // r12: bigrams via the map-side adjacentPairs array (w2 NULL on a
-      // doc's last token) — no posexplode + window-lead shuffle; ONE
-      // checkpointed pair-grain aggregate (vocabulary-grain) derives
-      // cb, cu AND V, so the corpus is scanned twice (model + probe),
-      // not four times. Counts are bit-identical by construction.
-      val pairs = tSpread(s, d, "documents")
-        .select(col("doc_id"),
-          explode(TextFunctions.adjacentPairs(lower(col("text")))).as("bg"))
-        .select(col("doc_id"), col("bg.w").as("w"), col("bg.w2").as("w2"))
-      val pc = pairs.groupBy(col("w"), col("w2"))
-        .agg(count(lit(1)).as("c")).localCheckpoint()
-      val big = pairs.filter(col("w2").isNotNull)
-      val biCounts = pc.filter(col("w2").isNotNull)
-        .select(col("w"), col("w2"), col("c").as("cb"))
-      val uniCounts = pc.groupBy(col("w")).agg(sum(col("c")).as("cu"))
-      val vocab = uniCounts.agg(count(lit(1)).as("v"))
-      big.join(biCounts, Seq("w", "w2"))
-        .join(uniCounts, Seq("w"))
-        .crossJoin(broadcast(vocab))
-        .withColumn("lp_bp", floorBp(
-          log2((col("cb") + 1).cast("double") / (col("cu") + col("v"))), 4))
+      bigramLogProb(tSpread(s, d, "documents"), "doc_id")
+        .withColumn("lp_bp", floorBp(col("logp"), 4))
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_bigrams"),
           (-ratioBp(sum(col("lp_bp")), count(lit(1)), 0))
@@ -1297,25 +1300,7 @@ private[graft] object TextQueries {
     // Cutoffs broadcast back (langs-bounded); docs excluded only when
     // unscoreable (< 2 tokens, as q88) ----
     QuerySpec("q243_ccnet_buckets", (s, d) => {
-      // r12: q88's map-side bigram rework (see q88) — same counts, no
-      // window-lead shuffle, one checkpointed pair-grain model aggregate
-      val pairs = tSpread(s, d, "documents")
-        .select(col("doc_id"), col("lang"),
-          explode(TextFunctions.adjacentPairs(lower(col("text")))).as("bg"))
-        .select(col("doc_id"), col("lang"),
-          col("bg.w").as("w"), col("bg.w2").as("w2"))
-      val pc = pairs.groupBy(col("w"), col("w2"))
-        .agg(count(lit(1)).as("c")).localCheckpoint()
-      val big = pairs.filter(col("w2").isNotNull)
-      val biCounts = pc.filter(col("w2").isNotNull)
-        .select(col("w"), col("w2"), col("c").as("cb"))
-      val uniCounts = pc.groupBy(col("w")).agg(sum(col("c")).as("cu"))
-      val vocab = uniCounts.agg(count(lit(1)).as("v"))
-      val scored = big.join(biCounts, Seq("w", "w2"))
-        .join(uniCounts, Seq("w"))
-        .crossJoin(broadcast(vocab))
-        .withColumn("logp",
-          log2((col("cb") + 1).cast("double") / (col("cu") + col("v"))))
+      val scored = bigramLogProb(tSpread(s, d, "documents"), "doc_id", "lang")
         .groupBy(col("doc_id"), col("lang"))
         .agg(round(-avg(col("logp")), 4).as("ppl_bits"))
         .withColumn("ppl10k", expr("cast(round(ppl_bits * 10000) as bigint)"))
@@ -1402,23 +1387,7 @@ private[graft] object TextQueries {
     // rows); the base rate is a 1-row broadcast ----
     QuerySpec("q246_proxy_calibration", (s, d) => {
       val docs = tSpread(s, d, "documents")
-      // r12: q88's map-side bigram rework (see q88) — same counts, no
-      // window-lead shuffle, one checkpointed pair-grain model aggregate
-      val pairs = docs.select(col("doc_id"),
-          explode(TextFunctions.adjacentPairs(lower(col("text")))).as("bg"))
-        .select(col("doc_id"), col("bg.w").as("w"), col("bg.w2").as("w2"))
-      val pc = pairs.groupBy(col("w"), col("w2"))
-        .agg(count(lit(1)).as("c")).localCheckpoint()
-      val big = pairs.filter(col("w2").isNotNull)
-      val biCounts = pc.filter(col("w2").isNotNull)
-        .select(col("w"), col("w2"), col("c").as("cb"))
-      val uniCounts = pc.groupBy(col("w")).agg(sum(col("c")).as("cu"))
-      val vocab = uniCounts.agg(count(lit(1)).as("v"))
-      val scored = big.join(biCounts, Seq("w", "w2"))
-        .join(uniCounts, Seq("w"))
-        .crossJoin(broadcast(vocab))
-        .withColumn("logp",
-          log2((col("cb") + 1).cast("double") / (col("cu") + col("v"))))
+      val scored = bigramLogProb(docs, "doc_id")
         .groupBy(col("doc_id"))
         .agg(expr("cast(round(round(-avg(logp), 4) * 10000) as bigint)")
           .as("ppl10k"))
@@ -1872,23 +1841,7 @@ private[graft] object TextQueries {
     // 31-point threshold spine never touches doc-grain rows ----
     QuerySpec("q269_proxy_roc", (s, d) => {
       val docs = tSpread(s, d, "documents")
-      // r12: q88's map-side bigram rework (see q88) — same counts, no
-      // window-lead shuffle, one checkpointed pair-grain model aggregate
-      val pairs = docs.select(col("doc_id"),
-          explode(TextFunctions.adjacentPairs(lower(col("text")))).as("bg"))
-        .select(col("doc_id"), col("bg.w").as("w"), col("bg.w2").as("w2"))
-      val pc = pairs.groupBy(col("w"), col("w2"))
-        .agg(count(lit(1)).as("c")).localCheckpoint()
-      val big = pairs.filter(col("w2").isNotNull)
-      val biCounts = pc.filter(col("w2").isNotNull)
-        .select(col("w"), col("w2"), col("c").as("cb"))
-      val uniCounts = pc.groupBy(col("w")).agg(sum(col("c")).as("cu"))
-      val vocab = uniCounts.agg(count(lit(1)).as("v"))
-      val scored = big.join(biCounts, Seq("w", "w2"))
-        .join(uniCounts, Seq("w"))
-        .crossJoin(broadcast(vocab))
-        .withColumn("logp",
-          log2((col("cb") + 1).cast("double") / (col("cu") + col("v"))))
+      val scored = bigramLogProb(docs, "doc_id")
         .groupBy(col("doc_id"))
         .agg(expr("cast(round(round(-avg(logp), 4) * 10000) as bigint)")
           .as("ppl10k"))

@@ -738,10 +738,6 @@ private[graft] object WarehouseQueries {
     // ---- optimizer-rewritten interval join: the user writes the NATURAL
     // theta predicate; RangeJoinRule plans the bucketed equi-join ----
     QuerySpec("q50_range_join_rule", (s, d) => {
-      if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[
-          graft.plans.RangeJoinRule]))
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ new graft.plans.RangeJoinRule
       val e = Tables.events(s, d)
         .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"))
       val l = e.select(col("user_id").as("k"), col("event_id").as("l_id"),

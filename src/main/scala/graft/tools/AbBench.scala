@@ -128,8 +128,7 @@ object AbBench {
                       filtered: Boolean = true): Pair =
     Pair(name, "brute_force", "index_probe",
       (s, d) => {
-        import graft.plans.{AnnCatalog, AnnIndexRule}
-        AnnIndexRule.install(s)
+        import graft.plans.AnnCatalog
         s.conf.set("spark.graft.ann.minTableBytes", "0")
         val tmp = java.nio.file.Files
           .createTempDirectory("graft-ab-ann").toString

@@ -1,6 +1,6 @@
 package graft.vector
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -77,11 +77,6 @@ object VectorFunctions {
   /** cosine distance = 1 - similarity (pgvector `<=>` semantics). */
   def cosine_dist(a: Column, b: Column): Column =
     lit(1.0) - cosine_sim(a, b)
-
-  /** Register for the SQL surface: `SELECT cosine_sim(emb, q) ...`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimilarity(exprs.head, exprs(1)), "scala_udf")
 
   /** Brute-force exact top-k by cosine similarity against one query vector.
     *

@@ -1,6 +1,6 @@
 package graft
 
-import graft.plans.{AnnCatalog, AnnIndexRule}
+import graft.plans.AnnCatalog
 import graft.vector.{HnswIndex, IvfIndex, VectorFunctions}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -14,13 +14,11 @@ import org.apache.spark.sql.functions.col
 class AnnIndexRuleSpec extends SparkSpec {
   import spark.implicits._
 
-  private def ensureRule(): Unit = {
-    AnnIndexRule.install(spark)
-    // the suite's tables are tiny by design — disable the size-based
-    // cost gate so the rewrite paths are observable (the gate has its
-    // own test below)
+  /** The suite's tables are tiny by design — disable the size-based
+    * cost gate so the rewrite paths are observable (the gate has its own
+    * test below). The rule itself is installed at session build. */
+  private def gateOff(): Unit =
     spark.conf.set("spark.graft.ann.minTableBytes", "0")
-  }
 
   /** All V1 file scans in the executed plan, recursing through AQE
     * wrappers (the IvfIndexSpec pattern). */
@@ -52,7 +50,7 @@ class AnnIndexRuleSpec extends SparkSpec {
   }
 
   test("IVF: registered index turns brute-force top-k into a pruned index probe") {
-    ensureRule()
+    gateOff()
     val (dir, centers) = writeBase()
     try {
       val base = spark.read.parquet(s"$dir/base")
@@ -87,7 +85,7 @@ class AnnIndexRuleSpec extends SparkSpec {
   }
 
   test("HNSW: registered graph index answers the query; exact at covering ef") {
-    ensureRule()
+    gateOff()
     val (dir, centers) = writeBase()
     try {
       val base = spark.read.parquet(s"$dir/base")
@@ -120,8 +118,7 @@ class AnnIndexRuleSpec extends SparkSpec {
   }
 
   test("SQL form plans into the same probe") {
-    ensureRule()
-    VectorFunctions.register(spark)
+    gateOff()
     val (dir, centers) = writeBase()
     try {
       val base = spark.read.parquet(s"$dir/base")
@@ -147,7 +144,7 @@ class AnnIndexRuleSpec extends SparkSpec {
   }
 
   test("pgvector distance form: orderBy(cosine_dist.asc_nulls_last).limit(k) rewrites") {
-    ensureRule()
+    gateOff()
     val (dir, centers) = writeBase()
     try {
       val base = spark.read.parquet(s"$dir/base")
@@ -187,7 +184,7 @@ class AnnIndexRuleSpec extends SparkSpec {
   }
 
   test("persisted registration: attach() restores the rewrite from the descriptor") {
-    ensureRule()
+    gateOff()
     val (dir, centers) = writeBase()
     try {
       val base = spark.read.parquet(s"$dir/base")
@@ -252,7 +249,7 @@ class AnnIndexRuleSpec extends SparkSpec {
   }
 
   test("explicit desc_nulls_first over a nullable embedding does not rewrite") {
-    ensureRule()
+    gateOff()
     val (dir, centers) = writeBase()
     try {
       val base = spark.read.parquet(s"$dir/base")
@@ -274,7 +271,7 @@ class AnnIndexRuleSpec extends SparkSpec {
   }
 
   test("stale registration (deleted index files) degrades to brute force") {
-    ensureRule()
+    gateOff()
     val (dir, centers) = writeBase()
     try {
       val base = spark.read.parquet(s"$dir/base")
@@ -290,7 +287,7 @@ class AnnIndexRuleSpec extends SparkSpec {
   }
 
   test("conservative fallbacks: unregistered, ascending similarity, non-base score") {
-    ensureRule()
+    gateOff()
     val (dir, centers) = writeBase()
     try {
       val base = spark.read.parquet(s"$dir/base")
@@ -357,7 +354,7 @@ class AnnIndexRuleSpec extends SparkSpec {
   }
 
   test("filtered top-k plans as over-fetched probe + join-back; exact vs brute force") {
-    ensureRule()
+    gateOff()
     val (dir, centers, base) = hnswRegistered()
     try {
       spark.conf.set("spark.graft.ann.overfetch", "8")
@@ -407,7 +404,7 @@ class AnnIndexRuleSpec extends SparkSpec {
   }
 
   test("over-selective predicate fires the runtime brute fallback, still exact") {
-    ensureRule()
+    gateOff()
     val (dir, centers, base) = hnswRegistered()
     try {
       val q = centers(1)
@@ -436,7 +433,7 @@ class AnnIndexRuleSpec extends SparkSpec {
   }
 
   test("payload columns plan as probe + broadcast join-back, not a full scan-sort") {
-    ensureRule()
+    gateOff()
     val (dir, centers, base) = hnswRegistered()
     try {
       val q = centers(2)
@@ -465,7 +462,7 @@ class AnnIndexRuleSpec extends SparkSpec {
   }
 
   test("multi-query lateral top-k plans as ONE batched stored-graph probe") {
-    ensureRule()
+    gateOff()
     val (dir, centers, base) = hnswRegistered()
     try {
       val rng = new scala.util.Random(9)
@@ -516,7 +513,7 @@ class AnnIndexRuleSpec extends SparkSpec {
     // join-back on the id, anti-label filter, re-rank to 5 — the inner
     // window must rewrite onto the stored graph while the join-back
     // reads only (vec_id, label) from base
-    ensureRule()
+    gateOff()
     val (dir, centers, base) = hnswRegistered()
     try {
       val rng = new scala.util.Random(11)
@@ -573,7 +570,7 @@ class AnnIndexRuleSpec extends SparkSpec {
   }
 
   test("cost gate: a table below minTableBytes keeps the brute-force scan") {
-    ensureRule()
+    gateOff()
     val (dir, centers) = writeBase()
     try {
       val base = spark.read.parquet(s"$dir/base")

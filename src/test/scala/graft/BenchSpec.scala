@@ -13,6 +13,13 @@ class BenchSpec extends SparkSpec {
       s"a throwing query must not get a time: $r")
   }
 
+  test("timeQuery runs the projected columns, so a failing SELECT item fails") {
+    val r = Bench.timeQuery(spark, "unused", 2,
+      (s, _) => s.range(1).toDF().select(raise_error(lit("boom"))))
+    assert(r.left.exists(_.getMessage.contains("boom")),
+      s"a query whose projection throws must not get a time: $r")
+  }
+
   test("timeQuery times a query that finishes") {
     val r = Bench.timeQuery(spark, "unused", 2, (s, _) => s.range(10).toDF())
     assert(r.exists(_ >= 0.0), s"expected a time: $r")

@@ -91,7 +91,6 @@ class CountMinSpec extends SparkSpec {
   }
 
   test("SQL surface: cms_agg/cms_query/hll_sketch/hll_merge_est registered") {
-    GraftFunctions.register(spark)
     words(500).toDF("t").createOrReplaceTempView("cms_words")
     val row = spark.sql(
       """SELECT cms_query(cms_agg(t, 4, 32), 'w1') AS est,

@@ -1,12 +1,11 @@
 package graft
 
 /** The library's SQL surface: custom Catalyst functions usable from pure
-  * SQL, registered at runtime or via SparkSessionExtensions. */
+  * SQL, injected at session build by GraftExtensions. */
 class ExtensionsSpec extends SparkSpec {
   import spark.implicits._
 
   test("cosine_sim and topk_by_score usable from pure SQL") {
-    GraftFunctions.register(spark)
     Seq(
       (1L, "a", Array(1.0f, 0.0f)),
       (2L, "a", Array(0.6f, 0.8f)),
@@ -34,7 +33,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("text/ttl functions usable from pure SQL, same results as Column API") {
-    GraftFunctions.register(spark)
     Seq(
       (1L, "the cat and the dog, it is fine"),
       (2L, "el perro de la casa que ladra y"),
@@ -66,7 +64,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("hll_distinct usable from pure SQL") {
-    GraftFunctions.register(spark)
     spark.range(3).selectExpr("concat('v', id % 3) AS t")
       .createOrReplaceTempView("hll_sql")
     val est = spark.sql("SELECT hll_distinct(t, 9) AS e FROM hll_sql")
@@ -77,37 +74,26 @@ class ExtensionsSpec extends SparkSpec {
 
   test("SQL DDL: ANN index lifecycle (create/show/drop/attach) purely through spark.sql") {
     import graft.plans.AnnCatalog
-    import org.apache.spark.sql.SparkSession
-    // an extensions-built session on the SAME SparkContext: the injected
-    // parser only exists at session build time, so this is the path a
-    // library user takes (spark.sql.extensions=graft.GraftExtensions)
-    val prevActive = SparkSession.getActiveSession
-    val prevDefault = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    // the shared session is built with GraftExtensions, so it has the
+    // injected parser: the path a library user takes
+    // (spark.sql.extensions=graft.GraftExtensions)
     try {
-      s2.conf.set("spark.graft.ann.minTableBytes", "0")
+      spark.conf.set("spark.graft.ann.minTableBytes", "0")
       val dir = java.nio.file.Files.createTempDirectory("ann-sql").toString
       val rng = new scala.util.Random(11)
-      import s2.implicits._
       (0 until 200).map { i =>
         (i.toLong, Array.fill(8)(rng.nextGaussian().toFloat))
       }.toDF("vec_id", "embedding").repartition(3)
         .write.parquet(s"$dir/base")
 
       // CREATE builds, persists (descriptor) and registers
-      val created = s2.sql(
+      val created = spark.sql(
         s"""GRAFT CREATE ANN INDEX USING IVF ON '$dir/base'
            |  (embedding, vec_id) AT '$dir/ivf'
            |  OPTIONS (cells = 6, nprobe = 6, kmeans_iters = 2)""".stripMargin).collect()
       assert(created.head.getString(0).contains("created ivf index"))
       assert(AnnCatalog.list.nonEmpty)
-      val shown = s2.sql("GRAFT SHOW ANN INDEXES").collect()
+      val shown = spark.sql("GRAFT SHOW ANN INDEXES").collect()
       assert(shown.exists(r => r.getString(1) == "ivf" &&
         r.getString(2) == s"$dir/ivf"))
 
@@ -116,7 +102,7 @@ class ExtensionsSpec extends SparkSpec {
       // brute force exactly
       val q = Array.fill(8)(0.5f)
       val qSql = q.mkString("array(", "F,", "F)")
-      def topk = s2.sql(
+      def topk = spark.sql(
         s"""SELECT vec_id, cosine_sim(embedding, $qSql) AS score
            |FROM parquet.`$dir/base`
            |ORDER BY score DESC, vec_id LIMIT 7""".stripMargin)
@@ -125,14 +111,14 @@ class ExtensionsSpec extends SparkSpec {
         "SQL top-k did not plan onto the created index")
 
       // DROP → brute force, same rows (exhaustive probe was exact)
-      s2.sql(s"GRAFT DROP ANN INDEX ON '$dir/base'").collect()
+      spark.sql(s"GRAFT DROP ANN INDEX ON '$dir/base'").collect()
       val brute = topk.collect().map(_.getLong(0)).toSeq
       assert(!topk.queryExecution.executedPlan.toString.contains("/ivf"))
       assert(viaIndex == brute)
 
       // ATTACH restores the registration from the at-rest descriptor
       // (the fresh-session half of CREATE-once)
-      val attached = s2.sql(
+      val attached = spark.sql(
         s"GRAFT ATTACH ANN INDEX '$dir/ivf' TO '$dir/base'").collect()
       assert(attached.head.getString(0).contains("attached"))
       assert(topk.queryExecution.executedPlan.toString.contains("/ivf"))
@@ -141,31 +127,24 @@ class ExtensionsSpec extends SparkSpec {
       // MAINTAIN on a healthy index is a no-op (the k-means candidate
       // re-derives the same clustering); the rebuild path is proven in
       // IvfIndexSpec's drift test
-      val maint = s2.sql(
+      val maint = spark.sql(
         s"GRAFT MAINTAIN ANN INDEX ON '$dir/base' OPTIONS (kmeans_iters = 2)")
         .collect()
       assert(maint.head.getString(0).contains("healthy"), maint.head.getString(0))
 
       // non-GRAFT SQL still parses through the delegate
-      assert(s2.sql("SELECT 1 + 1 AS two").head().getInt(0) == 2)
+      assert(spark.sql("SELECT 1 + 1 AS two").head().getInt(0) == 2)
       // malformed GRAFT statement surfaces the option error
       val err = intercept[Exception] {
-        s2.sql(s"""GRAFT CREATE ANN INDEX USING IVF ON '$dir/base'
+        spark.sql(s"""GRAFT CREATE ANN INDEX USING IVF ON '$dir/base'
           |  (embedding, vec_id) AT '$dir/ivf2' OPTIONS (bogus = 1)""".stripMargin)
           .collect()
       }
       assert(err.getMessage.contains("unknown ivf index option"))
-    } finally {
-      AnnCatalog.clear()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
-    }
+    } finally AnnCatalog.clear()
   }
 
   test("hist_quantile usable from pure SQL, matches Column API") {
-    GraftFunctions.register(spark)
     spark.range(1, 1001).selectExpr("CAST(id AS DOUBLE) AS v")
       .createOrReplaceTempView("hq_sql")
     val viaSql = spark.sql(
@@ -182,7 +161,6 @@ class ExtensionsSpec extends SparkSpec {
 
   test("curation operators usable from pure SQL, same results as Column API") {
     import org.apache.spark.sql.functions._
-    GraftFunctions.register(spark)
     val docs = Seq(
       (1L, "The cat and the dog sat with a hat that fit " * 4),
       (2L, "spam spam spam spam spam spam"),
@@ -256,7 +234,6 @@ class ExtensionsSpec extends SparkSpec {
 
   test("pii_redact / pii_count usable from pure SQL, same as Column API") {
     import org.apache.spark.sql.functions._
-    GraftFunctions.register(spark)
     val docs = Seq(
       (1L, "mail me at a.b@example.com or 504-555-0123 from 10.0.0.1"),
       (2L, "nothing sensitive here")).toDF("doc_id", "text")
@@ -280,7 +257,6 @@ class ExtensionsSpec extends SparkSpec {
 
   test("shard_by_tokens TABLE function == Curation.shardByTokens") {
     import org.apache.spark.sql.functions._
-    GraftFunctions.register(spark)
     val docs = (1L to 400L).map(i => (i, 100L + i % 37))
       .toDF("doc_id", "n_toks")
     docs.createOrReplaceTempView("sbt_docs")
@@ -303,7 +279,6 @@ class ExtensionsSpec extends SparkSpec {
   test("clean_stutter and contamination_spans usable from pure SQL, " +
       "same results as Column API") {
     import org.apache.spark.sql.functions._
-    GraftFunctions.register(spark)
     val docs = Seq(
       (1L, "the the cat sat sat sat on the mat"),
       (2L, "no stutter here at all"),
@@ -352,7 +327,6 @@ class ExtensionsSpec extends SparkSpec {
 
   test("media codec functions usable from pure SQL, same results as Column API") {
     import graft.multimodal.{Multimodal, PpmCodec, WavCodec, Y4mCodec}
-    GraftFunctions.register(spark)
     import spark.implicits._
     val wav = WavCodec.encode(WavCodec.Clip(8000, 1,
       Array.tabulate[Short](40)(i => ((i * 777) % 65536 - 32768).toShort)))
@@ -413,7 +387,6 @@ class ExtensionsSpec extends SparkSpec {
 
   test("phash usable from pure SQL: dHash hex for P6 payloads, NULL otherwise") {
     import graft.multimodal.{PerceptualHash, PpmCodec, WavCodec}
-    GraftFunctions.register(spark)
     import spark.implicits._
     val img = PpmCodec.Image(5, 4,
       Array.tabulate[Byte](60)(i => (i * 37).toByte))
@@ -431,7 +404,6 @@ class ExtensionsSpec extends SparkSpec {
 
   test("afp/vfp usable from pure SQL: fingerprints in-modality, NULL across") {
     import graft.multimodal.{PerceptualHash, SyntheticMedia, WavCodec, Y4mCodec}
-    GraftFunctions.register(spark)
     import spark.implicits._
     val wav = SyntheticMedia.wavPayload(7L)
     val y4m = SyntheticMedia.y4mPayload(8L)
@@ -450,7 +422,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("crawl-ingestion surface usable from pure SQL (one shared definition)") {
-    GraftFunctions.register(spark)
     Seq((1L,
       "HTTP://User@WWW.Ex.COM:80/a/b/?utm_source=x&b=2&a=1#frag",
       "cdn.a.site7.co.uk",
@@ -482,7 +453,6 @@ class ExtensionsSpec extends SparkSpec {
 
   test("round-11 crawl surface usable from pure SQL: charset, entities, sitemap") {
     import graft.GraftFunctions
-    GraftFunctions.register(spark)
     // charset: cp1252 curly quotes under a latin1 label (WHATWG folds
     // the label to windows-1252); binary literal via unhex
     val cs = spark.sql(
@@ -516,7 +486,6 @@ class ExtensionsSpec extends SparkSpec {
 
   test("round-12 crawl surface usable from pure SQL: http, resolve, outlinks") {
     import graft.GraftFunctions
-    GraftFunctions.register(spark)
     // http_parse: status/headers/body off a wire literal
     val h = spark.sql(
       """SELECT http_parse(cast('HTTP/1.1 301 Moved' || chr(13) || chr(10)
@@ -550,7 +519,6 @@ class ExtensionsSpec extends SparkSpec {
 
   test("archive-index surface usable from pure SQL: surt, cdx, anchors") {
     import graft.GraftFunctions
-    GraftFunctions.register(spark)
     // surt_key: spelling collapse as a SQL scalar
     val k = spark.sql(
       """SELECT surt_key('https://WWW.Example.com:443/A?b=2&a=1') AS k1,

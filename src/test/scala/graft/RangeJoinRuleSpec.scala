@@ -1,24 +1,19 @@
 package graft
 
-import graft.plans.RangeJoinRule
 import org.apache.spark.sql.functions._
 
+/** RangeJoinRule is installed at session build (GraftExtensions), so
+  * every theta-join below is planned with it; reference answers are
+  * computed in Scala. */
 class RangeJoinRuleSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withRule[T](f: => T): T = {
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ new RangeJoinRule
-    try f finally spark.experimental.extraOptimizations = prev
-  }
+  private val leftRows = (1 to 200).map(i => (i % 5L, i.toLong, i * 60000000L))
+  private val rightRows =
+    (1 to 200).map(i => (i % 5L, 1000L + i, i * 60000000L + 30000000L))
 
-  private def fixture() = {
-    val l = (1 to 200).map(i => (i % 5L, i.toLong, i * 60000000L))
-      .toDF("k", "l_id", "l_us")
-    val r = (1 to 200).map(i => (i % 5L, 1000L + i, i * 60000000L + 30000000L))
-      .toDF("k", "r_id", "r_us")
-    (l, r)
-  }
+  private def fixture() =
+    (leftRows.toDF("k", "l_id", "l_us"), rightRows.toDF("k", "r_id", "r_us"))
 
   private def theta(l: org.apache.spark.sql.DataFrame,
                     r: org.apache.spark.sql.DataFrame) =
@@ -28,15 +23,17 @@ class RangeJoinRuleSpec extends SparkSpec {
 
   test("rewrites the interval theta-join to the bucketed equi-join") {
     val (l, r) = fixture()
-    val plain = theta(l, r).collect().map(x => (x.getLong(0), x.getLong(1))).toSet
-    withRule {
-      val df = theta(l, r)
-      val opt = df.queryExecution.optimizedPlan.toString
-      assert(opt.contains("_graft_lcell"), s"rule did not fire:\n$opt")
-      val rewritten = df.collect().map(x => (x.getLong(0), x.getLong(1))).toSet
-      assert(rewritten == plain)
-      assert(rewritten.nonEmpty)
-    }
+    val expected = (for {
+      (lk, lId, lUs) <- leftRows
+      (rk, rId, rUs) <- rightRows
+      if lk == rk && rUs > lUs && rUs <= lUs + 300000000L
+    } yield (lId, rId)).toSet
+    val df = theta(l, r)
+    val opt = df.queryExecution.optimizedPlan.toString
+    assert(opt.contains("_graft_lcell"), s"rule did not fire:\n$opt")
+    val rewritten = df.collect().map(x => (x.getLong(0), x.getLong(1))).toSet
+    assert(rewritten == expected)
+    assert(rewritten.nonEmpty)
   }
 
   test("boundary semantics survive the rewrite: (t, t+W], cross-cell pairs") {
@@ -47,23 +44,19 @@ class RangeJoinRuleSpec extends SparkSpec {
       (1L, 22L, 550000000L),  // == l_us(11)+W, next cell -> included for 11
       (1L, 23L, 550000001L),  // just past -> excluded
     ).toDF("k", "r_id", "r_us")
-    withRule {
-      val out = theta(l, r).collect().map(x => (x.getLong(0), x.getLong(1))).toSet
-      assert(out == Set((10L, 21L), (11L, 21L), (11L, 22L)))
-    }
+    val out = theta(l, r).collect().map(x => (x.getLong(0), x.getLong(1))).toSet
+    assert(out == Set((10L, 21L), (11L, 21L), (11L, 22L)))
   }
 
   test("conservative: non-matching shapes are left alone") {
     val (l, r) = fixture()
-    withRule {
-      // no upper bound -> not a bounded interval, rule must not fire
-      val df = l.join(r, l("k") === r("k") && r("r_us") > l("l_us"))
-      assert(!df.queryExecution.optimizedPlan.toString.contains("_graft_lcell"))
-      // left outer -> not inner, rule must not fire
-      val df2 = l.join(r, l("k") === r("k") &&
-        r("r_us") > l("l_us") && r("r_us") <= l("l_us") + 300000000L, "left")
-      assert(!df2.queryExecution.optimizedPlan.toString.contains("_graft_lcell"))
-    }
+    // no upper bound -> not a bounded interval, rule must not fire
+    val df = l.join(r, l("k") === r("k") && r("r_us") > l("l_us"))
+    assert(!df.queryExecution.optimizedPlan.toString.contains("_graft_lcell"))
+    // left outer -> not inner, rule must not fire
+    val df2 = l.join(r, l("k") === r("k") &&
+      r("r_us") > l("l_us") && r("r_us") <= l("l_us") + 300000000L, "left")
+    assert(!df2.queryExecution.optimizedPlan.toString.contains("_graft_lcell"))
   }
 
   test("matches RangeJoin.within on real events data") {
@@ -73,7 +66,7 @@ class RangeJoinRuleSpec extends SparkSpec {
       col("us").as("l_us"))
     val r = e.select(col("user_id").as("k"), col("event_id").as("r_id"),
       col("us").as("r_us"))
-    val viaRule = withRule { theta(l, r).count() }
+    val viaRule = theta(l, r).count()
     val e2 = Tables.events(spark, "/root/testdata/sf0.001")
     val lts = e2.select(col("user_id"), col("event_id").as("l_id"), col("ts").as("l_ts"))
     val rts = e2.select(col("user_id"), col("event_id").as("r_id"), col("ts").as("r_ts"))

@@ -154,42 +154,31 @@ class RoutedHnswSpec extends SparkSpec {
   }
 
   test("SQL lifecycle: CREATE USING ROUTED_HNSW plans the brute top-k onto the probe") {
-    import org.apache.spark.sql.SparkSession
-    // the injected parser only exists in an extensions-built session
-    // (ExtensionsSpec's device)
-    val prevActive = SparkSession.getActiveSession
-    val prevDefault = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    // the shared session is built with GraftExtensions: it has the
+    // injected GRAFT parser
     try {
       AnnCatalog.clear()
-      s2.conf.set("spark.graft.ann.minTableBytes", "0")
+      spark.conf.set("spark.graft.ann.minTableBytes", "0")
       val rng = new scala.util.Random(41)
       val centers = Array.fill(6)(Array.fill(16)(rng.nextGaussian().toFloat * 5))
-      import s2.implicits._
       val data = (0 until 1500).map { i =>
         val c = centers(i % 6)
         (i.toLong, c.map(x => (x + rng.nextGaussian() * 0.2).toFloat))
       }.toDF("id", "emb")
       val tmp = java.nio.file.Files.createTempDirectory("rhnsw-sql").toString
       data.write.mode("overwrite").parquet(s"$tmp/base")
-      val msg = s2.sql(
+      val msg = spark.sql(
         s"GRAFT CREATE ANN INDEX USING ROUTED_HNSW ON '$tmp/base' (emb, id) " +
           s"AT '$tmp/idx' OPTIONS (cells=6, nprobe=2, ef_search=1048576)")
         .head().getString(0)
       assert(msg.contains("routed_hnsw"))
-      assert(s2.sql("GRAFT SHOW ANN INDEXES").collect()
+      assert(spark.sql("GRAFT SHOW ANN INDEXES").collect()
         .exists(r => r.getString(1) == "routed_hnsw"))
       val cs = AnnCatalog.lookup(Seq(s"$tmp/base")) match {
         case Some(AnnCatalog.RoutedHnswEntry(_, _, _, c, _, _)) => c
         case other => fail(s"unexpected entry $other")
       }
-      val base = s2.read.parquet(s"$tmp/base")
+      val base = spark.read.parquet(s"$tmp/base")
       val q = data.filter(col("id") === 11L).head().getSeq[Float](1).toArray
       val planned = VectorFunctions.topK(base, "emb", "id", q, 10)
       // the rewrite fired: plan reads the index's centroid partitions,
@@ -197,17 +186,11 @@ class RoutedHnswSpec extends SparkSpec {
       val plan = planned.queryExecution.optimizedPlan.toString
       assert(plan.contains("centroid_id"), s"probe not planned:\n$plan")
       val viaRule = planned.collect().map(_.getLong(0)).toSeq
-      val direct = RoutedHnsw.search(s2, s"$tmp/idx", "id", cs, q, 10, 2,
+      val direct = RoutedHnsw.search(spark, s"$tmp/idx", "id", cs, q, 10, 2,
         HnswIndex.Params(efSearch = 1 << 20)).collect().map(_.getLong(0)).toSeq
       assert(viaRule == direct)
-      s2.sql(s"GRAFT DROP ANN INDEX ON '$tmp/base'").collect()
-    } finally {
-      AnnCatalog.clear()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
-    }
+      spark.sql(s"GRAFT DROP ANN INDEX ON '$tmp/base'").collect()
+    } finally AnnCatalog.clear()
   }
 
   test("int8 at-rest routed index: near-float recall, smaller store, " +

@@ -3,21 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session for the whole test JVM (Test / fork := true). */
+/** One shared local session for the whole test JVM (Test / fork := true),
+  * built by the mains' own factory: the same config and extensions. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(4, _
+    .appName("graft-test")
+    .config("spark.sql.warehouse.dir",
+      java.nio.file.Files.createTempDirectory("graft-wh").toString))
 }
 
 abstract class SparkSpec extends AnyFunSuite {

@@ -53,7 +53,6 @@ class VectorSpec extends SparkSpec {
   }
 
   test("SQL registration works") {
-    VectorFunctions.register(spark)
     vecs.createOrReplaceTempView("v")
     val n = spark.sql(
       "SELECT id FROM v WHERE cosine_sim(emb, array(1.0f, 0.0f, 0.0f)) > 0.9")

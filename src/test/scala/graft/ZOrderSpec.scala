@@ -42,7 +42,6 @@ class ZOrderSpec extends SparkSpec {
   }
 
   test("SQL surface: zvalue(bits, dims...) matches the Column API") {
-    GraftFunctions.register(spark)
     (0L to 50L).map(i => (i % 7, i % 11)).toDF("x", "y")
       .createOrReplaceTempView("zv_pts")
     val viaSql = spark.sql("SELECT zvalue(8, x, y) FROM zv_pts")
