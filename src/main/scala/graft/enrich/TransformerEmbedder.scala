@@ -2,6 +2,7 @@ package graft.enrich
 
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream,
   File, FileInputStream, FileOutputStream}
+import java.nio.ByteBuffer
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.SparkFiles
 import scala.collection.mutable
@@ -11,17 +12,27 @@ import scala.collection.mutable
   * (loader/service.py:39-52): token + position embeddings → N BERT-style
   * post-LN encoder layers (multi-head scaled-dot-product attention,
   * GELU feed-forward, residual + LayerNorm) → attention-mask mean
-  * pooling → L2 normalization. This closes the ModelFileEmbedder gap:
-  * nothing about the COMPUTE is a stand-in anymore — only the weights
-  * in the artifact are synthetic (no trained checkpoint ships in this
-  * offline environment; `save` exports a seeded artifact with the same
-  * layout a trained export would use).
+  * pooling → L2 normalization. Nothing about the COMPUTE is a stand-in;
+  * only the weights in the artifact are synthetic (no trained checkpoint
+  * ships in this offline environment; `save` exports a seeded artifact
+  * with the same layout a trained export would use).
   *
-  * Distribution shape is identical to [[ModelFileEmbedder]]: the
-  * closure carries the artifact NAME only; weights load once per
+  * The closure carries the artifact NAME only; weights load once per
   * executor JVM ([[TransformerEmbedder.loadCount]] is spec-asserted);
   * the artifact resolves through [[SparkFiles]] when shipped with
   * `sparkContext.addFile`.
+  *
+  * Kernel layout: a text's activations are one `Array[Float]` row per
+  * token, and each dense projection (Q/K/V, output, FFN in and out) runs
+  * once over all of the text's tokens ([[TransformerEmbedder.dense]]).
+  * Each weight row is copied once into a scratch row and then added into
+  * every token's output row, two weight rows per pass. The copy is what
+  * lets the JIT vectorize: JDK 17's C2 vectorizes a loop only when its
+  * load and store share one index (`yt(j) += a * r(j)`), while reading
+  * the weight in place (`y(j) += a * w(off + j)`) stays scalar. Every
+  * output element still starts from its bias and adds each non-zero
+  * input's product in input order, one float add at a time, so the
+  * embeddings match the per-token order bit for bit.
   *
   * Tokenization is greedy longest-match-first WordPiece against the
   * vocab table embedded in the artifact (`[UNK]`, `[CLS]`/`[SEP]`,
@@ -78,36 +89,59 @@ object TransformerEmbedder {
 
   // ------------------------------------------------------------ math
 
-  /** y(1×n) = x(1×m) · W(m×n) + b, row-major W. */
-  private def dense(x: Array[Float], w: Array[Float], b: Array[Float],
-                    m: Int, n: Int, y: Array[Float]): Unit = {
-    var j = 0
-    while (j < n) { y(j) = if (b == null) 0f else b(j); j += 1 }
+  /** y(t) = x(t) · W + b for every token row t; W is m×n row-major,
+    * each x(t) holds m floats and each y(t) n. A zero input adds nothing,
+    * as in a per-token loop; the odd last row of an odd m pairs with a
+    * zero. */
+  private[graft] def dense(x: Array[Array[Float]], w: Array[Float], b: Array[Float],
+                           m: Int, n: Int, y: Array[Array[Float]]): Unit = {
+    var t = 0
+    while (t < x.length) { System.arraycopy(b, 0, y(t), 0, n); t += 1 }
+    val r0 = new Array[Float](n)
+    val r1 = new Array[Float](n)
     var i = 0
     while (i < m) {
-      val xi = x(i)
-      if (xi != 0f) {
-        val off = i * n
-        j = 0
-        while (j < n) { y(j) += xi * w(off + j); j += 1 }
+      val pair = i + 1 < m
+      System.arraycopy(w, i * n, r0, 0, n)
+      if (pair) System.arraycopy(w, (i + 1) * n, r1, 0, n)
+      t = 0
+      while (t < x.length) {
+        val yt = y(t)
+        val a0 = x(t)(i)
+        val a1 = if (pair) x(t)(i + 1) else 0f
+        if (a0 != 0f && a1 != 0f) {
+          var j = 0
+          while (j < n) { yt(j) = yt(j) + a0 * r0(j) + a1 * r1(j); j += 1 }
+        } else if (a0 != 0f) axpy(a0, r0, yt, n)
+        else if (a1 != 0f) axpy(a1, r1, yt, n)
+        t += 1
       }
-      i += 1
+      i += 2
     }
   }
 
-  private def layerNorm(x: Array[Float], off: Int, d: Int,
-                        g: Array[Float], b: Array[Float]): Unit = {
-    var mu = 0.0
+  private def axpy(a: Float, r: Array[Float], y: Array[Float], n: Int): Unit = {
+    var j = 0
+    while (j < n) { y(j) += a * r(j); j += 1 }
+  }
+
+  /** x += r, then LayerNorm x in place. */
+  private def addNorm(x: Array[Float], r: Array[Float],
+                      g: Array[Float], b: Array[Float]): Unit = {
+    val d = x.length
     var i = 0
-    while (i < d) { mu += x(off + i); i += 1 }
+    while (i < d) { x(i) += r(i); i += 1 }
+    var mu = 0.0
+    i = 0
+    while (i < d) { mu += x(i); i += 1 }
     mu /= d
     var v = 0.0
     i = 0
-    while (i < d) { val c = x(off + i) - mu; v += c * c; i += 1 }
+    while (i < d) { val c = x(i) - mu; v += c * c; i += 1 }
     val inv = 1.0 / math.sqrt(v / d + 1e-12)
     i = 0
     while (i < d) {
-      x(off + i) = (((x(off + i) - mu) * inv) * g(i) + b(i)).toFloat
+      x(i) = (((x(i) - mu) * inv) * g(i) + b(i)).toFloat
       i += 1
     }
   }
@@ -202,48 +236,42 @@ object TransformerEmbedder {
     val h = model.nHeads
     val dh = d / h
     val scale = 1.0 / math.sqrt(dh.toDouble)
+    def rows(width: Int) = Array.fill(n)(new Array[Float](width))
 
-    // x(n×d) = tokEmb[id] + posEmb[pos]
-    var x = new Array[Float](n * d)
+    // x(t) = tokEmb[id] + posEmb[t]
+    val x = rows(d)
     var t = 0
     while (t < n) {
+      val xt = x(t)
       val te = toks(t) * d
       val pe = t * d
       var i = 0
-      while (i < d) {
-        x(t * d + i) = model.tokEmb(te + i) + model.posEmb(pe + i); i += 1
-      }
+      while (i < d) { xt(i) = model.tokEmb(te + i) + model.posEmb(pe + i); i += 1 }
       t += 1
     }
 
-    val q = new Array[Float](n * d); val k = new Array[Float](n * d)
-    val v = new Array[Float](n * d); val att = new Array[Float](n * d)
-    val row = new Array[Float](d); val tmp = new Array[Float](d)
-    val ff = new Array[Float](model.ffDim)
+    val q = rows(d); val k = rows(d); val v = rows(d)
+    val att = rows(d); val proj = rows(d); val ff = rows(model.ffDim)
     val scores = new Array[Double](n)
 
     model.layers.foreach { L =>
-      // per-token Q,K,V projections
-      t = 0
-      while (t < n) {
-        System.arraycopy(x, t * d, row, 0, d)
-        dense(row, L.wq, L.bq, d, d, tmp); System.arraycopy(tmp, 0, q, t * d, d)
-        dense(row, L.wk, L.bk, d, d, tmp); System.arraycopy(tmp, 0, k, t * d, d)
-        dense(row, L.wv, L.bv, d, d, tmp); System.arraycopy(tmp, 0, v, t * d, d)
-        t += 1
-      }
+      dense(x, L.wq, L.bq, d, d, q)
+      dense(x, L.wk, L.bk, d, d, k)
+      dense(x, L.wv, L.bv, d, d, v)
       // multi-head scaled-dot-product attention
       var head = 0
       while (head < h) {
         val ho = head * dh
         t = 0
         while (t < n) {
+          val qt = q(t)
           var s = 0
           var mx = Double.MinValue
           while (s < n) {
+            val ks = k(s)
             var dot = 0.0
             var i = 0
-            while (i < dh) { dot += q(t * d + ho + i) * k(s * d + ho + i); i += 1 }
+            while (i < dh) { dot += qt(ho + i) * ks(ho + i); i += 1 }
             val sc = dot * scale
             scores(s) = sc
             if (sc > mx) mx = sc
@@ -256,8 +284,8 @@ object TransformerEmbedder {
           while (i < dh) {
             var acc = 0.0
             s = 0
-            while (s < n) { acc += scores(s) * v(s * d + ho + i); s += 1 }
-            att(t * d + ho + i) = (acc / z).toFloat
+            while (s < n) { acc += scores(s) * v(s)(ho + i); s += 1 }
+            att(t)(ho + i) = (acc / z).toFloat
             i += 1
           }
           t += 1
@@ -265,23 +293,20 @@ object TransformerEmbedder {
         head += 1
       }
       // output projection + residual + LN1, then FFN + residual + LN2
+      dense(att, L.wo, L.bo, d, d, proj)
+      t = 0
+      while (t < n) { addNorm(x(t), proj(t), L.ln1g, L.ln1b); t += 1 }
+      dense(x, L.w1, L.b1, d, model.ffDim, ff)
       t = 0
       while (t < n) {
-        System.arraycopy(att, t * d, row, 0, d)
-        dense(row, L.wo, L.bo, d, d, tmp)
+        val ft = ff(t)
         var i = 0
-        while (i < d) { x(t * d + i) += tmp(i); i += 1 }
-        layerNorm(x, t * d, d, L.ln1g, L.ln1b)
-        System.arraycopy(x, t * d, row, 0, d)
-        dense(row, L.w1, L.b1, d, model.ffDim, ff)
-        i = 0
-        while (i < model.ffDim) { ff(i) = gelu(ff(i)).toFloat; i += 1 }
-        dense(ff, L.w2, L.b2, model.ffDim, d, tmp)
-        i = 0
-        while (i < d) { x(t * d + i) += tmp(i); i += 1 }
-        layerNorm(x, t * d, d, L.ln2g, L.ln2b)
+        while (i < model.ffDim) { ft(i) = gelu(ft(i)).toFloat; i += 1 }
         t += 1
       }
+      dense(ff, L.w2, L.b2, model.ffDim, d, proj)
+      t = 0
+      while (t < n) { addNorm(x(t), proj(t), L.ln2g, L.ln2b); t += 1 }
     }
 
     // attention-mask mean pooling (all n real tokens) + L2 normalize —
@@ -290,7 +315,7 @@ object TransformerEmbedder {
     while (i < d) {
       var acc = 0.0
       t = 0
-      while (t < n) { acc += x(t * d + i); t += 1 }
+      while (t < n) { acc += x(t)(i); t += 1 }
       out(i) = (acc / n).toFloat
       i += 1
     }
@@ -335,9 +360,10 @@ object TransformerEmbedder {
             (0 until vocab).map(i => in.readUTF() -> i).toMap
           else null
         def arr(len: Int): Array[Float] = {
+          val bytes = new Array[Byte](len * 4)
+          in.readFully(bytes)
           val a = new Array[Float](len)
-          var i = 0
-          while (i < len) { a(i) = in.readFloat(); i += 1 }
+          ByteBuffer.wrap(bytes).asFloatBuffer().get(a)
           a
         }
         val tokEmb = arr(vocab * d); val posEmb = arr(maxLen * d)

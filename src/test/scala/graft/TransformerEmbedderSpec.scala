@@ -167,10 +167,53 @@ class TransformerEmbedderSpec extends SparkSpec {
       emb.embed((1 to 80).map(i => s"w$i").mkString(" ")).toSeq)
   }
 
+  private def hex(bytes: Array[Byte]): String = bytes.map("%02x".format(_)).mkString
+
   private def sha256(path: String): String =
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(Files.readAllBytes(java.nio.file.Paths.get(path)))
-      .map("%02x".format(_)).mkString
+    hex(java.security.MessageDigest.getInstance("SHA-256")
+      .digest(Files.readAllBytes(java.nio.file.Paths.get(path))))
+
+  /** One text per tokenizer/forward path: a single word, about 10 and
+    * about 60 tokens, one truncated past maxLen, punctuation, a word
+    * that becomes [UNK] (no vocab entry for 'é'), and a blank text. */
+  private val pinnedTexts = Seq(
+    "jazz",
+    "new orleans jazz",
+    "the jazz band and the brass band played new music in the street, " +
+      "about a number of doc; then the band played on and on until the music " +
+      "faded into the new morning",
+    (1 to 90).map(i => s"w$i").mkString(" "),
+    "rock, roll & soul! (live) -- 9:30pm",
+    "café",
+    "   ")
+
+  /** SHA-256 over the big-endian float bits of every pinned text's
+    * embedding, in order. */
+  private def embeddingSha(path: String): String = {
+    val emb = new TransformerEmbedder(path)
+    val buf = java.nio.ByteBuffer.allocate(pinnedTexts.length * emb.dim * 4)
+    pinnedTexts.foreach(t => emb.embed(t).foreach(buf.putFloat))
+    hex(java.security.MessageDigest.getInstance("SHA-256").digest(buf.array()))
+  }
+
+  test("forward pass bytes: embeddings of fixed texts keep their pinned SHA-256 " +
+      "under GFT3, GFT2 and an odd-shaped artifact") {
+    val dir = Files.createTempDirectory("graft-tfm-fwd")
+    val gft3 = dir.resolve("fwd.gft3").toString
+    val gft2 = dir.resolve("fwd.gft2").toString
+    val odd = dir.resolve("odd.gft3").toString
+    TransformerEmbedder.save(gft3)
+    TransformerEmbedder.save(gft2, wordPiece = false)
+    // widths and row counts that are no multiple of any vector width
+    TransformerEmbedder.save(odd, d = 36, nHeads = 4, ffDim = 100, nLayers = 3)
+    val m = TransformerEmbedder.testLoad(gft3)
+    assert(pinnedTexts.map(t => TransformerEmbedder.tokenize(m, t).length) ==
+      Seq(3, 11, 62, 64, 31, 3, 2))
+    assert(Seq(gft3, gft2, odd).map(embeddingSha) == Seq(
+      "5c26c39019a182a0e657ad2810b3b4979f0b0504984a243670f10db24722761f",
+      "6fd2f373b278b14171cf8233b8aac61a94f89930d77a49460f41f6d949e38fb8",
+      "977935b0d68d0e58cb04361242b7b249abdb447decc76ab6d2b2d622f1165f96"))
+  }
 
   test("artifact bytes: seeded GFT3 and GFT2 artifacts keep their pinned SHA-256") {
     val dir = Files.createTempDirectory("graft-tfm-sha")
