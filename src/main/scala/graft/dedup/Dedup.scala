@@ -276,62 +276,6 @@ object Dedup {
       .select(col("id"), col("bb.band"), col("bb.bucket"))
   }
 
-  /** MinHash-LSH clustering (single-pass union approximation): each doc's
-    * cluster = min doc-id over every bucket it lands in. Not a full
-    * transitive closure (that needs iterative label propagation — see
-    * `clusterize` callers at larger rounds); deterministic. */
-  def minhashClusters(df: DataFrame, textCol: String, idCol: String,
-                      n: Int = 3, numHashes: Int = 64,
-                      rowsPerBand: Int = 4): DataFrame = {
-    val sig = minhashSignature(df, textCol, idCol, n, numHashes)
-    val buckets = lshBuckets(sig, idCol, numHashes, rowsPerBand)
-    val bucketMin = buckets
-      .withColumn("bucket_min",
-        min(col("id")).over(Window.partitionBy("band", "bucket")))
-    val clusters = bucketMin.groupBy(col("id"))
-      .agg(min(col("bucket_min")).as("cluster_id"))
-    df.select(col(idCol).as("id")).distinct()
-      .join(clusters, Seq("id"), "left")
-      .withColumn("cluster_id", coalesce(col("cluster_id"), col("id")))
-  }
-
-  /** Transitive closure of the LSH candidate graph by iterative label
-    * propagation (pure DataFrame ops — each iteration is one join + one
-    * aggregation, i.e. two shuffles on the id):
-    * every node takes the min cluster id among itself and its neighbors,
-    * repeating until fixpoint or `maxIter`. For near-dup graphs the
-    * diameter is tiny (dup chains are short), so 3-5 iterations close
-    * almost everything; the iteration count bounds worst-case cost at
-    * scale instead of looping unboundedly on a pathological chain. */
-  def propagateClusters(assignments: DataFrame, edges: DataFrame,
-                        maxIter: Int = 5): DataFrame = {
-    // assignments: (id, cluster_id); edges: (id_a, id_b) undirected.
-    // Delegates to the engine's single superstep-loop implementation
-    // (graph.Graph.minLabelFixpoint — localCheckpoint lineage
-    // truncation, limit(1) convergence probe) so the two
-    // label-propagation call sites cannot drift.
-    // cached pre-partitioned on src (see Graph.minLabelFixpoint): the
-    // edge rows shuffle once for the whole run, not once per superstep
-    val sym = edges.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionByName(edges.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .repartition(col("src"))
-      .persist()
-    try {
-      // seed = assignments ∪ edge endpoints missing from assignments
-      // (seeded with their own id): an unseeded endpoint would otherwise
-      // sit outside the convergence probe and could stop the loop before
-      // labels relay through it
-      val extra = sym.select(col("src").as("id")).distinct()
-        .join(assignments.select(col("id")), Seq("id"), "left_anti")
-        .select(col("id"), col("id").as("label"))
-      val seed = assignments.select(col("id"), col("cluster_id").as("label"))
-        .unionByName(extra)
-      val (labels, _) = graft.graph.Graph.minLabelFixpoint(seed, sym, maxIter)
-      assignments.select(col("id")).join(labels, "id")
-        .select(col("id"), col("label").as("cluster_id"))
-    } finally sym.unpersist()
-  }
-
   /** Exact connected components via driver-side union-find over a
     * COLLECTED edge list. The LSH candidate-edge set is orders of
     * magnitude smaller than the corpus (only near-dups produce edges), so
@@ -766,13 +710,6 @@ object Dedup {
     }
   }
 
-  /** Distinct hashed windows in the corpus — the at-rest index row
-    * count (diagnostics / tools.ScaleProbe stage timing). */
-  def distinctWindowCount(df: DataFrame, textCol: String, idCol: String,
-                          window: Int, stride: Int = 1): Long =
-    windowOccurrences(df, textCol, idCol, window, stride, hashKey = true)
-      .select("_win").distinct().count()
-
   /** Gaps-and-islands merge of flagged windows (`_did`, `_p`, `_e`) into
     * maximal per-document spans — the shared tail of [[crossDocSpans]]
     * and [[crossDocSpansIncremental]]. Window-partitioned by doc:
@@ -908,7 +845,7 @@ object Dedup {
     *
     * `mode = "append"` adds a batch's fingerprints WITHOUT rewriting
     * the stored ones (LSM-style): readers min-merge duplicate hashes at
-    * probe time ([[readWindowFingerprints]]), so an append is
+    * probe time, so an append is
     * O(batch), never O(corpus). Re-write with `mode = "overwrite"`
     * periodically to compact. */
   def writeWindowFingerprints(df: DataFrame, textCol: String,
@@ -1028,12 +965,6 @@ object Dedup {
     writeFpMeta(stats.sparkSession, path, window, stride, nBuckets)
   }
 
-  /** The stored fingerprints, min-merged across appended generations:
-    * (win_hash, min_did). */
-  def readWindowFingerprints(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-      .groupBy("win_hash").agg(min(col("min_did")).as("min_did"))
-
   /** Point-lookup: is this exact `window`-char passage anywhere in the
     * indexed corpus, and who owns it? Hashes the text driver-side and
     * reads ONLY the one `bucket=` partition directory the hash lands
@@ -1064,32 +995,6 @@ object Dedup {
     spark.read.parquet(path)
       .filter(col("bucket") === bucket && col("win_hash") === h)
       .groupBy("win_hash").agg(min(col("min_did")).as("min_did"))
-  }
-
-  /** Compact an appended index: collapse the generations back to one
-    * row per distinct window (the LSM merge). Staged to a sibling dir
-    * and swapped in atomically so a concurrent reader sees either the
-    * old generations or the compacted set, both semantically identical
-    * under the read-side min-merge. Run when append amplification
-    * (duplicate hashes across generations) makes probes re-shuffle
-    * more rows than the distinct set. */
-  def compactWindowFingerprints(spark: SparkSession, path: String,
-                                nBuckets: Int = 64): Unit = {
-    val meta = readFpMeta(spark, path) // survives the swap
-    val staging = path.stripSuffix("/") + "._compact"
-    readWindowFingerprints(spark, path)
-      .withColumn("bucket", pmod(col("win_hash"), lit(nBuckets.toLong)))
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(staging)
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    fs.delete(p, true)
-    require(fs.rename(new org.apache.hadoop.fs.Path(staging), p),
-      s"could not swap compacted fingerprint index into $path")
-    meta.foreach { case (w, st, _) =>
-      writeFpMeta(spark, path, w, st, nBuckets)
-    }
   }
 
   /** Flag an ARRIVING batch's duplicate spans against a stored corpus
@@ -1128,7 +1033,7 @@ object Dedup {
     val batchStats = stats.getOrElse(
         batchWindowStats(batch, textCol, idCol, window, stride))
       .select(col("win_hash").as("_win"), col("min_did").as("_batch_min"))
-    // existence is enough here — skip readWindowFingerprints' min-merge
+    // existence is enough here — skip the generations' min-merge
     // and carry only the 8-byte hash through the join
     val corpus = spark.read.parquet(indexPath)
       .select(col("win_hash").as("_win")).distinct()

@@ -63,15 +63,4 @@ object EmbedStage {
     }
     df.withColumn(outCol, embedUdf(col(textCol)))
   }
-
-  /** M5 — conditional (re-)embedding: only rows whose embedding is null
-    * get encoded; existing vectors pass through untouched. */
-  def embedIfMissing(df: DataFrame, textCol: String, embCol: String,
-                     embedder: Embedder = new HashingEmbedder()): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val missing = df.filter(col(embCol).isNull).drop(embCol)
-    val present = df.filter(col(embCol).isNotNull)
-    present.unionByName(
-      embedColumn(missing, textCol, embCol, embedder).select(df.columns.map(col).toIndexedSeq: _*))
-  }
 }

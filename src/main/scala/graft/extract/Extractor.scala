@@ -44,8 +44,8 @@ object Extractor {
 
     val venueDetails = venuePages.dropDuplicates("href")
       .select(col("href").as("venue_href"), venueUdf(col("html")).as("vd"))
-    // artist detail pages keyed by artist name (the href backfill from
-    // event pages is parseEventRelatedArtists' concern, P4)
+    // artist detail pages keyed by artist name (the reference's href
+    // backfill from event pages, P4, is not reproduced)
     val artistDetails = artistPages.dropDuplicates("artist_name")
       .select(col("artist_name"), artistUdf(col("html")).as("ad"))
 

@@ -117,16 +117,8 @@ object HtmlParse {
   }
 
   /** P4 — event detail: description = first `<p>` outside the listing
-    * chrome, related-artist links excluding the headline artist
-    * (extractor/service.py:344-445). */
+    * chrome (extractor/service.py:344-445). */
   def parseEventDescription(html: String): String =
     Para.findFirstMatchIn(Option(html).getOrElse(""))
       .map(m => strip(m.group(1))).getOrElse("")
-
-  def parseEventRelatedArtists(html: String, mainArtistHref: String): Seq[(String, String)] =
-    Anchor.findAllMatchIn(Option(html).getOrElse(""))
-      .map(m => (strip(m.group(2)), m.group(1)))
-      .filter { case (_, href) =>
-        href.startsWith("/artists") && href != mainArtistHref }
-      .toSeq.distinct
 }

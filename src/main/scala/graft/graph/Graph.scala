@@ -24,7 +24,7 @@ object Graph {
     * digits). `localCheckpoint` after each step truncates the logical
     * plan so iteration N doesn't replan (or re-execute) steps 1..N-1 —
     * THE standard Spark iterative-algorithm guard. Labels here propagate
-    * with pointer-jumping (`shortcut = true`, active from superstep 2),
+    * with pointer-jumping (active from superstep 2),
     * so convergence needs O(log diameter) supersteps — maxIter 20 covers
     * diameter ~2^18, effectively any real graph. If `maxIter` still fires before
     * convergence the labels of any unconverged component are an upper
@@ -55,7 +55,7 @@ object Graph {
         .union(und.select(col("src").as("id"))).distinct()
       val (labels, converged) =
         minLabelFixpoint(nodes.select(col("id"), col("id").as("label")),
-          und, maxIter, shortcut = true)
+          und, maxIter)
       if (!converged) {
         val msg = s"[graft] connectedComponents: maxIter=$maxIter " +
           "reached before convergence — labels are an upper bound, not a fixpoint"
@@ -69,8 +69,8 @@ object Graph {
   }
 
   /** Shared min-label superstep loop (the engine's ONE implementation of
-    * distributed label propagation — `connectedComponents` and
-    * `dedup.Dedup.propagateClusters` both drive it). `seed` must cover
+    * distributed label propagation, driven by `connectedComponents`).
+    * `seed` must cover
     * every node that should relay labels; `sym` is the symmetrized edge
     * list (`src`, `dst`). Each superstep is one join + one groupBy-min
     * sharing the id partitioning; `localCheckpoint` truncates lineage so
@@ -85,17 +85,14 @@ object Graph {
     * `src`; then the only per-superstep shuffle is the groupBy that
     * routes messages to their destination ids.
     *
-    * `shortcut = true` adds pointer-jumping after each superstep:
+    * Each superstep from the second on adds pointer-jumping:
     * label'(v) = min(label(v), label(label(v))). A label is always the
     * id of a node reachable from v, so the jump stays within v's
     * component (exactness preserved) while doubling how far labels
     * travel per superstep — convergence in O(log diameter) instead of
-    * O(diameter). One extra self-join shuffle per superstep; callers
-    * with bounded-hop semantics (propagateClusters) keep it off. */
+    * O(diameter), for one extra self-join shuffle per superstep. */
   private[graft] def minLabelFixpoint(seed: DataFrame, sym: DataFrame,
-                                      maxIter: Int,
-                                      shortcut: Boolean = false)
-      : (DataFrame, Boolean) = {
+                                      maxIter: Int): (DataFrame, Boolean) = {
     // the seed is cached, not checkpointed: iteration 1 consumes it
     // twice (msgs join + convergence probe) so the cache avoids a
     // double evaluation, while skipping an eager materialization job
@@ -126,7 +123,7 @@ object Graph {
         // it at superstep 2 means shallow graphs (near-dup chains,
         // diameter ≤ 3 — the common case) never pay it, while deep
         // graphs keep O(log diameter) convergence from step 2 onward
-        if (shortcut && stepIdx >= 2) {
+        if (stepIdx >= 2) {
           // left join: a label that is not itself a seeded node id
           // (possible for caller-provided cluster labels) just keeps its
           // current value

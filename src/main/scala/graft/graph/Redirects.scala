@@ -63,11 +63,11 @@ object Redirects {
       hops *= 2
       // MATERIALIZE each round (truncate lineage): without this, the
       // self-join references its own unexecuted subtree TWICE, so the
-      // plan doubles per round — 2^rounds copies of the base scan (the
-      // ScaleProbe `redirects` depth-64 arm read 100 s before this
-      // line, 3 s after). localCheckpoint keeps the frame usable by
-      // the caller with no explicit unpersist contract (eviction
-      // caveat in the object doc).
+      // plan doubles per round — 2^rounds copies of the base scan (a
+      // depth-64 resolution over 1M edges read 100 s before this line,
+      // 4 s after; PLANS.md records the redirects lineage blow-up).
+      // localCheckpoint keeps the frame usable by the caller with no
+      // explicit unpersist contract (eviction caveat in the object doc).
       if (hops < maxHops) t = t.localCheckpoint(true)
     }
     // unresolved = target still redirects after the rounds (cycle or

@@ -21,19 +21,6 @@ object StagingReader {
     normalize(spark.read.schema(Schemas.eventDto)
       .option("multiLine", true).json(path))
 
-  /** S4 as a STREAM: the staging directory as a Structured Streaming
-    * file source — each newly staged JSON array file becomes (part of) a
-    * micro-batch, with the same explicit schema, multiLine array parse
-    * and related-artists lifting as the batch read. Combined with
-    * `foreachBatch` + [[graft.pipeline.Pipeline.run]] this is the
-    * reference's daily loader run (scheduler loop, C4) re-expressed as
-    * an always-on incremental job: the checkpointed file log replaces
-    * the cron trigger, and each day's staged file is exactly one
-    * incremental merge. */
-  def readStagedStream(spark: SparkSession, path: String): DataFrame =
-    normalize(spark.readStream.schema(Schemas.eventDto)
-      .option("multiLine", true).json(path))
-
   /** S4 with explicit corrupt capture: a malformed staging file becomes
     * a `_corrupt_record` row (with multiLine JSON the whole file is the
     * record) routed to the returned quarantine frame — A7's
@@ -94,23 +81,6 @@ object StagingReader {
       .withColumn("event_data", col("event_data")
         .withField("related_artists_lifted",
           liftRelatedArtists(col("event_data.related_artists"))))
-
-  /** Typed form of [[readStaged]]: `Dataset[EventDto]` with the
-    * polymorphic `related_artists` already lifted to structs. */
-  def readStagedTyped(spark: SparkSession,
-                      path: String): org.apache.spark.sql.Dataset[graft.schema.EventDto] = {
-    import spark.implicits._
-    val df = readStaged(spark, path)
-    df.select(
-        col("artist_data").withField("related_artists",
-          col("artist_data.related_artists_lifted"))
-          .dropFields("related_artists_lifted").as("artist_data"),
-        col("event_data").withField("related_artists",
-          col("event_data.related_artists_lifted"))
-          .dropFields("related_artists_lifted").as("event_data"),
-        col("venue_data"), col("performance_time"), col("scrape_time"))
-      .as[graft.schema.EventDto]
-  }
 
   /** P10 — validation split (loader/service.py:808-834): artist name,
     * venue name and event_date are required; rejects go to a quarantine

@@ -28,11 +28,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  val mediaMetaSchema: StructType = StructType(Seq(
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("duration_ms", LongType)))
-
   /** Deterministic pixel formula for synthetic image payloads —
     * delegates to the shared [[SyntheticMedia.ppmPayload]] formula the
     * DuckDB oracles replay exactly. */
@@ -327,37 +322,6 @@ object Multimodal {
       b += 1
     }
     out
-  }
-
-  /** Frame-sample a video payload: Y4M payloads explode into their REAL
-    * decoded frames (every `stride`-th, with the frame's exact luma
-    * stats); other payloads keep the declared byte-stride stub via
-    * [[sampleFrames]]. Partition-wise, one decode per row. */
-  def sampleFramesDecoded(df: DataFrame, stride: Int): DataFrame = {
-    require(stride > 0, s"stride must be positive, got $stride")
-    val sample = udf { (bytes: Array[Byte]) =>
-      Option(bytes).flatMap(Y4mCodec.decode).map { v =>
-        val wh = v.width * v.height
-        (0 until v.frames.size by stride).map { f =>
-          var s = 0L; var i = 0
-          val fr = v.frames(f)
-          while (i < wh) { s += fr(i) & 0xff; i += 1 }
-          (f, s, wh)
-        }
-      }.orNull
-    }
-    val real = df.filter(col("media_type") === "video")
-      .withColumn("_frames", sample(col("content")))
-    val decoded = real.filter(col("_frames").isNotNull)
-      .select(col("doc_id"), explode(col("_frames")).as("fr"))
-      .select(col("doc_id"), col("fr._1").as("frame_idx"),
-        col("fr._2").as("luma_sum"), col("fr._3").as("n_pixels"))
-    val stub = sampleFrames(real.filter(col("_frames").isNull)
-        .drop("_frames"), stride)
-      .select(col("doc_id"), col("frame_idx"),
-        lit(null).cast("long").as("luma_sum"),
-        lit(null).cast("long").as("n_pixels"))
-    decoded.unionByName(stub)
   }
 
   /** Frame-sample a "video": emit every `stride`-th byte-window as a

@@ -72,13 +72,4 @@ object MixtureSample {
         (col("_whole") + when(col("_h") < col("_t"), 1L).otherwise(0L))
           .cast("bigint").as("n_copies"))
   }
-
-  /** Materialize the sampled corpus: every doc repeated `n_copies`
-    * times with a 0-based `copy_no` (the epoch-repeat layout). Docs
-    * with 0 copies disappear. Map-side explode — a doc never emits
-    * more than capBp/10000 + 1 rows. */
-  def emitCopies(sampled: DataFrame, idCol: String): DataFrame =
-    sampled.filter(col("n_copies") > 0)
-      .select(col(idCol), col("group"), col("n_copies"),
-        explode(sequence(lit(0L), col("n_copies") - 1)).as("copy_no"))
 }

@@ -67,18 +67,6 @@ object Parsers {
                   state: Column, postal: Column): Column =
     format_string("%s, %s, %s %s", thoroughfare, locality, state, postal)
 
-  /** P12 — URL builders (helpers.py:56-84; models.py:102-105,234-242):
-    * absolute URL from base + href, preserving already-absolute hrefs. */
-  def fullUrl(base: String, href: Column): Column =
-    when(href.isNull || length(trim(href)) === 0, lit(null).cast("string"))
-      .when(href.startsWith("http"), href)
-      .otherwise(concat(lit(base.stripSuffix("/")), lit("/"),
-        regexp_replace(href, "^/+", "")))
-
-  /** P16 — filename sanitizer (s3_service.py:24-31). */
-  def sanitizeFilename(name: Column): Column =
-    regexp_replace(regexp_replace(name, "\\.\\./", ""), "[^a-zA-Z0-9\\-_.]", "_")
-
   /** C5 — tiered cache TTL (redis_cache.py:65-96): past → 7 d, today →
     * 1 h, ≤7 d ahead → 12 h, further → 24 h. `today` is an explicit
     * parameter (never `current_date()`) so results are deterministic. */

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew-mitigated equi-join: salt the skewed (big) side into `salts`
@@ -8,10 +8,9 @@ import org.apache.spark.sql.functions._
   * rows spread over `salts` reducers instead of one straggler task.
   *
   * This is the manual form of what AQE's skew-join optimization does for
-  * sort-merge joins at runtime; it remains necessary when (a) the skew is
-  * in an aggregation key rather than a join, or (b) the join is planned
-  * broadcast-free and a single key exceeds one task's memory. Result is
-  * row-identical to `big.join(small, keys)` (inner).
+  * sort-merge joins at runtime; it remains necessary when the join is
+  * planned broadcast-free and a single key exceeds one task's memory.
+  * Result is row-identical to `big.join(small, keys)` (inner).
   */
 object SaltedJoin {
 
@@ -22,17 +21,5 @@ object SaltedJoin {
     val saltedSmall = small.withColumn("_salt",
       explode(sequence(lit(0), lit(salts - 1))))
     saltedBig.join(saltedSmall, keys :+ "_salt").drop("_salt")
-  }
-
-  /** Skewed aggregation: two-phase (salted partial → final) groupBy.
-    * `aggs` must be decomposable (sum/count/min/max); the partial phase
-    * spreads a hot group across `salts` reducers. */
-  def twoPhaseCount(df: DataFrame, keys: Seq[String], salts: Int = 8): DataFrame = {
-    val partial = df.withColumn("_salt",
-      pmod(xxhash64(monotonically_increasing_id()), lit(salts)).cast("int"))
-      .groupBy((keys :+ "_salt").map(col): _*)
-      .agg(count(lit(1)).as("_partial_n"))
-    partial.groupBy(keys.map(col): _*)
-      .agg(sum(col("_partial_n")).as("n"))
   }
 }

@@ -1515,7 +1515,7 @@ private[graft] object WarehouseQueries {
     // safety helps): case-class encoder, typed filter/map lambdas. The
     // lambdas are OPAQUE to Catalyst (no pushdown through them) — kept
     // to one narrow stage, with the relational tail back in DataFrame
-    // space; the library's typed boundary is ingest.readStagedTyped ----
+    // space ----
     QuerySpec("q110_typed_dataset", (s, d) => {
       import s.implicits._
       val ds = t(s, d, "documents")
@@ -1966,8 +1966,8 @@ private[graft] object WarehouseQueries {
 
     // ---- recursive CTE (Spark 4.1): ancestor walk over the implicit
     // binary-tree hierarchy parent(k) = k DIV 2 — the same iterative
-    // fixpoint Dedup.propagateClusters runs as DataFrame loops, here as
-    // the declarative SQL form ----
+    // fixpoint Graph.connectedComponents runs as DataFrame loops, here
+    // as the declarative SQL form ----
     QuerySpec("q85_recursive_cte", (s, d) => {
       t(s, d, "customer").createOrReplaceTempView("customer_q85")
       s.sql(

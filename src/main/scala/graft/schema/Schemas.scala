@@ -64,8 +64,6 @@ object Schemas {
 
   // --- warehouse (models.py; FIXTURES.md §4) ---
 
-  val EmbeddingDim = 64 // driver testdata dim; reference uses 384
-
   val genres: StructType = StructType(Seq(
     StructField("id", LongType, nullable = false),
     StructField("name", StringType, nullable = false),

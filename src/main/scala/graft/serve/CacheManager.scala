@@ -2,7 +2,7 @@ package graft.serve
 
 import graft.parse.Parsers
 import graft.pipeline.Warehouse
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The cache-manager stage (SURVEY.md §3.4, cache_manager/service.py):
@@ -125,13 +125,4 @@ object CacheManager {
     * table; at scale a partition-overwrite on the key column). */
   def cacheDelete(cacheTable: DataFrame, dates: Seq[String]): DataFrame =
     cacheTable.filter(!col("cache_key").isin(dates.map("events:" + _): _*))
-
-  /** The reference's double-encoding quirk (SURVEY §2.1,
-    * redis_cache.py:121-124,207): the JSON payload string is itself
-    * JSON-encoded once more before storage, so the stored value is a
-    * JSON string whose content is JSON. Reproduced byte-exact. */
-  def doubleEncodedPayload(payload: Column): Column =
-    concat(lit("\""),
-      regexp_replace(regexp_replace(payload, "\\\\", "\\\\\\\\"), "\"", "\\\\\""),
-      lit("\""))
 }

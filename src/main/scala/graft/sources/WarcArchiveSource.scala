@@ -393,3 +393,19 @@ class WarcArchiveReaderFactory(requiredSchema: StructType)
       throw new IllegalStateException(s"unknown partition $other")
   }
 }
+
+/** One precomputed aggregate row: a pushed-down aggregate answered from
+  * the index metadata becomes a single partition that emits it. */
+case class AggResultPartition(values: Array[Any]) extends InputPartition
+
+class AggResultReaderFactory extends PartitionReaderFactory {
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+    val vs = partition.asInstanceOf[AggResultPartition].values
+    new PartitionReader[InternalRow] {
+      private var consumed = false
+      override def next(): Boolean = !consumed && { consumed = true; true }
+      override def get(): InternalRow = new GenericInternalRow(vs.clone())
+      override def close(): Unit = ()
+    }
+  }
+}

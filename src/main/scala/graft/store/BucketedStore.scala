@@ -1,15 +1,12 @@
 package graft.store
 
-import graft.dims.CoalesceMerge
-import graft.dims.CoalesceMerge.Rule
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Bucketed warehouse storage (SURVEY §4 physical notes): dims and fact
   * saved as parquet tables hash-bucketed (and sorted) by their natural
-  * merge key. When both sides of a merge share the bucketing, the
-  * full-outer upsert plans as a sort-merge join with ZERO Exchange —
-  * the shuffle that normally dominates a 100 TB merge disappears, and
-  * only changed buckets rewrite.
+  * merge key. When both sides of a join share the bucketing, it plans
+  * as a sort-merge join with ZERO Exchange — the shuffle that normally
+  * dominates a 100 TB merge disappears.
   *
   * Uses the session catalog's `saveAsTable` (bucketing metadata lives in
   * the catalog; plain `parquet(path)` writes cannot carry it).
@@ -24,92 +21,4 @@ object BucketedStore {
       .sortBy(keys.head, keys.tail: _*)
       .format("parquet")
       .saveAsTable(table)
-
-  /** Hive-style date-partitioned layout (the staging/fact layout at
-    * scale, SURVEY S3's `raw_events/YYYY/MM/DD` restated): one
-    * directory per date, so a date predicate becomes PARTITION pruning —
-    * the scan lists only matching directories, no data file of any other
-    * date is opened. This is the layout under `Tables.eventsBetween`'s
-    * design note, made writable. */
-  def saveDatePartitioned(df: DataFrame, path: String, dateCol: String): Unit = {
-    import org.apache.spark.sql.functions.{col, to_date}
-    df.withColumn("p_date", to_date(col(dateCol)))
-      .write.mode("overwrite").partitionBy("p_date").parquet(path)
-  }
-
-  /** Partition-pruned single-date read of a [[saveDatePartitioned]]
-    * layout. The filter compares the PARTITION column, so it resolves
-    * during file listing (PartitionFilters in the scan), not per row. */
-  def readDate(spark: SparkSession, path: String, date: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit, to_date}
-    spark.read.parquet(path).filter(col("p_date") === to_date(lit(date)))
-  }
-
-  /** Re-write ONLY the date partitions present in `df`, leaving every
-    * other date's directory untouched (dynamic partition overwrite) —
-    * the idempotent daily re-ingest: re-running one scrape date replaces
-    * exactly that date, no matter how many years of history share the
-    * table. Static overwrite (the default) would drop ALL partitions
-    * first; at 100 TB that difference is the whole job. */
-  def overwriteDatePartitions(df: DataFrame, path: String, dateCol: String): Unit = {
-    import org.apache.spark.sql.functions.{col, to_date}
-    val spark = df.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try df.withColumn("p_date", to_date(col(dateCol)))
-      .write.mode("overwrite").partitionBy("p_date").parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
-
-  /** Compact a parquet directory's small files into `targetFiles` —
-    * the daily maintenance op of any 100 TB ingest (each streaming
-    * micro-batch / per-date append leaves files far below the ideal
-    * 128 MB-1 GB scan unit; thousands of tiny files turn scan planning
-    * and footer reads into the bottleneck). Rewrites to a staging dir,
-    * then swaps atomically-enough for a single-writer maintenance window
-    * (write staged → move live aside → move staged in → drop old).
-    * Round-robin repartition: compaction must not shuffle by key or
-    * sort — it only re-buckets bytes.
-    *
-    * For a FLAT parquet directory. A partitioned layout
-    * ([[saveDatePartitioned]]) must be compacted per partition
-    * directory — compacting its root would flatten the partition
-    * column back into the data files. */
-  def compact(spark: SparkSession, path: String, targetFiles: Int): Unit = {
-    val staged = path + ".compact-staging"
-    val old = path + ".compact-old"
-    spark.read.parquet(path).repartition(targetFiles)
-      .write.mode("overwrite").parquet(staged)
-    val fs = java.nio.file.Paths.get(path)
-    java.nio.file.Files.move(fs, java.nio.file.Paths.get(old))
-    java.nio.file.Files.move(java.nio.file.Paths.get(staged), fs)
-    def rm(p: java.io.File): Unit = {
-      Option(p.listFiles()).getOrElse(Array.empty).foreach(rm)
-      p.delete()
-    }
-    rm(new java.io.File(old))
-  }
-
-  /** Upsert `source` into the bucketed `table` and rewrite it.
-    * Bucketing `source` identically first makes the merge join
-    * co-located: no Exchange on either side. */
-  def mergeInto(spark: SparkSession, table: String, source: DataFrame,
-                keys: Seq[String], rules: Map[String, Rule] = Map.empty,
-                buckets: Int = 16): DataFrame = {
-    val sourceTable = s"${table}__incoming"
-    saveBucketed(source, sourceTable, keys, buckets)
-    val merged = CoalesceMerge.upsert(
-      spark.table(table), spark.table(sourceTable), keys, rules)
-      .drop("_action")
-    // rewrite via a staging table (can't overwrite a table being read)
-    val stagingTable = s"${table}__staged"
-    saveBucketed(merged, stagingTable, keys, buckets)
-    saveBucketed(spark.table(stagingTable), table, keys, buckets)
-    spark.sql(s"DROP TABLE IF EXISTS $sourceTable")
-    spark.sql(s"DROP TABLE IF EXISTS $stagingTable")
-    spark.table(table)
-  }
 }

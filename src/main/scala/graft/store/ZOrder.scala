@@ -1,6 +1,6 @@
 package graft.store
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
@@ -123,13 +123,4 @@ object ZOrder {
         floor((c.cast("double") - lit(lo)) / lit(hi - lo) * lit(n))
           .cast("long")))
   }
-
-  /** Cluster a frame by z-value for writing: range-partition then sort
-    * within partitions — each output file covers a tight z-range, so
-    * min-max stats on EVERY interleaved dimension become selective. */
-  def clusterByZ(df: DataFrame, z: Column, numFiles: Int): DataFrame =
-    df.withColumn("_z", z)
-      .repartitionByRange(numFiles, col("_z"))
-      .sortWithinPartitions(col("_z"))
-      .drop("_z")
 }

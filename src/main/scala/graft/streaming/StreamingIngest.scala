@@ -1,37 +1,14 @@
 package graft.streaming
 
-import graft.dims.CoalesceMerge
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-/** Event row for stateful ops. */
-case class SessionEvent(user_id: Long, us: Long, value: Double,
-    ts: java.sql.Timestamp)
-/** Event row for the burst-collapse stream (q221's streaming twin).
-  * Carries the raw `ts` alongside its integer micros: the watermark is
-  * declared on `ts`, and Spark's event-time-timeout checker requires
-  * the watermarked attribute to reach the stateful operator's input. */
-case class BurstEvent(user_id: Long, event_type: String, event_id: Long,
-    us: Long, ts: java.sql.Timestamp)
-/** Per-(user, type) burst state: the last event's timestamp. */
-case class BurstState(lastUs: Long)
-/** Burst decision for one event: `first` = it starts a new burst. */
-case class BurstDecision(user_id: Long, event_type: String, event_id: Long,
-    us: Long, first: Boolean)
-/** Per-user open-session state carried across micro-batches. */
-case class SessionState(sessionId: Long, lastUs: Long, n: Long, v: Double)
-/** A CLOSED session (emitted once, append-mode safe). */
-case class ClosedSession(user_id: Long, session_id: Long, n_events: Long,
-    session_value: Double, start_gap_us: Long)
-
 /** Structured-Streaming mode of the engine (SURVEY.md §7.5): the
-  * reference's daily Map-over-dates fan-out becomes a file-source stream;
-  * the A4 insert-if-absent merge becomes a `foreachBatch` upsert. No
-  * watermark semantics exist in the reference (batch-only), so the
-  * streaming surface is: windowed aggregation with a watermark for the
-  * serving counters, and idempotent per-batch merges for the warehouse.
+  * reference's daily Map-over-dates fan-out becomes a file-source stream.
+  * No watermark semantics exist in the reference (batch-only), so the
+  * streaming surface is windowed aggregation with a watermark for the
+  * serving counters.
   */
 object StreamingIngest {
 
@@ -41,24 +18,6 @@ object StreamingIngest {
     spark.readStream.schema(schema)
       .option("pathGlobFilter", globFilter)
       .parquet(dir)
-
-  /** Streaming form of [[graft.Tables.events]]: the events parquet stores
-    * `ts` as TIMESTAMP(NANOS), so the stream reads it as a raw long
-    * (`nanosAsLong`) and truncates to a microsecond timestamp. */
-  def eventStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.option("pathGlobFilter", "events.parquet")
-      .parquet(dir).schema
-    val raw = readStream(spark, dir, schema, globFilter = "events.parquet")
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn("ts",
-          col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => raw
-    }
-  }
 
   /** Tumbling-window event counts with a watermark (the streaming form
     * of A-agg3 per-date counts). */
@@ -72,204 +31,4 @@ object StreamingIngest {
           .as("sum_value_cents"))
       .select(unix_micros(col("window.start")).as("window_start_us"),
         col("event_type"), col("n_events"), col("sum_value_cents"))
-
-  /** Streaming exact dedup: duplicates dropped within the watermark
-    * horizon (state per key is evicted once the watermark passes — the
-    * bounded-state form of D3 for unbounded streams). */
-  def dedupStream(events: DataFrame, keys: Seq[String],
-                  watermark: String = "1 hour"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark(keys)
-
-  /** Stateful sessionization with custom state
-    * (`flatMapGroupsWithState`): per-user open-session state survives
-    * across micro-batches; a session CLOSES (and is emitted — append
-    * mode) when a later event arrives more than `gapMinutes` after it.
-    * The batch `Serving.sessionize` window plan can't do this across an
-    * unbounded stream — this is the KeyValueGroupedDataset custom-state
-    * form. State per user is O(1) (one open session), so 10⁹ users fit
-    * comfortably in the state store.
-    *
-    * `idleClose = true` is the PRODUCTION mode: a session idle past the
-    * gap (by event-time watermark, `lateness` allowance) is flushed as
-    * closed with `start_gap_us = -1` (no successor event measured the
-    * gap) and its accumulators released — trailing sessions emit without
-    * waiting for a user who never returns. A small CLOSED marker
-    * (sessionId only, n = 0) is retained per user so session ids stay
-    * monotone when the user returns; state is therefore one tiny record
-    * per user ever seen plus full accumulators for ACTIVE users only.
-    * The default keeps the original
-    * close-on-next-event contract (state retained indefinitely; a
-    * trailing session is never emitted) for replay-identity with the
-    * batch window form. */
-  def statefulSessionize(events: DataFrame, gapMinutes: Int,
-                         idleClose: Boolean = false,
-                         lateness: String = "1 hour"): Dataset[ClosedSession] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val gapUs = gapMinutes.toLong * 60L * 1000000L
-    val src = if (idleClose) events.withWatermark("ts", lateness) else events
-    val timeoutConf = if (idleClose) GroupStateTimeout.EventTimeTimeout
-                      else GroupStateTimeout.NoTimeout
-    src.select(col("user_id"), unix_micros(col("ts")).as("us"), col("value"),
-        col("ts"))
-      .as[SessionEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, ClosedSession](
-        OutputMode.Append, timeoutConf) {
-        (uid, it, state) =>
-          if (state.hasTimedOut) {
-            val st = state.get
-            // keep a CLOSED marker (n = 0) instead of remove(): dropping
-            // the state would reset the per-user counter, so a returning
-            // user would re-emit session_id = 1 and duplicate
-            // (user_id, session_id) keys. The marker is one small record
-            // per user ever seen (no accumulators, no timeout), and the
-            // n == 0 branch below resumes the monotone numbering.
-            state.update(SessionState(st.sessionId, st.lastUs, 0L, 0.0))
-            Iterator.single(
-              ClosedSession(uid, st.sessionId, st.n, st.v, -1L))
-          } else {
-            val evs = it.toSeq.sortBy(e => (e.us, e.value))
-            var st = state.getOption.getOrElse(SessionState(0L, Long.MinValue, 0L, 0.0))
-            val closed = Seq.newBuilder[ClosedSession]
-            evs.foreach { e =>
-              if (st.n == 0L) {
-                st = SessionState(st.sessionId + 1, e.us, 1L, e.value)
-              } else if (e.us - st.lastUs > gapUs) {
-                closed += ClosedSession(uid, st.sessionId, st.n, st.v, e.us - st.lastUs)
-                st = SessionState(st.sessionId + 1, e.us, 1L, e.value)
-              } else {
-                st = SessionState(st.sessionId, e.us, st.n + 1, st.v + e.value)
-              }
-            }
-            state.update(st)
-            if (idleClose && st.n > 0L)
-              state.setTimeoutTimestamp(math.max(
-                st.lastUs / 1000L + gapUs / 1000L,
-                state.getCurrentWatermarkMs()) + 1L)
-            closed.result().iterator
-          }
-      }
-  }
-
-  /** Streaming twin of q221's event burst collapse: within a
-    * (user, event_type) stream, an event ≤ `gapSeconds` after its
-    * predecessor belongs to the same burst (`first = false`); the first
-    * of each burst opens it. The batch form is one `lag` window; here
-    * the predecessor timestamp is O(1) state per key carried across
-    * micro-batches, so the stream answer equals the batch replay as long
-    * as each key's events arrive time-ordered across batches (the gap
-    * rule only looks backward — the same contract
-    * `dropDuplicatesWithinWatermark` places on late data).
-    *
-    * The DEFAULT keeps the original contract: a BurstDecision for EVERY
-    * event, however late, with one BurstState per (user, event_type)
-    * ever seen retained forever (replay-identity with the batch lag
-    * window). `bounded = true` is the opt-in production mode — it
-    * declares a watermark, so events more than `lateness` behind it are
-    * DROPPED before the operator, and a key whose last event falls
-    * `gapSeconds` + `lateness` behind the watermark expires via
-    * EventTimeTimeout (watermark-driven — no wall-clock waits, so
-    * AvailableNow/once triggers terminate promptly). Expiry cannot
-    * change a decision for any event that survives the lateness gate:
-    * by then the event-time gap to the expired predecessor exceeds
-    * `gapSeconds`, so the event opens a new burst with or without the
-    * stored timestamp — the same lateness horizon
-    * `dropDuplicatesWithinWatermark` contracts on. */
-  def burstCollapse(events: DataFrame, gapSeconds: Long,
-                    bounded: Boolean = false,
-                    lateness: String = "1 hour"): Dataset[BurstDecision] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val gapUs = gapSeconds * 1000000L
-    val src = if (bounded) events.withWatermark("ts", lateness) else events
-    val timeoutConf = if (bounded) GroupStateTimeout.EventTimeTimeout
-                      else GroupStateTimeout.NoTimeout
-    src
-      .select(col("user_id"), col("event_type"), col("event_id"),
-        unix_micros(col("ts")).as("us"), col("ts"))
-      .as[BurstEvent]
-      .groupByKey(e => (e.user_id, e.event_type))
-      .flatMapGroupsWithState[BurstState, BurstDecision](
-        OutputMode.Append, timeoutConf) {
-        (_, it, state) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val evs = it.toArray.sortBy(e => (e.us, e.event_id))
-            var last = state.getOption.map(_.lastUs)
-            val out = evs.map { e =>
-              val first = last.forall(l => e.us - l > gapUs)
-              last = Some(e.us)
-              BurstDecision(e.user_id, e.event_type, e.event_id, e.us, first)
-            }
-            last.foreach { l =>
-              state.update(BurstState(l))
-              // never earlier than the current watermark (Spark rejects
-              // that), and always past last + gap
-              if (bounded)
-                state.setTimeoutTimestamp(math.max(
-                  l / 1000L + gapSeconds * 1000L,
-                  state.getCurrentWatermarkMs()) + 1L)
-            }
-            out.iterator
-          }
-      }
-  }
-
-  /** foreachBatch insert-if-absent merge into an accumulating in-memory
-    * view — the streaming form of the A4 event merge. Each micro-batch
-    * is deduplicated and anti-joined against the accumulated state, so
-    * replays are idempotent (exactly the property the reference buys
-    * with `ON CONFLICT DO NOTHING`). */
-  def mergeStream(stream: DataFrame, keys: Seq[String], stateView: String,
-                  checkpoint: String): StreamingQuery = {
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // foreachBatch runs in a cloned session — a plain temp view would
-        // be invisible to the caller, so accumulate in a global temp view
-        val spark = batch.sparkSession
-        val prev =
-          if (spark.catalog.tableExists(s"global_temp.$stateView"))
-            spark.table(s"global_temp.$stateView")
-          else batch.limit(0)
-        val merged = CoalesceMerge.insertIfAbsent(prev, batch, keys)
-        merged.cache().count() // materialize before replacing the view
-        merged.createOrReplaceGlobalTempView(stateView)
-      }
-      .start()
-  }
-
-  /** Stream-stream inner join with event-time bounds: each purchase
-    * picks up the views of the same user within the preceding
-    * `windowMinutes` (the attribution join). Both sides carry
-    * watermarks AND the join condition bounds both times, so the state
-    * store can evict: a buffered view is dropped once the purchase
-    * watermark passes `v_ts + windowMinutes` — without the time bound
-    * the state would grow forever (the canonical stream-join pitfall).
-    * Same plan shape in batch: Spark plans the identical join for
-    * static frames, which is what StreamingSpec equates against. */
-  def attributionJoin(purchases: DataFrame, views: DataFrame,
-                      windowMinutes: Int): DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr}
-    val p = purchases
-      .select(col("user_id").as("p_user"), col("event_id").as("p_id"),
-        col("ts").as("p_ts"))
-      .withWatermark("p_ts", s"$windowMinutes minutes")
-    val v = views
-      .select(col("user_id").as("v_user"), col("event_id").as("v_id"),
-        col("ts").as("v_ts"))
-      .withWatermark("v_ts", s"${windowMinutes * 2} minutes")
-    p.join(v, expr(
-      s"""p_user = v_user AND
-         |v_ts >= p_ts - interval $windowMinutes minutes AND
-         |v_ts <= p_ts""".stripMargin))
-      .select(col("p_user").as("user_id"), col("p_id"), col("v_id"),
-        col("p_ts"), col("v_ts"))
-  }
 }

@@ -1,6 +1,5 @@
 package graft.text
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
 
 /** Gzip text-payload codec — compressed text COLUMNS, the container
@@ -59,7 +58,4 @@ object GzipText {
     * or over-budget payloads. */
   val gunzip: org.apache.spark.sql.expressions.UserDefinedFunction =
     udf { (b: Array[Byte]) => Option(b).flatMap(gunzipBytes).orNull }
-
-  def gzipCol(c: Column): Column = gzip(c)
-  def gunzipCol(c: Column): Column = gunzip(c)
 }

@@ -237,9 +237,7 @@ object TextFunctions {
       gopherRepetitionStructFromTokens(t, topWordMax, top2GramMax,
         dup3GramMax))
 
-  /** [[gopherRepetitionStruct]] over an ALREADY-BOUND token array —
-    * the form composition points use to share one tokenization with
-    * the quality rules (see [[gopherGateKeep]]). */
+  /** [[gopherRepetitionStruct]] over an ALREADY-BOUND token array. */
   def gopherRepetitionStructFromTokens(t: Column,
                                        topWordMax: Double = 0.15,
                                        top2GramMax: Double = 0.08,
@@ -259,18 +257,6 @@ object TextFunctions {
           (topWord <= topWordMax && top2 <= top2GramMax &&
             dup3 <= dup3GramMax).as("keep"))
       }
-    }
-
-  /** BOTH Gopher gates (repetition + quality) over ONE tokenization —
-    * the curation scan-pass form (q317/q319): evaluating the two
-    * struct forms separately splits the text twice per row; this
-    * binds the token array once and extracts only the two keep flags
-    * (Catalyst reduces struct-field-of-literal-struct to the flag
-    * expressions, so nothing else is computed). */
-  def gopherGateKeep(text: Column): Column =
-    bound(split(trim(text), "\\s+")) { t =>
-      gopherRepetitionStructFromTokens(t)("keep") &&
-        gopherQualityStructFromTokens(t)("keep")
     }
 
   // ---- JVM twin of the gate booleans (round-12 optimization) ----
@@ -365,9 +351,10 @@ object TextFunctions {
     (repKeep, qualKeep)
   }
 
-  /** [[gopherGateKeep]] as one nondeterministic JVM call per document —
-    * the curation-scan form (q317/q319). NULL text gates NULL (filter
-    * drops it), like the HOF form. */
+  /** Both Gopher gates' keep flags (repetition AND quality) as one
+    * nondeterministic JVM call per document — the curation-scan form
+    * (q317/q319). NULL text gates NULL (filter drops it), like the HOF
+    * struct forms. */
   lazy val gopherGateKeepFastUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
     udf { (text: String) =>
       if (text == null) None
@@ -416,8 +403,7 @@ object TextFunctions {
     bound(split(trim(text), "\\s+"))(t =>
       gopherQualityStructFromTokens(t, minWords, maxWords))
 
-  /** [[gopherQualityStruct]] over an ALREADY-BOUND token array (the
-    * [[gopherGateKeep]] sharing point). */
+  /** [[gopherQualityStruct]] over an ALREADY-BOUND token array. */
   def gopherQualityStructFromTokens(t: Column, minWords: Long = 30,
                                     maxWords: Long = 100000): Column = {
     val stopHits = bound(transform(t, x => lower(x))) { lt =>

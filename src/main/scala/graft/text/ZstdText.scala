@@ -1,6 +1,5 @@
 package graft.text
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
 
 /** Zstandard text-payload codec (RFC 8878) — the compression modern
@@ -55,7 +54,4 @@ object ZstdText {
     * or over-budget payloads. */
   val unzstd: org.apache.spark.sql.expressions.UserDefinedFunction =
     udf { (b: Array[Byte]) => Option(b).flatMap(unzstdBytes).orNull }
-
-  def zstdCol(c: Column): Column = zstd(c)
-  def unzstdCol(c: Column): Column = unzstd(c)
 }

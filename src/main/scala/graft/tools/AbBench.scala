@@ -30,8 +30,9 @@ object AbBench {
     // the serve-time contract. Two corpus sizes: the raw sf (tiny —
     // EXPECTED to favor brute force; this measurement is what the
     // spark.graft.ann.minTableBytes cost-gate default is calibrated
-    // against) and an AnnScale-style replicated corpus where the probe
-    // must win for the 100 TB story to hold.
+    // against) and a jittered replicated corpus (PLANS.md, "ANN
+    // recall/latency at 10×") where the probe must win for the 100 TB
+    // story to hold.
     annPair("ann_filtered_topk_raw", copies = 1),
     annPair("ann_filtered_topk_50x", copies = 50),
     annPair("ann_filtered_ivf_50x", copies = 50, kind = "ivf"),
@@ -134,8 +135,9 @@ object AbBench {
           .createTempDirectory("graft-ab-ann").toString
         val emb = s.read.parquet(s"$d/embeddings.parquet")
           .select(col("vec_id"), col("embedding"))
-        // deterministic per-copy jitter (the AnnScale replication) so a
-        // scaled corpus has distinct vectors in the same neighborhoods
+        // deterministic per-copy jitter (PLANS.md, "ANN recall/latency
+        // at 10×") so a scaled corpus has distinct vectors in the same
+        // neighborhoods
         val OFF = 100000000L
         val perturb = udf { (v: Seq[Float], id: Long, c: Long) =>
           val out = new Array[Float](v.length)

@@ -181,17 +181,6 @@ object PqIndex {
       .orderBy(col("score").desc, col(idCol))
       .limit(k)
 
-  /** IVF-PQ probe: route to the `nProbe` best cells (partition pruning
-    * on the at-rest layout), ADC-score only those cells' codes. */
-  def searchIvfAdc(codes: DataFrame, idCol: String,
-                   cs: Array[(Int, Array[Float])], cb: Codebook,
-                   query: Array[Float], k: Int, nProbe: Int): DataFrame = {
-    val cells = IvfIndex.routeCellsFor(cs, query, nProbe)
-    searchAdc(codes.filter(col("centroid_id")
-        .isin(cells.map(Integer.valueOf).toIndexedSeq: _*)),
-      idCol, cb, query, k)
-  }
-
   /** Incrementally ADD a batch to a stored IVF-PQ index: route each new
     * row to its cell, encode with the FROZEN codebook, append to that
     * cell's partition directory. Codes are per-row deterministic

@@ -455,32 +455,6 @@ object RoutedHnsw {
 
   // -------------------------------------------------- maintenance
 
-  /** Measured end-to-end recall of a stored routed index against the
-    * CURRENT base vectors over deterministic sample queries — the
-    * routed family's health probe, composing BOTH failure modes in one
-    * number: cell-routing recall (degrades with centroid drift — what
-    * [[maintainIndex]]'s skew/intra-distance stats see) × in-cell graph
-    * recall (degrades as salted sub-graphs fill with adds — what
-    * [[HnswIndex.graphIndexRecall]] sees for the plain family). Use it
-    * as the measured gate in front of [[maintainIndex]], the way
-    * [[PqIndex.maintainIndex]] gates on [[PqIndex.adcRecall]]. */
-  def routedIndexRecall(spark: SparkSession, path: String,
-                        base: DataFrame, embCol: String, idCol: String,
-                        cs: Array[(Int, Array[Float])], nProbe: Int,
-                        nQueries: Int = 5, k: Int = 20,
-                        params: HnswIndex.Params = HnswIndex.Params())
-      : Double = {
-    val qs = IvfIndex.centroids(base, embCol, idCol, nQueries).map(_._2)
-    val per = qs.map { q =>
-      val exact = VectorFunctions.topK(base, embCol, idCol, q, k)
-        .collect().map(_.get(0)).toSet
-      val got = search(spark, path, idCol, cs, q, k, nProbe, params)
-        .collect().map(_.get(0)).toSet
-      (exact intersect got).size.toDouble / k
-    }
-    per.sum / per.length
-  }
-
   /** Decode the stored graphs back to raw rows — the graphs carry their
     * vectors, so maintenance never needs a separate copy of the corpus.
     * Output columns: (centroid_id, `idCol`, `embCol`). */

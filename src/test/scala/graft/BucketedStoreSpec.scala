@@ -21,17 +21,6 @@ class BucketedStoreSpec extends SparkSpec {
         s"expected co-located join, plan was:\n$plan")
       assert(joined.count() == 2000)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
-
-  test("bucketed mergeInto: upsert without shuffling the target") {
-    val target = Seq((1L, "old"), (2L, "keep")).toDF("id", "v")
-    BucketedStore.saveBucketed(target, "bk_t", Seq("id"), buckets = 4)
-    val source = Seq((1L, "new"), (3L, "ins")).toDF("id", "v")
-    val merged = BucketedStore.mergeInto(spark, "bk_t", source, Seq("id"),
-      buckets = 4)
-    val got = merged.orderBy("id").collect().map(r => (r.getLong(0), r.getString(1)))
-    assert(got.toSeq == Seq((1L, "new"), (2L, "keep"), (3L, "ins")))
-    spark.sql("DROP TABLE IF EXISTS bk_t")
     spark.sql("DROP TABLE IF EXISTS bk_a")
     spark.sql("DROP TABLE IF EXISTS bk_b")
   }
@@ -47,89 +36,14 @@ class BucketedStoreSpec extends SparkSpec {
     assert(plain.except(salted).count() == 0)
   }
 
-  test("two-phase salted aggregation equals direct groupBy") {
-    val df = (1 to 5000).map(i => (if (i % 3 == 0) "hot" else s"k$i", i))
-      .toDF("k", "v")
-    val direct = df.groupBy("k").agg(count(lit(1)).as("n"))
-    val salted = SaltedJoin.twoPhaseCount(df, Seq("k"))
-    assert(salted.except(direct).count() == 0)
-    assert(direct.except(salted).count() == 0)
-  }
-
-  test("date-partitioned layout: a date filter is PARTITION pruning") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString
-    val df = Seq(
-      (1L, "2024-01-01 10:00:00", "a"),
-      (2L, "2024-01-02 11:00:00", "b"),
-      (3L, "2024-01-02 12:00:00", "c"),
-      (4L, "2024-01-03 13:00:00", "d"),
-    ).toDF("id", "ts", "v").withColumn("ts", to_timestamp(col("ts")))
-    BucketedStore.saveDatePartitioned(df, dir, "ts")
-    val one = BucketedStore.readDate(spark, dir, "2024-01-02")
-    // execute THIS plan so its scan metrics populate
-    assert(one.collect().map(_.getAs[Long]("id")).sorted.toSeq == Seq(2L, 3L))
-    // the predicate must land in PartitionFilters (file-listing time),
-    // not PushedFilters (row time)
-    val scan = one.queryExecution.executedPlan.collectLeaves().map(_.toString)
-      .mkString("\n")
-    assert(scan.contains("PartitionFilters") &&
-      scan.replaceAll("(?s).*PartitionFilters: \\[([^\\]]*)\\].*", "$1")
-        .contains("p_date"), s"no partition filter in:\n$scan")
-    // only the matching date directory's files are read (numFiles metric
-    // of the executed scan; inputFiles would show the unpruned listing)
-    val numFiles = one.queryExecution.executedPlan.collectLeaves()
-      .collectFirst {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.metrics("numFiles").value
-      }
-    assert(numFiles.contains(2L), s"numFiles=$numFiles")
-  }
-
-  test("dynamic partition overwrite replaces only the re-run date") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("dyn").toString + "/t"
-    val day1 = Seq(("2024-01-01 10:00:00", 1L), ("2024-01-01 11:00:00", 2L))
-    val day2 = Seq(("2024-01-02 10:00:00", 3L))
-    graft.store.BucketedStore.overwriteDatePartitions(
-      (day1 ++ day2).toDF("ts", "v"), dir, "ts")
-    assert(spark.read.parquet(dir).count() == 3)
-
-    // re-run ONLY day 1 with corrected rows
-    val rerun = Seq(("2024-01-01 10:00:00", 10L)).toDF("ts", "v")
-    graft.store.BucketedStore.overwriteDatePartitions(rerun, dir, "ts")
-    val after = spark.read.parquet(dir)
-      .select(col("v"), col("p_date").cast("string"))
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    // day 1 fully replaced (both old rows gone), day 2 untouched
-    assert(after == Set((10L, "2024-01-01"), (3L, "2024-01-02")), after.toString)
-  }
-
-  test("compact rewrites many small files into targetFiles, content intact") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("compact").toString + "/t"
-    val df = (1 to 5000).map(i => (i.toLong, s"v$i")).toDF("id", "v")
-    df.repartition(64).write.mode("overwrite").parquet(dir)
-    def parquetFiles = Option(new java.io.File(dir).listFiles())
-      .getOrElse(Array.empty).count(_.getName.endsWith(".parquet"))
-    assert(parquetFiles == 64)
-    graft.store.BucketedStore.compact(spark, dir, targetFiles = 4)
-    assert(parquetFiles == 4, s"files after compact: $parquetFiles")
-    val back = spark.read.parquet(dir)
-    assert(back.count() == 5000)
-    assert(back.agg(org.apache.spark.sql.functions.sum("id")).head().getLong(0)
-      == (1 to 5000).map(_.toLong).sum)
-    // no staging/old leftovers
-    val parent = new java.io.File(dir).getParentFile.listFiles().map(_.getName)
-    assert(!parent.exists(n => n.contains("compact-staging") || n.contains("compact-old")))
-  }
-
   test("dynamic partition pruning: a filtered dim prunes fact partitions at runtime") {
     val dir = java.nio.file.Files.createTempDirectory("graft-dpp").toString
     val fact = Seq(
       ("2024-01-01", 1L, 10.0), ("2024-01-02", 2L, 20.0),
       ("2024-01-03", 3L, 30.0), ("2024-01-04", 4L, 40.0),
     ).toDF("day", "k", "v").withColumn("day", to_date(col("day")))
-    BucketedStore.saveDatePartitioned(fact, dir, "day")
+    fact.withColumn("p_date", col("day"))
+      .write.mode("overwrite").partitionBy("p_date").parquet(dir)
     // dim: only one qualifying date, discovered at RUNTIME through the
     // join (the fact filter is not static — DPP must inject it)
     // the dim must be a REAL scan: a filter over a local Seq is

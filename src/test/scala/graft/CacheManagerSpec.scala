@@ -95,15 +95,6 @@ class CacheManagerSpec extends SparkSpec {
     val afterDelete = CacheManager.cacheDelete(cache, Seq("2025-03-21"))
     assert(CacheManager.cacheGet(afterDelete, "2025-03-21").count() == 0)
     assert(afterDelete.count() == 1)
-
-    // double-encoded payload: decoding ONE json layer yields the original
-    val row = cache.withColumn("dbl",
-      CacheManager.doubleEncodedPayload(col("payload_json")))
-      .filter(col("cache_key") === "events:2025-03-21").head()
-    val original = row.getAs[String]("payload_json")
-    val doubled = row.getAs[String]("dbl")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    assert(mapper.readValue(doubled, classOf[String]) == original)
   }
 
   test("empty day still produces a cache row with n_events=0") {

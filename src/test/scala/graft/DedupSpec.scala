@@ -36,24 +36,6 @@ class DedupSpec extends SparkSpec {
     assert(!pairs.contains((1L, 5L)))
   }
 
-  test("minhash LSH clusters identical docs together, singletons alone") {
-    val clusters = Dedup.minhashClusters(docs, "text", "doc_id")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(clusters(1L) == clusters(2L))
-    assert(clusters(5L) != clusters(1L))
-  }
-
-  test("label propagation closes chains the single-pass clustering misses") {
-    // chain: 1-2, 2-3, 3-4 — transitive closure must put all in cluster 1
-    val assignments = Seq(1L, 2L, 3L, 4L, 9L).toDF("id")
-      .withColumn("cluster_id", col("id"))
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("id_a", "id_b")
-    val out = Dedup.propagateClusters(assignments, edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(out(1L) == 1L && out(2L) == 1L && out(3L) == 1L && out(4L) == 1L)
-    assert(out(9L) == 9L) // isolated node untouched
-  }
-
   test("transitive minhash clustering groups chained near-dups") {
     val chain = Seq(
       (1L, "aa bb cc dd ee ff gg hh ii jj kk ll"),
@@ -367,6 +349,11 @@ class DedupSpec extends SparkSpec {
     assert(incr.nonEmpty)
   }
 
+  /** The stored fingerprints, min-merged across appended generations:
+    * (win_hash, min_did). */
+  private def fingerprints(path: String) = spark.read.parquet(path)
+    .groupBy("win_hash").agg(min(col("min_did")).as("min_did"))
+
   test("incremental ExactSubstr: appended generations min-merge; " +
       "batch-internal sharing flags only the later doc") {
     val idx = java.nio.file.Files
@@ -389,23 +376,19 @@ class DedupSpec extends SparkSpec {
     assert(out.map(_._1).toSet == Set(10L, 12L))
     assert(out.find(_._1 == 10L).get == ((10L, 1L, 60L))) // whole doc
     // fingerprint reader min-merges across the two generations
-    val fp = Dedup.readWindowFingerprints(spark, idx)
+    val fp = fingerprints(idx)
     assert(fp.filter(col("min_did") === 1L).count() > 0)
     assert(fp.filter(col("min_did") === 2L).count() > 0)
     assert(fp.groupBy("win_hash").count()
       .filter(col("count") > 1).count() == 0L)
-    // LSM compaction: physical rows shrink to the distinct set, the
-    // logical fingerprints are unchanged, probes still flag doc 10
+    // a second append duplicates hashes physically; the reader's
+    // min-merge keeps the logical fingerprints, probes still flag doc 10
     val before = fp.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     Dedup.appendWindowFingerprints(batch, "text", "doc_id", idx, window = 20)
     assert(spark.read.parquet(idx).count() >
       spark.read.parquet(idx).select("win_hash").distinct().count())
-    Dedup.compactWindowFingerprints(spark, idx)
-    val after = spark.read.parquet(idx)
-    assert(after.count() ==
-      after.select("win_hash").distinct().count())
-    val merged = Dedup.readWindowFingerprints(spark, idx).collect()
+    val merged = fingerprints(idx).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     // old hashes keep their old owners (batch ids are higher), and the
     // batch's novel windows joined the set
@@ -622,11 +605,5 @@ class DedupSpec extends SparkSpec {
     }
     assert(Dedup.lookupWindow(spark, idx, "A" * 20, nBuckets = 7)
       .count() == 1L)
-    // compaction preserves the metadata stamp
-    Dedup.appendWindowFingerprints(
-      Seq((2L, "B" * 60)).toDF("doc_id", "text"), "text", "doc_id", idx,
-      window = 20)
-    Dedup.compactWindowFingerprints(spark, idx)
-    assert(Dedup.readFpMeta(spark, idx).contains((20, 1, 64)))
   }
 }

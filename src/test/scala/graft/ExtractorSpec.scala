@@ -88,8 +88,6 @@ class ExtractorSpec extends SparkSpec {
     val html = """<p>A great night.</p><a href="/artists/1">Main</a>
                  |<a href="/artists/2">Guest</a><a href="/venues/9">V</a>""".stripMargin
     assert(HtmlParse.parseEventDescription(html) == "A great night.")
-    assert(HtmlParse.parseEventRelatedArtists(html, "/artists/1") ==
-      Seq(("Guest", "/artists/2")))
   }
 
   test("D1 + dataflow: listing -> dedup'd frontier -> joined EventDTO frame") {

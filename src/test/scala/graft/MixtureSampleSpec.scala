@@ -49,22 +49,6 @@ class MixtureSampleSpec extends SparkSpec {
     out.unpersist()
   }
 
-  test("emitCopies materializes exactly n_copies rows per doc, 0-based") {
-    val sampled = MixtureSample.temperatureSample(corpus, col("src"), "doc_id")
-    val emitted = MixtureSample.emitCopies(sampled, "doc_id")
-    val perDoc = emitted.groupBy("doc_id")
-      .agg(count(lit(1)).as("rows"), min("copy_no").as("lo"),
-        max("copy_no").as("hi"))
-      .join(sampled, "doc_id")
-    assert(perDoc.filter(col("rows") =!= col("n_copies")).count() == 0L)
-    assert(perDoc.filter(col("lo") =!= 0L ||
-      col("hi") =!= col("n_copies") - 1).count() == 0L)
-    // dropped docs (n_copies = 0) are absent
-    val dropped = sampled.filter(col("n_copies") === 0).count()
-    assert(emitted.select("doc_id").distinct().count() ==
-      sampled.count() - dropped)
-  }
-
   test("deterministic: two runs produce identical rows") {
     def run() = MixtureSample.temperatureSample(corpus, col("src"), "doc_id")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),

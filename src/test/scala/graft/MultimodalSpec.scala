@@ -277,18 +277,6 @@ class MultimodalSpec extends SparkSpec {
     val got = Multimodal.extractFeatures(df)
       .select("features").as[Seq[Float]].head()
     assert(got == feat.toSeq)
-    // sampleFramesDecoded explodes REAL frames with exact luma sums
-    val sampled = Multimodal.sampleFramesDecoded(df, stride = 2)
-      .orderBy("frame_idx")
-      .select("frame_idx", "luma_sum", "n_pixels")
-      .as[(Int, Long, Long)].collect().toSeq
-    def lsum(f: Int) = (0 until 4).map(i => frames(f)(i) & 0xff).sum.toLong
-    assert(sampled == Seq((0, lsum(0), 4L), (2, lsum(2), 4L), (4, lsum(4), 4L)))
-    // non-Y4M video payloads keep the byte-stride stub (null luma stats)
-    val stub = Multimodal.sampleFramesDecoded(
-      Seq((3L, "video", Array.fill[Byte](256)(7))).toDF(
-        "doc_id", "media_type", "content"), stride = 2)
-    assert(stub.count() > 0 && stub.filter(col("luma_sum").isNotNull).count() == 0)
   }
 
   test("mediaFeatures UDF equals the batch extractFeatures dispatch") {

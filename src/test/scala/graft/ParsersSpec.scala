@@ -63,22 +63,6 @@ class ParsersSpec extends SparkSpec {
     assert(got(2) == ((true, false)))
   }
 
-  test("P16 filename sanitizer strips traversal and odd chars") {
-    val got = Seq("../../etc/pass wd!.json").toDF("f")
-      .select(Parsers.sanitizeFilename($"f")).as[String].head()
-    assert(got == "etc_pass_wd_.json")
-  }
-
-  test("P12 URL builder: relative joined, absolute kept, blank null") {
-    val got = Seq("/venues/123", "https://x.com/a", "", "artists/9").toDF("h")
-      .select(Parsers.fullUrl("https://wwoz.org/", $"h"))
-      .as[Option[String]].collect()
-    assert(got(0).contains("https://wwoz.org/venues/123"))
-    assert(got(1).contains("https://x.com/a"))
-    assert(got(2).isEmpty)
-    assert(got(3).contains("https://wwoz.org/artists/9"))
-  }
-
   test("M2 embed-text composition skips empty parts") {
     val df = Seq(("Kermit Ruffins", "Trumpet player", "", "Jazz, Funk")).toDF(
       "name", "desc", "website", "genres")

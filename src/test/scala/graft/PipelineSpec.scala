@@ -116,21 +116,6 @@ class PipelineSpec extends SparkSpec {
     assert(naive.filter(col("artist_data").isNull).count() == 1)
   }
 
-  test("typed Dataset[EventDto] ingest surface") {
-    val ds = StagingReader.readStagedTyped(spark, stagingDir)
-    val dtos = ds.collect()
-    assert(dtos.length == 3)
-    val ellis = dtos.find(_.artist_data.exists(
-      _.name.contains("Ellis Marsalis Quartet"))).get
-    // struct-form related artist kept its href; string form lifted w/ null
-    val rel = ellis.artist_data.get.related_artists.get.head
-    assert(rel.name.contains("Kermit Ruffins") &&
-      rel.wwoz_artist_href.contains("/artists/789"))
-    val evRel = ellis.event_data.get.related_artists.get.head
-    assert(evRel.name.contains("Kermit Ruffins") && evRel.wwoz_artist_href.isEmpty)
-    assert(ellis.venue_data.get.postal_code.contains("70116"))
-  }
-
   test("pipeline run: dims, edges, fact, quarantine, summary") {
     val w = Pipeline.run(spark, staged, Pipeline.emptyWarehouse(spark),
       today = "2025-03-20")

@@ -58,17 +58,6 @@ class PropertySpec extends SparkSpec {
     cs.zip(got).foreach { case (diff, g) => assert(g == model(diff), s"diff=$diff") }
   }
 
-  test("P16 property: sanitized filenames contain only safe chars") {
-    val gen = Gen.listOfN(12, Gen.oneOf(Gen.alphaNumChar, Gen.oneOf(
-      '/', '.', '!', ' ', '$', '\\', '-', '_'))).map(_.mkString)
-    val cs = cases(gen).map(s => "../" + s)
-    val got = cs.toDF("f").select(Parsers.sanitizeFilename($"f")).as[String].collect()
-    got.foreach { s =>
-      assert(s.matches("[a-zA-Z0-9\\-_.]*"), s"got=$s")
-      assert(!s.contains("../"))
-    }
-  }
-
   test("P5 property: any h:mm am/pm round-trips; garbage defaults to 12:00am") {
     val timeGen = for {
       h <- Gen.choose(1, 12); m <- Gen.choose(0, 59)

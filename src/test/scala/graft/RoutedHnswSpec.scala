@@ -345,36 +345,6 @@ class RoutedHnswSpec extends SparkSpec {
     assert((ann intersect exact).size >= 9)
   }
 
-  test("routedIndexRecall: the measured health probe reads full-route " +
-       "recall high and starved-route recall low") {
-    // 16 hash-sampled centroids over 8 natural clusters: every cluster
-    // splits across ~2 cells, so single-cell routing misses part of
-    // each query's true neighborhood — the degradation the probe must
-    // SEE (the way adcRecall sees codebook drift)
-    val (data, _) = clustered(4000, 8, 16, seed = 71, spread = 0.4)
-    val cs = IvfIndex.centroids(data, "emb", "id", 16)
-    val dir = java.nio.file.Files.createTempDirectory("rhnsw-hp").toString + "/idx"
-    RoutedHnsw.writeRoutedIndex(data, "emb", "id", dir, cs,
-      HnswIndex.Params(m = 8, efConstruction = 64))
-    val healthy = RoutedHnsw.routedIndexRecall(spark, dir, data, "emb",
-      "id", cs, nProbe = 16, nQueries = 4, k = 10,
-      HnswIndex.Params(efSearch = 1 << 20))
-    // exhaustive ef + all cells probed == exact search == recall 1.0
-    assert(healthy == 1.0, s"full-route recall read $healthy")
-    // drifted routing metadata (centroid vectors no longer describing
-    // the cells' contents — permute them against their cids) starves
-    // low-nProbe routing; the metric must SEE that, the way adcRecall
-    // sees codebook drift
-    val drifted = cs.indices.map { i =>
-      (cs(i)._1, cs((i + 7) % cs.length)._2)
-    }.toArray
-    val starved = RoutedHnsw.routedIndexRecall(spark, dir, data, "emb",
-      "id", drifted, nProbe = 2, nQueries = 4, k = 10,
-      HnswIndex.Params(efSearch = 1 << 20))
-    assert(starved < healthy,
-      s"drifted-route recall $starved not below full-route $healthy")
-  }
-
   test("writeRoutedIndexPair == two writeRoutedIndex calls, blob for blob") {
     // r13 (q186): both variants from one persisted routing pass must be
     // indistinguishable at rest from two independent builds — same

@@ -61,15 +61,4 @@ class ServingSpec extends SparkSpec {
     assert(!out(0).isNullAt(2) && out(0).getSeq[Float](2).length == 64)
     assert(out(1).isNullAt(2))
   }
-
-  test("embedIfMissing only fills nulls (M5 conditional re-embed)") {
-    val existing = Array.fill(64)(0.5f)
-    val df = Seq(
-      (1L, "text one", Option(existing)),
-      (2L, "text two", Option.empty[Array[Float]]),
-    ).toDF("id", "text", "emb")
-    val out = EmbedStage.embedIfMissing(df, "text", "emb").orderBy("id").collect()
-    assert(out(0).getSeq[Float](2).forall(_ == 0.5f)) // untouched
-    assert(!out(1).isNullAt(2))                        // filled
-  }
 }

@@ -1,18 +1,50 @@
 package graft
 
+import graft.ingest.StagingReader
+import graft.schema.Schemas
 import graft.streaming.StreamingIngest
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
-/** Structured-Streaming surface: file-source stream, windowed counts with
-  * watermark, and the foreachBatch insert-if-absent merge (streaming A4). */
+/** Structured-Streaming surface: file-source streams, windowed counts
+  * with watermark, streaming sketch aggregates and foreachBatch
+  * pipelines that must equal their batch runs. */
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The events parquet as a file-source stream, with `ts` normalized
+    * the way [[Tables.events]] normalizes the batch read. */
+  private def eventStream(dir: String): DataFrame = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val schema = spark.read.option("pathGlobFilter", "events.parquet")
+      .parquet(dir).schema
+    val raw = StreamingIngest.readStream(spark, dir, schema,
+      globFilter = "events.parquet")
+    raw.schema("ts").dataType match {
+      case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
+      case _ => raw
+    }
+  }
+
+  /** A staging directory as a file-source stream: the multiLine
+    * EventDTO read of [[StagingReader.readStaged]], related artists
+    * lifted the same way. */
+  private def stagedStream(dir: String): DataFrame = {
+    def lifted(c: String) = col(c).withField("related_artists_lifted",
+      StagingReader.liftRelatedArtists(col(s"$c.related_artists")))
+    spark.readStream.schema(Schemas.eventDto)
+      .option("multiLine", true).json(dir)
+      .withColumn("artist_data", lifted("artist_data"))
+      .withColumn("event_data", lifted("event_data"))
+  }
 
   test("windowed counts over a file stream equal the batch aggregation") {
     val sf = "/root/testdata/sf0.001"
     val batchEvents = Tables.events(spark, sf)
-    val streamed = StreamingIngest.eventStream(spark, sf)
+    val streamed = eventStream(sf)
     val agg = StreamingIngest.windowedCounts(streamed)
     val ckpt = Files.createTempDirectory("graft-ckpt").toString
     val q = agg.writeStream.outputMode("complete")
@@ -26,132 +58,6 @@ class StreamingSpec extends SparkSpec {
       .orderBy("window_start_us", "event_type").collect()
     assert(got.length == want.length)
     assert(got.zip(want).forall { case (a, b) => a == b })
-  }
-
-  test("flatMapGroupsWithState: sessions close across micro-batches") {
-    val dir = Files.createTempDirectory("graft-sess-src")
-    val ckpt = Files.createTempDirectory("graft-sess-ckpt").toString
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    // batch 1: user 7 has an open session
-    Seq((7L, ts("2024-01-05 10:00:00"), 1.0), (7L, ts("2024-01-05 10:10:00"), 2.0))
-      .toDF("user_id", "ts", "value")
-      .write.mode("overwrite").parquet(dir.toString)
-    val schema = spark.read.parquet(dir.toString).schema
-
-    val collected = scala.collection.mutable.ArrayBuffer[graft.streaming.ClosedSession]()
-    def runOnce(): Unit = {
-      val stream = StreamingIngest.readStream(spark, dir.toString, schema)
-      val q = StreamingIngest.statefulSessionize(stream, gapMinutes = 30)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch {
-          (b: org.apache.spark.sql.Dataset[graft.streaming.ClosedSession], _: Long) =>
-            collected.synchronized { collected ++= b.collect() }: Unit
-        }
-        .start()
-      q.awaitTermination()
-    }
-    runOnce()
-    assert(collected.isEmpty) // session still open
-
-    // batch 2: an event past the gap closes session 1 (state survived
-    // the restart via the checkpointed state store)
-    Seq((7L, ts("2024-01-05 12:00:00"), 5.0)).toDF("user_id", "ts", "value")
-      .write.mode("append").parquet(dir.toString)
-    runOnce()
-    assert(collected.length == 1)
-    val r = collected.head
-    assert(r.user_id == 7L && r.session_id == 1L)
-    assert(r.n_events == 2L && r.session_value == 3.0)
-  }
-
-  test("statefulSessionize(idleClose): trailing sessions flush on " +
-      "event-time idle timeout and state is evicted") {
-    val dir = Files.createTempDirectory("graft-sessidle-src")
-    val ckpt = Files.createTempDirectory("graft-sessidle-ckpt").toString
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    // batch 1: user 7 opens a 2-event session; user 9 opens a 1-event one
-    Seq((7L, ts("2024-01-05 10:00:00"), 1.0),
-        (7L, ts("2024-01-05 10:10:00"), 2.0),
-        (9L, ts("2024-01-05 10:00:00"), 4.0))
-      .toDF("user_id", "ts", "value")
-      .write.mode("overwrite").parquet(dir.toString)
-    val schema = spark.read.parquet(dir.toString).schema
-    val collected = scala.collection.mutable.ArrayBuffer[graft.streaming.ClosedSession]()
-    def runOnce(): Unit = {
-      val q = StreamingIngest.statefulSessionize(
-          StreamingIngest.readStream(spark, dir.toString, schema),
-          gapMinutes = 30, idleClose = true)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch {
-          (b: org.apache.spark.sql.Dataset[graft.streaming.ClosedSession], _: Long) =>
-            collected.synchronized { collected ++= b.collect() }: Unit
-        }
-        .start()
-      q.awaitTermination()
-    }
-    runOnce()
-    assert(collected.isEmpty) // watermark hasn't passed anyone's gap yet
-
-    // batch 2: user 9 returns 3 h later. That event (a) closes user 9's
-    // first session by the gap rule, and (b) advances the watermark to
-    // 12:00 (1 h lateness), which fires user 7's idle timeout — the
-    // trailing session flushes with start_gap_us = -1 and 7's state is
-    // gone, WITHOUT user 7 ever returning.
-    Seq((9L, ts("2024-01-05 13:00:00"), 8.0)).toDF("user_id", "ts", "value")
-      .write.mode("append").parquet(dir.toString)
-    runOnce()
-    val byUser = collected.groupBy(_.user_id)
-    val u9 = byUser(9L).head
-    assert(u9.session_id == 1L && u9.n_events == 1L &&
-      u9.session_value == 4.0 && u9.start_gap_us == 3L * 3600L * 1000000L)
-    val u7 = byUser(7L).head
-    assert(u7.session_id == 1L && u7.n_events == 2L &&
-      u7.session_value == 3.0 && u7.start_gap_us == -1L)
-    assert(collected.length == 2)
-
-    // batch 3: user 7 RETURNS after the idle flush. The closed marker
-    // (n = 0) kept the counter, so the new session is session_id = 2 —
-    // never a duplicate of the already-emitted (7, 1). A later user-9
-    // event pushes the watermark far enough to idle-flush it.
-    Seq((7L, ts("2024-01-05 14:00:00"), 6.0),
-        (9L, ts("2024-01-05 18:00:00"), 1.0))
-      .toDF("user_id", "ts", "value")
-      .write.mode("append").parquet(dir.toString)
-    runOnce()
-    val u7b = collected.filter(_.user_id == 7L).sortBy(_.session_id)
-    assert(u7b.map(_.session_id) == Seq(1L, 2L),
-      s"returning user must continue the monotone counter: $u7b")
-    assert(u7b(1).n_events == 1L && u7b(1).session_value == 6.0 &&
-      u7b(1).start_gap_us == -1L)
-  }
-
-  test("streaming dedup drops duplicate keys within the watermark") {
-    val dir = Files.createTempDirectory("graft-dedup-src")
-    val ckpt = Files.createTempDirectory("graft-dedup-ckpt").toString
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    Seq((1L, ts("2024-01-05 10:00:00"), "a"),
-        (1L, ts("2024-01-05 10:00:05"), "a-dup"),
-        (2L, ts("2024-01-05 10:01:00"), "b"))
-      .toDF("event_id", "ts", "v")
-      .write.mode("overwrite").parquet(dir.toString)
-    val schema = spark.read.parquet(dir.toString).schema
-    val collected = scala.collection.mutable.ArrayBuffer[(Long, String)]()
-    val q = StreamingIngest.dedupStream(
-        StreamingIngest.readStream(spark, dir.toString, schema), Seq("event_id"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        collected.synchronized {
-          collected ++= b.collect().map(r => (r.getLong(0), r.getString(2)))
-        }: Unit
-      }.start()
-    q.awaitTermination()
-    assert(collected.map(_._1).sorted == Seq(1L, 2L)) // duplicate dropped
   }
 
   test("streaming incremental near-dup detection: arriving docs probe the " +
@@ -297,7 +203,7 @@ class StreamingSpec extends SparkSpec {
   test("custom sketch aggregates work in streaming: hll_distinct per group") {
     import graft.sketch.HllSketch.hll_distinct
     val sf = "/root/testdata/sf0.001"
-    val streamed = StreamingIngest.eventStream(spark, sf)
+    val streamed = eventStream(sf)
     val agg = streamed.groupBy(col("event_type"))
       .agg(hll_distinct(col("user_id").cast("string"), 9).as("est_users"))
     val ckpt = Files.createTempDirectory("graft-ckpt-hll").toString
@@ -321,7 +227,7 @@ class StreamingSpec extends SparkSpec {
   test("hist_quantile sketch streams: complete-mode agg == batch") {
     import graft.sketch.HistQuantile.hist_quantile
     val sf = "/root/testdata/sf0.001"
-    val streamed = StreamingIngest.eventStream(spark, sf)
+    val streamed = eventStream(sf)
       .groupBy(col("event_type"))
       .agg(hist_quantile(col("value"), 0.9, 0.0, 500.0, 128).as("p90"))
     val ckpt = Files.createTempDirectory("graft-ckpt-hq").toString
@@ -338,34 +244,10 @@ class StreamingSpec extends SparkSpec {
     assert(got == batch) // vector-add merge is incremental-execution-proof
   }
 
-  test("foreachBatch merge stream is insert-if-absent and idempotent") {
-    val dir = Files.createTempDirectory("graft-stream-src")
-    Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-      .write.mode("overwrite").parquet(dir.toString + "/batch")
-    val schema = spark.read.parquet(dir.toString + "/batch").schema
-
-    val ckpt1 = Files.createTempDirectory("graft-ckpt2").toString
-    val s1 = StreamingIngest.readStream(spark, dir.toString + "/batch", schema)
-    val q1 = StreamingIngest.mergeStream(s1, Seq("id"), "merged_state", ckpt1)
-    q1.awaitTermination()
-    assert(spark.table("global_temp.merged_state").count() == 2)
-
-    // second file: one duplicate key, one new key
-    Seq((2L, "DUP"), (3L, "c")).toDF("id", "v")
-      .write.mode("append").parquet(dir.toString + "/batch")
-    val q2 = StreamingIngest.mergeStream(
-      StreamingIngest.readStream(spark, dir.toString + "/batch", schema),
-      Seq("id"), "merged_state", ckpt1)
-    q2.awaitTermination()
-    val state = spark.table("global_temp.merged_state").orderBy("id").collect()
-    assert(state.length == 3)
-    assert(state(1).getString(1) == "b") // original kept, DUP ignored
-  }
-
   test("update output mode emits per-batch changed groups") {
     val sf = "/root/testdata/sf0.001"
     val agg = StreamingIngest.windowedCounts(
-      StreamingIngest.eventStream(spark, sf))
+      eventStream(sf))
     val ckpt = Files.createTempDirectory("graft-upd-ckpt").toString
     val q = agg.writeStream.outputMode("update")
       .format("memory").queryName("upd_counts")
@@ -378,30 +260,6 @@ class StreamingSpec extends SparkSpec {
     val want = StreamingIngest.windowedCounts(Tables.events(spark, sf))
       .orderBy("window_start_us", "event_type").collect()
     assert(got.length == want.length && got.zip(want).forall(p => p._1 == p._2))
-  }
-
-  test("stream-stream attribution join equals the batch join") {
-    val sf = "/root/testdata/sf0.001"
-    def split(df: org.apache.spark.sql.DataFrame, tpe: String) =
-      df.filter(col("event_type") === tpe)
-        .select(col("user_id"), col("event_id"), col("ts"))
-    val sp = split(StreamingIngest.eventStream(spark, sf), "purchase")
-    val sv = split(StreamingIngest.eventStream(spark, sf), "view")
-    val joined = StreamingIngest.attributionJoin(sp, sv, windowMinutes = 60)
-    val ckpt = Files.createTempDirectory("graft-ssj-ckpt").toString
-    val q = joined.writeStream.outputMode("append")
-      .format("memory").queryName("attrib")
-      .option("checkpointLocation", ckpt).start()
-    q.processAllAvailable(); q.stop()
-
-    val batch = Tables.events(spark, sf)
-    val want = StreamingIngest.attributionJoin(
-      split(batch, "purchase"), split(batch, "view"), windowMinutes = 60)
-      .orderBy("p_id", "v_id").collect()
-    val got = spark.table("attrib").orderBy("p_id", "v_id").collect()
-    assert(want.nonEmpty, "join must produce rows for the proof to mean anything")
-    assert(got.length == want.length, s"${got.length} vs ${want.length}")
-    assert(got.zip(want).forall { case (a, b) => a == b })
   }
 
   test("streaming flush to the DSv2 KV sink via foreachBatch (S7 streaming mode)") {
@@ -535,7 +393,7 @@ class StreamingSpec extends SparkSpec {
 
     var wh: Warehouse = Pipeline.emptyWarehouse(spark)
     def runOnce(): Unit = {
-      val q = StagingReader.readStagedStream(spark, srcDir.toString)
+      val q = stagedStream(srcDir.toString)
         .writeStream.outputMode("append")
         .option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -760,106 +618,6 @@ class StreamingSpec extends SparkSpec {
     assert(got.toSet == want, s"streaming=${got.toSet} batch=$want")
     assert(want.nonEmpty)
     docs.unpersist()
-  }
-
-  test("streaming burst collapse equals batch q221 across micro-batches") {
-    // the q221 twin: the lag-window burst rule replayed through
-    // flatMapGroupsWithState state, events delivered in two time-split
-    // micro-batches (per-key time order holds — the rule's contract)
-    val sf = "/root/testdata/sf0.001"
-    val dir = Files.createTempDirectory("graft-burst-src")
-    val ckpt = Files.createTempDirectory("graft-burst-ckpt").toString
-    val events = graft.Tables.events(spark, sf)
-      .select(col("user_id"), col("event_type"), col("event_id"), col("ts"))
-    val cutoff = events.agg(
-      expr("percentile_approx(unix_micros(ts), 0.5)")).head().getLong(0)
-    val schema = events.schema
-
-    val collected = scala.collection.mutable
-      .ArrayBuffer[graft.streaming.BurstDecision]()
-    def runOnce(): Unit = {
-      val q = StreamingIngest.burstCollapse(
-          StreamingIngest.readStream(spark, dir.toString, schema),
-          gapSeconds = 600L, bounded = true)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch {
-          (b: org.apache.spark.sql.Dataset[graft.streaming.BurstDecision],
-           _: Long) =>
-            collected.synchronized { collected ++= b.collect() }: Unit
-        }
-        .start()
-      q.awaitTermination()
-    }
-    events.filter(unix_micros(col("ts")) <= cutoff)
-      .write.mode("overwrite").parquet(dir.toString)
-    runOnce()
-    val afterB1 = collected.size
-    events.filter(unix_micros(col("ts")) > cutoff)
-      .write.mode("append").parquet(dir.toString)
-    runOnce()
-    assert(afterB1 > 0 && collected.size > afterB1) // both batches emitted
-
-    // the streamed decisions, re-aggregated, equal the one-shot batch query
-    val streamed = collected
-      .groupBy(_.event_type).toSeq
-      .map { case (t, ds) =>
-        (t, ds.size.toLong, ds.count(_.first).toLong,
-          ds.count(!_.first).toLong)
-      }.sortBy(_._1)
-    val batch = SparkEntry.queries("q221_event_burst_dedup")(spark, sf)
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toSeq
-    assert(streamed == batch, s"stream=$streamed batch=$batch")
-  }
-
-  test("burstCollapse default (unbounded) emits a decision for " +
-      "arbitrarily late events; bounded=true is the opt-in drop mode") {
-    // the round-10 contract split: without bounded=true there is NO
-    // watermark, so an event arriving far behind the stream's max
-    // timestamp still gets its BurstDecision (replay-identity with the
-    // batch lag window); bounded=true trades that for bounded state.
-    val dir = Files.createTempDirectory("graft-burstlate-src")
-    val ckpt = Files.createTempDirectory("graft-burstlate-ckpt").toString
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    Seq((1L, "view", 10L, ts("2024-01-05 10:00:00")),
-        (1L, "view", 11L, ts("2024-01-09 10:00:00")))
-      .toDF("user_id", "event_type", "event_id", "ts")
-      .write.mode("overwrite").parquet(dir.toString)
-    val schema = spark.read.parquet(dir.toString).schema
-    val collected =
-      scala.collection.mutable.ArrayBuffer[graft.streaming.BurstDecision]()
-    def runOnce(): Unit = {
-      val q = StreamingIngest.burstCollapse(
-          StreamingIngest.readStream(spark, dir.toString, schema),
-          gapSeconds = 600L)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch {
-          (b: org.apache.spark.sql.Dataset[graft.streaming.BurstDecision],
-           _: Long) =>
-            collected.synchronized { collected ++= b.collect() }: Unit
-        }
-        .start()
-      q.awaitTermination()
-    }
-    runOnce()
-    assert(collected.size == 2) // both open their own bursts (4-day gap)
-    // event 12 arrives 4 days LATE (event time 10:05 on Jan 5, long
-    // behind the Jan 9 max). Default mode still decides it.
-    Seq((1L, "view", 12L, ts("2024-01-05 10:05:00")))
-      .toDF("user_id", "event_type", "event_id", "ts")
-      .write.mode("append").parquet(dir.toString)
-    runOnce()
-    assert(collected.size == 3, s"late event must not be dropped: $collected")
-    val late = collected.find(_.event_id == 12L).get
-    // state only looks backward: vs the stored predecessor (Jan 9) the
-    // gap is "negative", |gap| computation: us - last < 0 <= gapUs → not
-    // first (joined the most recent burst per the backward-only rule)
-    assert(!late.first)
   }
 
   test("streaming media decode: mediaFeatures over a file stream equals batch") {

@@ -80,7 +80,8 @@ class ZOrderSpec extends SparkSpec {
 
     val base = java.nio.file.Files.createTempDirectory("zorder").toString
     // keep the z value as a column so parquet min-max stats cover it
-    ZOrder.clusterByZ(df.withColumn("zv", z), col("zv"), numFiles = 16)
+    df.withColumn("zv", z)
+      .repartitionByRange(16, col("zv")).sortWithinPartitions(col("zv"))
       .write.mode("overwrite").parquet(s"$base/clustered")
     df.withColumn("zv", z).repartition(16)
       .write.mode("overwrite").parquet(s"$base/scattered")
