@@ -11,8 +11,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.local(cpus)
+    val spark = GraftSession.local(GraftSession.envCpus)
 
     // warmup (not timed): run every query once at the smallest scale
     // factor so codegen compilation and JIT are paid before timing — the
@@ -82,8 +81,9 @@ object Bench {
 
   /** Run the plan the query declares, every projected column included,
     * and discard the rows. `count()` would let the optimizer prune the
-    * SELECT list, so a failing or costly projection would go untimed. */
-  private def runDeclared(df: DataFrame): Unit =
+    * SELECT list, so a failing or costly projection would go untimed.
+    * The one runner every timing main uses. */
+  private[graft] def runDeclared(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
   /** Best-of-`reps` wall time in seconds of one query's declared plan, or

@@ -38,6 +38,11 @@ object GraftSession {
     spark
   }
 
+  /** Cores of a main's session: `SPARK_GRAFT_CPUS`, default 4, the
+    * default `tools/gate.sh` runs under too. More than the box has only
+    * oversubscribes it. */
+  def envCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
   /** Drop what a query may have left cached, so the next one is not run
     * under its memory pressure. `clearCache` misses the RDD-level
     * persists behind every `localCheckpoint`; those leaked across a

@@ -17,13 +17,9 @@ object Tables {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
 
-  def lineitem(spark: SparkSession, d: String): DataFrame = table(spark, d, "lineitem")
   def orders(spark: SparkSession, d: String): DataFrame = table(spark, d, "orders")
   def customer(spark: SparkSession, d: String): DataFrame = table(spark, d, "customer")
-  def supplier(spark: SparkSession, d: String): DataFrame = table(spark, d, "supplier")
-  def part(spark: SparkSession, d: String): DataFrame = table(spark, d, "part")
   def nation(spark: SparkSession, d: String): DataFrame = table(spark, d, "nation")
-  def region(spark: SparkSession, d: String): DataFrame = table(spark, d, "region")
   /** The `events` parquet's `ts` physical type has varied across driver
     * testdata generations: TIMESTAMP(NANOS) (which Spark's reader
     * rejects outright unless read as raw longs via
@@ -77,6 +73,4 @@ object Tables {
           col("ts") < lit(endDateExclusive).cast("timestamp"))
     }
   }
-  def documents(spark: SparkSession, d: String): DataFrame = table(spark, d, "documents")
-  def embeddings(spark: SparkSession, d: String): DataFrame = table(spark, d, "embeddings")
 }

@@ -8,8 +8,7 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter (local iteration)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.local(cpus)
+    val spark = GraftSession.local(GraftSession.envCpus)
     new java.io.File(outDir).mkdirs()
     // name order, as Bench runs them: the same queries in the same order
     SparkEntry.queries.toSeq.sortBy(_._1)

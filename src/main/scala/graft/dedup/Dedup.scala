@@ -19,17 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Exact dedup by content hash: md5 of the (trimmed, lowercased) text.
-    * Survivor = min id per hash (deterministic). md5 (not xxhash) so the
-    * oracle can reproduce it in ANSI SQL. */
-  def exact(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val w = Window.partitionBy("content_hash").orderBy(col(idCol))
-    df.withColumn("content_hash", md5(lower(trim(col(textCol)))))
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .drop("_rn")
-  }
-
   /** Exact-dup groups: hash → survivor id + group size (diagnostics). */
   def exactGroups(df: DataFrame, textCol: String, idCol: String): DataFrame =
     df.withColumn("content_hash", md5(lower(trim(col(textCol)))))
@@ -167,10 +156,10 @@ object Dedup {
     * positives removed by one bounded `levenshtein(a, b, 1)` per
     * candidate. Replaces the blocked n² scan: n·(len+1) variant rows,
     * one shuffle on (block, variant), candidate pairs ≪ n².
-    * `maxIdsPerKey` guards degenerate variants (single-char names). */
+    * A cap of 1000 ids per key guards degenerate variants (single-char
+    * names). */
   def editNeighborPairs(df: DataFrame, nameCol: String, idCol: String,
-                        blockCol: String,
-                        maxIdsPerKey: Int = 1000): DataFrame = {
+                        blockCol: String): DataFrame = {
     val names = df.select(col(blockCol).as("blk"), col(idCol).as("id"),
       col(nameCol).as("nm"))
     val variants = names
@@ -183,7 +172,7 @@ object Dedup {
             expr("substring(nm, del_pos + 1, 2147483647)"))))
       .select(concat_ws("\u0001", col("blk"), col("variant")).as("k"),
         col("id"))
-    val cands = sharedKeyPairs(variants, "k", "id", maxIdsPerKey)
+    val cands = sharedKeyPairs(variants, "k", "id", 1000)
       .select("id_a", "id_b")
     cands
       .join(names.select(col("id").as("id_a"), col("nm").as("nm_a")), "id_a")
@@ -195,10 +184,17 @@ object Dedup {
 
   // --- MinHash + LSH ---
 
+  /** The MinHash shape of every clustering, leakage and incremental
+    * probe (the oracle SQL hardcodes the same): 3-word shingles, 64
+    * permutations, bands of 4 rows. */
+  private val ShingleN = 3
+  private val NumHashes = 64
+  private val RowsPerBand = 4
+
   private val Prime = 2038074743L // large 31-bit prime for affine permutations
 
   /** Per-doc MinHash signature over word-shingle hashes.
-    * numHashes affine permutations h_i(x) = (a_i·x + b_i) mod P of a
+    * 64 affine permutations h_i(x) = (a_i·x + b_i) mod P of a
     * 64-bit FNV-1a base hash — all map-side, no shuffle.
     *
     * The permutation constants are CLOSED-FORM (multiplicative spreads of
@@ -210,8 +206,10 @@ object Dedup {
     * interpreted (CodegenFallback), and the 64×|shingles| inner loop in
     * boxed expression space measured ~10× slower than this one JVM call
     * per document. */
-  def minhashSignature(df: DataFrame, textCol: String, idCol: String,
-                       n: Int = 3, numHashes: Int = 64): DataFrame = {
+  def minhashSignature(df: DataFrame, textCol: String, idCol: String): DataFrame = {
+    // locals, so the UDF closure captures two ints, not the object
+    val n = ShingleN
+    val numHashes = NumHashes
     val as = Array.tabulate(numHashes)(j =>
       1L + java.lang.Math.floorMod((j + 1) * 2654435761L, Prime - 1))
     val bs = Array.tabulate(numHashes)(j =>
@@ -254,7 +252,7 @@ object Dedup {
     df.withColumn("minhash_sig", sigUdf(col(textCol)))
   }
 
-  /** LSH banding: split the signature into bands of `rowsPerBand`; the
+  /** LSH banding: split the signature into 16 bands of 4 rows; the
     * band's value-tuple (joined as a string) is the bucket key. Docs
     * sharing any (band, bucket) are candidates. Returns
     * (id, band, bucket) — the exploded index.
@@ -264,13 +262,12 @@ object Dedup {
     * `array_to_string`. The key is ~40 bytes instead of 8 — at 100 TB one
     * would wrap it in xxhash64 before the shuffle (collisions only cost
     * extra candidate pairs, never correctness). */
-  def lshBuckets(sigDf: DataFrame, idCol: String,
-                 numHashes: Int = 64, rowsPerBand: Int = 4): DataFrame = {
-    val numBands = numHashes / rowsPerBand
+  def lshBuckets(sigDf: DataFrame, idCol: String): DataFrame = {
+    val numBands = NumHashes / RowsPerBand
     val bands = transform(sequence(lit(0), lit(numBands - 1)), b =>
       struct(b.as("band"),
         concat_ws(",",
-          slice(col("minhash_sig"), b * rowsPerBand + 1, lit(rowsPerBand))).as("bucket")))
+          slice(col("minhash_sig"), b * RowsPerBand + 1, lit(RowsPerBand))).as("bucket")))
     sigDf.filter(col("minhash_sig").isNotNull)
       .select(col(idCol).as("id"), explode(bands).as("bb"))
       .select(col("id"), col("bb.band"), col("bb.bucket"))
@@ -321,12 +318,9 @@ object Dedup {
     * non-convergence throws rather than returning non-fixpoint labels).
     * Both paths compute the same exact transitive closure. */
   def minhashClustersTransitive(df: DataFrame, textCol: String, idCol: String,
-                                n: Int = 3, numHashes: Int = 64,
-                                rowsPerBand: Int = 4,
-                                maxIter: Int = 5,
                                 maxDriverEdges: Long = 2000000L): DataFrame = {
-    val sig = minhashSignature(df, textCol, idCol, n, numHashes)
-    val buckets = lshBuckets(sig, idCol, numHashes, rowsPerBand)
+    val sig = minhashSignature(df, textCol, idCol)
+    val buckets = lshBuckets(sig, idCol)
     // candidate pairs map-side from each bucket's sorted doc list: ONE
     // shuffle on (band, bucket) — a bucket self-join would shuffle the
     // exploded index twice more and recompute the signature per side
@@ -340,7 +334,7 @@ object Dedup {
       val ids = df.select(col(idCol).as("id")).distinct()
       if (pairs.count() <= maxDriverEdges) unionFindClusters(ids, pairs)
       else graft.graph.Graph.connectedComponents(ids, pairs,
-        maxIter = math.max(maxIter, 20), strict = true)
+        maxIter = 20, strict = true)
     } finally pairs.unpersist()
   }
 
@@ -384,23 +378,19 @@ object Dedup {
     * intersection at pair grain — no shingle-key shuffle; the shingle
     * arrays ride the candidate join), so LSH false positives never
     * reach the metric. Returns verified (test_id, train_id, jaccard)
-    * pairs; jaccard is the engine-portable floor(x·1e4+0.5)/1e4
+    * pairs with jaccard ≥ 0.5; jaccard is the engine-portable floor(x·1e4+0.5)/1e4
     * quantization.
     *
     * At 100 TB: signatures/buckets for the train side are the same
     * precomputed index [[minhashIncrementalCandidates]] probes; docs
-    * shorter than `n` tokens have no signature and exit the audit (they
+    * shorter than 3 tokens have no signature and exit the audit (they
     * carry no shingle evidence either way). A degenerate bucket flooded
     * by one template (identical sigs) costs |train|·|test| of THAT
     * bucket — apply a doc-frequency cap upstream if the corpus is
     * template-heavy (the [[sharedKeyPairs]] guard). */
   def crossSplitLeakage(df: DataFrame, textCol: String, idCol: String,
-                        testCol: String, n: Int = 3, numHashes: Int = 64,
-                        rowsPerBand: Int = 4,
-                        threshold: Double = 0.5): DataFrame = {
-    val buckets = lshBuckets(
-      minhashSignature(df, textCol, idCol, n, numHashes),
-      idCol, numHashes, rowsPerBand)
+                        testCol: String): DataFrame = {
+    val buckets = lshBuckets(minhashSignature(df, textCol, idCol), idCol)
     val flags = df.select(col(idCol).as("id"),
       col(testCol).cast("boolean").as("is_test"))
     val b2 = buckets.join(flags, Seq("id"))
@@ -411,7 +401,7 @@ object Dedup {
         Seq("band", "bucket"))
       .select(col("test_id"), col("train_id")).distinct()
     val shingles = df.select(col(idCol).as("id"),
-      shingleHashesUdf(n)(col(textCol)).as("sh"))
+      shingleHashesUdf(ShingleN)(col(textCol)).as("sh"))
     cand
       .join(shingles.select(col("id").as("test_id"), col("sh").as("sh_t")),
         Seq("test_id"))
@@ -423,7 +413,7 @@ object Dedup {
         floor(col("inter") * lit(10000L) /
             (size(col("sh_t")) + size(col("sh_r")) - col("inter")) +
           lit(0.5d)) / lit(10000d))
-      .filter(col("jaccard") >= threshold)
+      .filter(col("jaccard") >= 0.5)
       .select(col("test_id"), col("train_id"), col("jaccard"))
   }
 
@@ -439,14 +429,10 @@ object Dedup {
     * stored (8 ints per doc per band); only the new batch pays the
     * signature pass. */
   def minhashIncrementalCandidates(corpus: DataFrame, batch: DataFrame,
-                                   textCol: String, idCol: String,
-                                   n: Int = 3, numHashes: Int = 64,
-                                   rowsPerBand: Int = 4): DataFrame = {
-    val bktOld = lshBuckets(minhashSignature(corpus, textCol, idCol, n, numHashes),
-      idCol, numHashes, rowsPerBand)
+                                   textCol: String, idCol: String): DataFrame = {
+    val bktOld = lshBuckets(minhashSignature(corpus, textCol, idCol), idCol)
       .withColumnRenamed("id", "id_old")
-    val bktNew = lshBuckets(minhashSignature(batch, textCol, idCol, n, numHashes),
-      idCol, numHashes, rowsPerBand)
+    val bktNew = lshBuckets(minhashSignature(batch, textCol, idCol), idCol)
       .withColumnRenamed("id", "id_new")
     bktNew.join(bktOld, Seq("band", "bucket"))
       .groupBy("id_new", "id_old")
@@ -574,22 +560,14 @@ object Dedup {
     * training corpus needs verbatim cross-document span removal too.
     *
     * Shape: fixed-width character windows of `window` chars at every
-    * position (`stride = 1`, the default — this is what makes detection
-    * EXACT: any cross-doc duplicated span of ≥ `window` chars is found
-    * with its maximal boundaries), ONE wide shuffle keyed on the window
+    * position (this is what makes detection EXACT: any cross-doc
+    * duplicated span of ≥ `window` chars is found with its maximal
+    * boundaries), ONE wide shuffle keyed on the window
     * text (distinct (win, doc) then an aggregate — no pair expansion,
     * so boilerplate shared by millions of docs costs one aggregate row,
     * never n²), a key-stats join back onto the occurrences, then a
     * per-document gaps-and-islands merge of flagged windows into
     * maximal spans (window partitioned by doc — parallel across docs).
-    *
-    * `stride > 1` is the cheap sampled mode (rows ÷ stride) with a
-    * caveat: two documents sample a shared region at offsets congruent
-    * to their own phase mod `stride`, so a duplicated span is only
-    * GUARANTEED to be caught when it is long enough to contain aligned
-    * windows (self-repetitive content aligns trivially; arbitrary
-    * content needs a content-defined anchor scheme instead — use
-    * stride 1 when exactness matters).
     *
     * `keepFirst = false` (detection): an occurrence is flagged when the
     * identical substring appears in ≥ 2 distinct documents.
@@ -597,8 +575,7 @@ object Dedup {
     * ABOVE the window's minimum doc id are flagged — the lowest doc
     * "owns" the text and keeps it, everyone else cuts the span.
     *
-    * 100 TB notes: exploded rows = total_chars / stride (linear, no
-    * blowup); `hashKey = true` (the default) keys the wide shuffle on
+    * 100 TB notes: exploded rows = total_chars (linear, no blowup); `hashKey = true` (the default) keys the wide shuffle on
     * `xxhash64(win)` instead of the substring — 8 bytes per occurrence
     * across the wire instead of `window` chars (5× less at window=40),
     * and the aggregate hashes a long, not a string. Results are
@@ -614,11 +591,10 @@ object Dedup {
     *         n_windows), 1-based inclusive char positions
     */
   def crossDocSpans(df: DataFrame, textCol: String, idCol: String,
-                    window: Int = 40, stride: Int = 1,
-                    keepFirst: Boolean = false,
+                    window: Int = 40, keepFirst: Boolean = false,
                     hashKey: Boolean = true): DataFrame = {
-    require(window >= 2 && stride >= 1, "window >= 2, stride >= 1")
-    val occ = windowOccurrences(df, textCol, idCol, window, stride, hashKey)
+    require(window >= 2, "window >= 2")
+    val occ = windowOccurrences(df, textCol, idCol, window, hashKey)
     // keep-first only compares against the window's minimum doc id, and
     // min over raw occurrences equals min over the distinct (win, doc)
     // pairs — so that mode skips the distinct (a full extra exchange of
@@ -646,8 +622,7 @@ object Dedup {
     * 10× bytes at 100 MB synthetic corpus; linear after this change).
     * One codepoint-offset table per doc, then each hash reads its byte
     * range directly. */
-  private def windowHashArray(txt: String, window: Int,
-                              stride: Int): Array[Long] = {
+  private def windowHashArray(txt: String, window: Int): Array[Long] = {
     if (txt == null) return Array.emptyLongArray
     val bytes = txt.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     // byte start of each codepoint (UTF8String's char grain)
@@ -670,16 +645,14 @@ object Dedup {
       c += 1
     }
     starts(nChars) = bytes.length
-    val nW = (nChars - window) / stride + 1
-    val out = new Array[Long](nW)
-    var w = 0
-    while (w < nW) {
-      val p = w * stride
-      out(w) = org.apache.spark.sql.catalyst.expressions.XXH64
+    val out = new Array[Long](nChars - window + 1)
+    var p = 0
+    while (p < out.length) {
+      out(p) = org.apache.spark.sql.catalyst.expressions.XXH64
         .hashUnsafeBytes(bytes,
           org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + starts(p),
           starts(p + window) - starts(p), 42L)
-      w += 1
+      p += 1
     }
     out
   }
@@ -691,20 +664,20 @@ object Dedup {
     * single-pass walk; the substring path keeps the expression form
     * (it is only used where the raw window text must survive). */
   private def windowOccurrences(df: DataFrame, textCol: String,
-                                idCol: String, window: Int, stride: Int,
+                                idCol: String, window: Int,
                                 hashKey: Boolean): DataFrame = {
     if (hashKey) {
-      val wh = udf { (t: String) => windowHashArray(t, window, stride) }
+      val wh = udf { (t: String) => windowHashArray(t, window) }
       df.filter(length(col(textCol)) >= window)
         .select(col(idCol).cast("long").as("_did"),
           posexplode(wh(col(textCol))).as(Seq("_i", "_win")))
-        .select(col("_did"), (col("_i") * stride + 1).as("_p"), col("_win"))
+        .select(col("_did"), (col("_i") + 1).as("_p"), col("_win"))
     } else {
       val win = col("_txt").substr(col("_p"), lit(window))
       df.filter(length(col(textCol)) >= window)
         .select(col(idCol).cast("long").as("_did"),
-          explode(sequence(lit(1), length(col(textCol)) - (window - 1),
-            lit(stride))).as("_p"),
+          explode(sequence(lit(1), length(col(textCol)) - (window - 1)))
+            .as("_p"),
           col(textCol).as("_txt"))
         .select(col("_did"), col("_p"), win.as("_win"))
     }
@@ -774,23 +747,23 @@ object Dedup {
 
   /** Sidecar metadata a fingerprint index is stamped with at write time
     * (`_graft_fp_meta.json` under the index dir — underscore-prefixed so
-    * parquet readers ignore it). A probe with a different window/stride
-    * than the index was built with produces silently EMPTY or wrong
-    * spans (hashes never match; span ends are computed from the probe's
-    * window), so writes record the parameters and probes/appends require
-    * they match. */
+    * parquet readers ignore it). Windows start at every position
+    * (stride 1). A probe with a different window/stride than the index
+    * was built with produces silently EMPTY or wrong spans (hashes never
+    * match; span ends are computed from the probe's window), so writes
+    * record the parameters and probes/appends require they match. */
   private val FpMetaFile = "_graft_fp_meta.json"
 
   private def fpMetaPath(path: String) =
     new org.apache.hadoop.fs.Path(path, FpMetaFile)
 
   private def writeFpMeta(spark: SparkSession, path: String,
-                          window: Int, stride: Int, nBuckets: Int): Unit = {
+                          window: Int, nBuckets: Int): Unit = {
     val p = fpMetaPath(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val out = fs.create(p, true)
     out.write(
-      s"""{"window":$window,"stride":$stride,"nBuckets":$nBuckets}"""
+      s"""{"window":$window,"stride":1,"nBuckets":$nBuckets}"""
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     out.close()
   }
@@ -815,12 +788,12 @@ object Dedup {
   }
 
   private def requireFpMeta(spark: SparkSession, path: String,
-                            window: Int, stride: Int, what: String,
+                            window: Int, what: String,
                             nBuckets: Option[Int] = None): Unit =
     readFpMeta(spark, path).foreach { case (w, st, nb) =>
-      require(w == window && st == stride,
+      require(w == window && st == 1,
         s"$what: index at $path was written with window=$w stride=$st " +
-          s"but probed with window=$window stride=$stride — spans would " +
+          s"but probed with window=$window stride=1 — spans would " +
           "be silently empty/wrong; rebuild the index or match the " +
           "parameters")
       // an APPEND must also match the bucket layout: old rows are
@@ -840,26 +813,17 @@ object Dedup {
     * index plausible at 100 TB — substrings would store `window` chars
     * per entry), laid out `partitionBy(bucket)` on `pmod(win_hash,
     * nBuckets)`: point-lookups of single windows prune to one bucket
-    * directory, and each [[appendWindowFingerprints]] generation lands
-    * as its own files inside the bucket dirs (no monolithic rewrite).
-    *
-    * `mode = "append"` adds a batch's fingerprints WITHOUT rewriting
-    * the stored ones (LSM-style): readers min-merge duplicate hashes at
-    * probe time, so an append is
-    * O(batch), never O(corpus). Re-write with `mode = "overwrite"`
-    * periodically to compact. */
+    * directory, and each [[appendWindowFingerprintStats]] generation
+    * lands as its own files inside the bucket dirs (no monolithic
+    * rewrite). Re-write periodically to compact. */
   def writeWindowFingerprints(df: DataFrame, textCol: String,
                               idCol: String, path: String,
-                              window: Int = 40, stride: Int = 1,
-                              nBuckets: Int = 64,
-                              mode: String = "overwrite"): Unit = {
-    if (mode == "append")
-      requireFpMeta(df.sparkSession, path, window, stride,
-        "appendWindowFingerprints", nBuckets = Some(nBuckets))
-    writeWindowStats(batchWindowStats(df, textCol, idCol, window, stride),
-      path, nBuckets, mode)
+                              window: Int = 40,
+                              nBuckets: Int = 64): Unit = {
+    writeWindowStats(batchWindowStats(df, textCol, idCol, window),
+      path, nBuckets, "overwrite")
     // stamp AFTER the parquet write: overwrite mode clears the dir
-    writeFpMeta(df.sparkSession, path, window, stride, nBuckets)
+    writeFpMeta(df.sparkSession, path, window, nBuckets)
   }
 
   /** The fingerprint aggregate of one batch at the index's at-rest
@@ -871,13 +835,13 @@ object Dedup {
     * text per consumer (r13: the q284 funnel's "index append" phase
     * was a second full window-hash pass over every day). */
   def batchWindowStats(df: DataFrame, textCol: String, idCol: String,
-                       window: Int = 40, stride: Int = 1): DataFrame =
+                       window: Int = 40): DataFrame =
     // r13: via the map-side-distinct pairs — `array_distinct` before
     // the explode dedups a document's repeated windows BEFORE the
     // shuffle (min over distinct pairs = min over occurrences, so the
     // rows are unchanged; repetitious text shuffles far fewer rows)
     batchWindowStatsFromPairs(
-      windowDocPairs(df, textCol, idCol, window, stride))
+      windowDocPairs(df, textCol, idCol, window))
 
   /** The distinct (doc, window-hash) PAIRS of a batch — map-side only
     * (`array_distinct` dedups within the document BEFORE the explode,
@@ -890,8 +854,8 @@ object Dedup {
     * Positions are dropped — use [[crossDocSpansIncremental]] when the
     * spans themselves are needed. */
   def windowDocPairs(df: DataFrame, textCol: String, idCol: String,
-                     window: Int = 40, stride: Int = 1): DataFrame = {
-    val wh = udf { (t: String) => windowHashArray(t, window, stride) }
+                     window: Int = 40): DataFrame = {
+    val wh = udf { (t: String) => windowHashArray(t, window) }
     df.filter(length(col(textCol)) >= window)
       .select(col(idCol).cast("long").as("_did"),
         explode(array_distinct(wh(col(textCol)))).as("_win"))
@@ -918,13 +882,10 @@ object Dedup {
   def dupDocIdsIncremental(spark: SparkSession, indexPath: String,
                            batch: DataFrame, textCol: String,
                            idCol: String, window: Int = 40,
-                           stride: Int = 1,
                            pairs: Option[DataFrame] = None,
                            stats: Option[DataFrame] = None): DataFrame = {
-    requireFpMeta(spark, indexPath, window, stride,
-      "dupDocIdsIncremental")
-    val dw = pairs.getOrElse(
-      windowDocPairs(batch, textCol, idCol, window, stride))
+    requireFpMeta(spark, indexPath, window, "dupDocIdsIncremental")
+    val dw = pairs.getOrElse(windowDocPairs(batch, textCol, idCol, window))
     val batchStats = stats.getOrElse(batchWindowStatsFromPairs(dw))
       .select(col("win_hash").as("_win"), col("min_did").as("_batch_min"))
     val corpus = spark.read.parquet(indexPath)
@@ -943,58 +904,18 @@ object Dedup {
       .repartition(col("bucket"))
       .write.mode(mode).partitionBy("bucket").parquet(path)
 
-  /** Append a new batch's fingerprints into a stored index — the
-    * streaming/incremental maintenance call. O(batch) IO. */
-  def appendWindowFingerprints(batch: DataFrame, textCol: String,
-                               idCol: String, path: String,
-                               window: Int = 40, stride: Int = 1,
-                               nBuckets: Int = 64): Unit =
-    writeWindowFingerprints(batch, textCol, idCol, path, window, stride,
-      nBuckets, mode = "append")
-
-  /** [[appendWindowFingerprints]] from a PRECOMPUTED
-    * [[batchWindowStats]] frame (same rows by construction) — the
-    * probe-then-append streaming shape pays one window-hash pass per
-    * batch instead of two. */
+  /** Append a batch's PRECOMPUTED [[batchWindowStats]] frame into a
+    * stored index WITHOUT rewriting the stored rows (LSM-style):
+    * readers min-merge duplicate hashes at probe time, so an append is
+    * O(batch), never O(corpus), and the probe-then-append streaming
+    * shape pays one window-hash pass per batch instead of two. */
   def appendWindowFingerprintStats(stats: DataFrame, path: String,
-                                   window: Int = 40, stride: Int = 1,
+                                   window: Int = 40,
                                    nBuckets: Int = 64): Unit = {
-    requireFpMeta(stats.sparkSession, path, window, stride,
-      "appendWindowFingerprints", nBuckets = Some(nBuckets))
+    requireFpMeta(stats.sparkSession, path, window,
+      "appendWindowFingerprintStats", nBuckets = Some(nBuckets))
     writeWindowStats(stats, path, nBuckets, mode = "append")
-    writeFpMeta(stats.sparkSession, path, window, stride, nBuckets)
-  }
-
-  /** Point-lookup: is this exact `window`-char passage anywhere in the
-    * indexed corpus, and who owns it? Hashes the text driver-side and
-    * reads ONLY the one `bucket=` partition directory the hash lands
-    * in (PartitionFilters — 1/nBuckets of the index bytes; asserted in
-    * DedupSpec), min-merging generations for that hash. Returns
-    * (win_hash, min_did), empty if unseen. The single-passage form of
-    * the "have we seen this text before" check a serving-side
-    * contamination probe needs. */
-  def lookupWindow(spark: SparkSession, path: String, passage: String,
-                   nBuckets: Int = 64): DataFrame = {
-    val meta = readFpMeta(spark, path)
-    meta.foreach { case (w, _, _) =>
-      // CODEPOINTS, not UTF-16 units: windows are codepoint-grain (the
-      // substr/xxhash64 char grain), so a non-BMP passage of w
-      // codepoints is w+k UTF-16 chars and must still be accepted
-      val n = passage.codePointCount(0, passage.length)
-      require(n == w,
-        s"lookupWindow: index at $path holds $w-char windows; a " +
-          s"$n-char passage can never match")
-    }
-    // the stored bucket count wins — a mismatched caller value would
-    // prune to the WRONG directory and return silently empty
-    val nb = meta.map(_._3).getOrElse(nBuckets)
-    import spark.implicits._
-    val h = Seq(passage).toDF("t")
-      .select(xxhash64(col("t"))).head().getLong(0)
-    val bucket = ((h % nb) + nb) % nb
-    spark.read.parquet(path)
-      .filter(col("bucket") === bucket && col("win_hash") === h)
-      .groupBy("win_hash").agg(min(col("min_did")).as("min_did"))
+    writeFpMeta(stats.sparkSession, path, window, nBuckets)
   }
 
   /** Flag an ARRIVING batch's duplicate spans against a stored corpus
@@ -1018,20 +939,14 @@ object Dedup {
     * @return [[crossDocSpans]]-shaped spans for batch docs only */
   def crossDocSpansIncremental(spark: SparkSession, indexPath: String,
                                batch: DataFrame, textCol: String,
-                               idCol: String, window: Int = 40,
-                               stride: Int = 1,
-                               stats: Option[DataFrame] = None): DataFrame = {
-    requireFpMeta(spark, indexPath, window, stride,
-      "crossDocSpansIncremental")
-    val occ = windowOccurrences(batch, textCol, idCol, window, stride,
-      hashKey = true)
+                               idCol: String,
+                               window: Int = 40): DataFrame = {
+    requireFpMeta(spark, indexPath, window, "crossDocSpansIncremental")
+    val occ = windowOccurrences(batch, textCol, idCol, window, hashKey = true)
     // r13: min over duplicate (_win, _did) rows equals min over the
     // distinct set — the old distinct-before-min was a second full
-    // exchange of the batch's windows for nothing. `stats` lets a
-    // probe-then-append caller reuse one persisted [[batchWindowStats]]
-    // for both sides (identical rows by construction).
-    val batchStats = stats.getOrElse(
-        batchWindowStats(batch, textCol, idCol, window, stride))
+    // exchange of the batch's windows for nothing
+    val batchStats = batchWindowStats(batch, textCol, idCol, window)
       .select(col("win_hash").as("_win"), col("min_did").as("_batch_min"))
     // existence is enough here — skip the generations' min-merge
     // and carry only the 8-byte hash through the join
@@ -1061,34 +976,11 @@ object Dedup {
     * @return [[crossDocSpans]]-shaped spans for corpus docs only */
   def contaminationSpans(corpus: DataFrame, benchmark: DataFrame,
                          textCol: String, idCol: String,
-                         window: Int = 40, stride: Int = 1): DataFrame = {
-    val occ = windowOccurrences(corpus, textCol, idCol, window, stride,
-      hashKey = true)
+                         window: Int = 40): DataFrame = {
+    val occ = windowOccurrences(corpus, textCol, idCol, window, hashKey = true)
     val bench = windowOccurrences(benchmark, textCol, idCol, window,
-        stride, hashKey = true)
+        hashKey = true)
       .select(col("_win")).distinct()
-    val flagged = occ.join(bench, Seq("_win"))
-      .select(col("_did"), col("_p"), (col("_p") + (window - 1)).as("_e"))
-    mergeFlaggedWindows(flagged, idCol)
-  }
-
-  /** [[contaminationSpans]] against a STORED benchmark fingerprint
-    * index (write the eval set once with [[writeWindowFingerprints]],
-    * probe every arriving training micro-batch): existence-only —
-    * within-batch duplicates never flag, exactly as the batch form,
-    * so streamed probes over a partition of the corpus union to the
-    * one-shot batch answer. O(batch text + index bytes) per batch. */
-  def contaminationSpansIncremental(spark: SparkSession,
-                                    indexPath: String, batch: DataFrame,
-                                    textCol: String, idCol: String,
-                                    window: Int = 40,
-                                    stride: Int = 1): DataFrame = {
-    requireFpMeta(spark, indexPath, window, stride,
-      "contaminationSpansIncremental")
-    val occ = windowOccurrences(batch, textCol, idCol, window, stride,
-      hashKey = true)
-    val bench = spark.read.parquet(indexPath)
-      .select(col("win_hash").as("_win")).distinct()
     val flagged = occ.join(bench, Seq("_win"))
       .select(col("_did"), col("_p"), (col("_p") + (window - 1)).as("_e"))
     mergeFlaggedWindows(flagged, idCol)

@@ -30,14 +30,6 @@ object CoalesceMerge {
   /** source always wins when matched (last-write-wins). */
   case object Overwrite extends Rule
 
-  /** Upsert `source` into `target` on `keys`.
-    *
-    * @param rules per-column rule for every non-key column present in
-    *              both frames; columns absent from the map default to
-    *              CoalesceNewWins (the reference's artist rule).
-    * @return merged frame with target's column order plus an `_action`
-    *         column ("insert" | "update" | "keep") for A-agg1 counters.
-    */
   /** Statically-empty check (no job, no IO): true only when the plan is a
     * provably empty LocalRelation / zero-partition RDD — the
     * `emptyWarehouse` bootstrap shape. Parquet-backed targets always
@@ -65,14 +57,18 @@ object CoalesceMerge {
     src.select(aligned :+ lit("insert").as("_action"): _*)
   }
 
-  /** @param dedupSource set false ONLY when the caller guarantees the
-    *        source is already unique per key (e.g. an upstream
-    *        `distinct()` on exactly the key columns) — skips one
-    *        window shuffle. */
+  /** Upsert `source` into `target` on `keys`, the source first reduced to one
+    * row per key by [[dedupDeterministic]].
+    *
+    * @param rules per-column rule for every non-key column present in
+    *              both frames; columns absent from the map default to
+    *              CoalesceNewWins (the reference's artist rule).
+    * @return merged frame with target's column order plus an `_action`
+    *         column ("insert" | "update" | "keep") for A-agg1 counters.
+    */
   def upsert(target: DataFrame, source: DataFrame, keys: Seq[String],
-             rules: Map[String, Rule] = Map.empty,
-             dedupSource: Boolean = true): DataFrame = {
-    val src = if (dedupSource) dedupDeterministic(source, keys) else source
+             rules: Map[String, Rule] = Map.empty): DataFrame = {
+    val src = dedupDeterministic(source, keys)
     if (knownEmpty(target)) return insertAll(target, src, keys)
     // Presence markers, not key-nullness: a null-key target row must read
     // as "target present, unmatched" (keep), not as an insert.

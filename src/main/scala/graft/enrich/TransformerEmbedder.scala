@@ -332,10 +332,7 @@ object TransformerEmbedder {
 
   // -------------------------------------------------------- artifact
 
-  /** Spec hook: load (cached) without constructing an embedder. */
-  private[graft] def testLoad(name: String): Model = load(name)
-
-  private def load(name: String): Model =
+  private[graft] def load(name: String): Model =
     cache.computeIfAbsent(name, n => {
       loadCount.incrementAndGet()
       val local = new File(n)
@@ -393,15 +390,15 @@ object TransformerEmbedder {
   /** Export a seeded artifact with the trained-export layout: Xavier-ish
     * weights, identity LayerNorm (γ=1, β=0). Writes GFT3 (WordPiece
     * vocab table embedded) by default; `wordPiece = false` writes the
-    * legacy GFT2 hashed-tokenization layout. */
-  def save(path: String, vocab: Int = 512, d: Int = 32, nLayers: Int = 2,
+    * legacy GFT2 hashed-tokenization layout over 512 hash buckets. */
+  def save(path: String, d: Int = 32, nLayers: Int = 2,
            nHeads: Int = 4, ffDim: Int = 64, maxLen: Int = 64,
            seed: Long = 42L, wordPiece: Boolean = true,
            vocabTokens: Seq[String] = defaultVocab): Unit = {
     require(d % nHeads == 0)
     require(!wordPiece || vocabTokens.distinct.length == vocabTokens.length,
       "vocabTokens must be distinct")
-    val vocabN = if (wordPiece) vocabTokens.length else vocab
+    val vocabN = if (wordPiece) vocabTokens.length else 512
     val rnd = new scala.util.Random(seed)
     val out = new DataOutputStream(new BufferedOutputStream(new FileOutputStream(path)))
     def mat(m: Int, n: Int): Unit = {

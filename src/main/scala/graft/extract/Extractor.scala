@@ -1,7 +1,7 @@
 package graft.extract
 
 import graft.parse.Parsers
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The extractor stage as a dataflow (SURVEY.md §3.2): the reference's
@@ -23,23 +23,16 @@ object Extractor {
   private val listingUdf = udf(HtmlParse.parseListing _)
   private val venueUdf = udf(HtmlParse.parseVenueDetail _)
   private val artistUdf = udf(HtmlParse.parseArtistDetail _)
-  private val descUdf = udf(HtmlParse.parseEventDescription _)
 
   /** Listing pages → one row per (venue, event) with scrape metadata. */
-  def eventsFromListings(listings: DataFrame, dateCol: String = "scrape_date"): DataFrame =
+  def eventsFromListings(listings: DataFrame): DataFrame =
     listings
       .withColumn("ev", explode(listingUdf(col("html"))))
-      .select(col(dateCol), col("ev.*"))
-
-  /** D1 — the deduplicated crawl frontier for detail fetches. */
-  def frontier(events: DataFrame, hrefCol: String): DataFrame =
-    events.select(col(hrefCol).as("href")).filter(length(col("href")) > 0)
-      .dropDuplicates("href")
+      .select(col("scrape_date"), col("ev.*"))
 
   /** Full extractor dataflow given already-fetched detail pages
     * (venue_pages/artist_pages: (href, html)). */
-  def run(listings: DataFrame, venuePages: DataFrame, artistPages: DataFrame,
-          zone: String = "America/Chicago"): DataFrame = {
+  def run(listings: DataFrame, venuePages: DataFrame, artistPages: DataFrame): DataFrame = {
     val events = eventsFromListings(listings)
 
     val venueDetails = venuePages.dropDuplicates("href")
@@ -82,7 +75,7 @@ object Extractor {
           array().cast("array<string>").as("related_artists"),
           coalesce(col("ad.genres"), array()).as("genres")).as("event_data"),
         date_format(Parsers.parsePerformanceTime(col("scrape_date"),
-          col("time_text"), zone), "yyyy-MM-dd'T'HH:mm:ssXXX")
+          col("time_text"), "America/Chicago"), "yyyy-MM-dd'T'HH:mm:ssXXX")
           .as("performance_time"),
         concat(col("scrape_date"), lit("T03:00:00+00:00")).as("scrape_time"))
   }

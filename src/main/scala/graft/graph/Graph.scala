@@ -176,18 +176,22 @@ object Graph {
     (labels, converged)
   }
 
+  private val DampNum = 85L
+  private val DampDen = 100L
+  private val Scale = 1000000000000L
+
   /** PageRank in integer fixed-point arithmetic.
     *
-    * Ranks are maintained as `bigint` units of `scale` (mass 1.0 ≡
-    * `scale`), every step being integer division and long sums — so the
+    * Ranks are maintained as `bigint` units of `Scale` (mass 1.0 ≡
+    * `Scale` = 10¹²), damping is `DampNum`/`DampDen` = 85/100, every step being integer division and long sums — so the
     * result is EXACTLY reproducible anywhere (a float PageRank differs
     * in the last ulps across engines/partitionings because double
     * addition isn't associative; long addition is). Dangling-node mass
     * is dropped (not redistributed), matching the replay SQL.
     *
-    * rank₀ = scale div N;
-    * rankₖ₊₁(v) = teleport + (Σ_{u→v} rankₖ(u) div outdeg(u)) * dampNum div dampDen
-    * where teleport = (scale div N) * (dampDen − dampNum) div dampDen.
+    * rank₀ = Scale div N;
+    * rankₖ₊₁(v) = teleport + (Σ_{u→v} rankₖ(u) div outdeg(u)) * DampNum div DampDen
+    * where teleport = (Scale div N) * (DampDen − DampNum) div DampDen.
     *
     * Each iteration: one join of edges to current ranks (both sides
     * hash-partitioned on src — a co-partitioned shuffle reused across
@@ -196,10 +200,7 @@ object Graph {
     *
     * @param edges directed distinct edges: columns `src`, `dst` (long)
     */
-  def pageRankFixedPoint(edges: DataFrame, iterations: Int = 3,
-                         dampNum: Long = 85, dampDen: Long = 100,
-                         scale: Long = 1000000000000L,
-                         checkpointInterval: Int = 5): DataFrame = {
+  def pageRankFixedPoint(edges: DataFrame, iterations: Int = 3): DataFrame = {
     // r13: the edge frame feeds the node set (BOTH union legs), the
     // out-degree aggregate, and every iteration's contribution join —
     // with pure lineage each consumer re-evaluated the caller's edge
@@ -216,9 +217,9 @@ object Graph {
     val nN = nodes.agg(count(lit(1)).as("_n"))
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
     val teleportExpr =
-      expr(s"(($scale div _n) * ${dampDen - dampNum}) div $dampDen")
+      expr(s"(($Scale div _n) * ${DampDen - DampNum}) div $DampDen")
     var ranks = nodes.crossJoin(broadcast(nN))
-      .select(col("id"), expr(s"$scale div _n").as("rank"))
+      .select(col("id"), expr(s"$Scale div _n").as("rank"))
     var i = 0
     while (i < iterations) {
       val contrib = e.join(ranks, e("src") === ranks("id"))
@@ -229,11 +230,10 @@ object Graph {
         .crossJoin(broadcast(nN))
         .select(col("id"),
           (teleportExpr +
-            expr(s"(coalesce(m, 0L) * $dampNum) div $dampDen")).as("rank"))
-      // short runs keep pure lineage; long runs cut it every
-      // `checkpointInterval` steps so planning cost and recompute depth
-      // stay bounded
-      if ((i + 1) % checkpointInterval == 0) ranks = ranks.localCheckpoint()
+            expr(s"(coalesce(m, 0L) * $DampNum) div $DampDen")).as("rank"))
+      // short runs keep pure lineage; long runs cut it every 5 steps so
+      // planning cost and recompute depth stay bounded
+      if ((i + 1) % 5 == 0) ranks = ranks.localCheckpoint()
       i += 1
     }
     ranks

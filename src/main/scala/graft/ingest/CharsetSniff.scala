@@ -62,7 +62,7 @@ object CharsetSniff {
 
   /** Windows-1252 0x80–0x9F block (WHATWG index: the five holes 0x81
     * 0x8D 0x8F 0x90 0x9D pass through as the C1 controls). */
-  private val Cp1252High: Array[Char] = Array(
+  private[graft] val Cp1252High: Array[Char] = Array(
     '\u20AC', '\u0081', '\u201A', '\u0192', '\u201E', '\u2026',
     '\u2020', '\u2021', '\u02C6', '\u2030', '\u0160', '\u2039',
     '\u0152', '\u008D', '\u017D', '\u008F', '\u0090', '\u2018',
@@ -278,22 +278,4 @@ object CharsetSniff {
   /** `decode_text(content_type, body)` — decoded unicode text. */
   val decodeUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
     udf { (ct: String, bs: Array[Byte]) => decode(ct, bs) }
-
-  /** Windows-1252 ENCODER (test/generator side of the round-trip
-    * property; unmappable chars → '?'). */
-  private[graft] def encodeCp1252(s: String): Array[Byte] = {
-    val out = new Array[Byte](s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      out(i) =
-        if (c < 0x80 || (c >= 0xA0 && c <= 0xFF)) c.toByte
-        else {
-          val hi = Cp1252High.indexOf(c)
-          if (hi >= 0) (0x80 + hi).toByte else '?'.toByte
-        }
-      i += 1
-    }
-    out
-  }
 }

@@ -54,13 +54,6 @@ object HttpMessage {
   final case class Response(status: Int, headers: Seq[(String, String)],
                             body: Array[Byte])
 
-  /** Case-insensitive header lookup (names are already lowercased at
-    * parse; this lowercases the probe). */
-  def header(r: Response, name: String): Option[String] = {
-    val n = name.toLowerCase(java.util.Locale.ROOT)
-    r.headers.collectFirst { case (k, v) if k == n => v }
-  }
-
   // ---- parse ----
 
   /** End index (exclusive) of the line starting at `from`, and the

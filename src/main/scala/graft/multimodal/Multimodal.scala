@@ -66,13 +66,11 @@ object Multimodal {
 
   /** The ONE bytes→features dispatch both the batch and streaming
     * paths share: P6/PNG images → [[PpmCodec.features]], PCM16 WAVs →
-    * [[audioFeatures]], Y4M video → [[videoFeatures]], anything else
-    * (or a non-16 `dim`, since the real featurizers are 16-wide) →
-    * the stub byte-histogram. */
-  private[multimodal] def featurize(bytes: Array[Byte], dim: Int,
+    * [[audioFeatures]], Y4M video → [[videoFeatures]], anything else →
+    * the stub byte-histogram. Every featurizer is 16-wide. */
+  private[multimodal] def featurize(bytes: Array[Byte],
       stub: StubDecoder): Array[Float] =
-    if (dim != 16) stub.decodeAndFeaturize(bytes)
-    else decodeImage(bytes) match {
+    decodeImage(bytes) match {
       case Some(img) => PpmCodec.features(img)
       case None => WavCodec.decode(bytes) match {
         case Some(clip) => audioFeatures(clip)
@@ -93,18 +91,18 @@ object Multimodal {
     * histogram ([[videoFeatures]]); other payloads (compressed codecs)
     * fall back to the STUB byte-histogram. Runs partition-wise with one
     * decoder handle per partition. */
-  def extractFeatures(df: DataFrame, dim: Int = 16): DataFrame = {
+  def extractFeatures(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val contentIdx = df.schema.fieldIndex("content")
     val outSchema = StructType(df.schema.fields :+
       StructField("features", ArrayType(FloatType), nullable = true))
     val rdd = df.rdd.mapPartitions { it =>
-      val decoder = new StubDecoder(dim) // per-partition decoder handle
+      val decoder = new StubDecoder(16) // per-partition decoder handle
       it.map { row =>
         val bytes = row.get(contentIdx)
         val feats =
           if (bytes == null) null
-          else featurize(bytes.asInstanceOf[Array[Byte]], dim, decoder)
+          else featurize(bytes.asInstanceOf[Array[Byte]], decoder)
         Row.fromSeq(row.toSeq :+ feats)
       }
     }
@@ -121,7 +119,7 @@ object Multimodal {
   val mediaFeatures: org.apache.spark.sql.expressions.UserDefinedFunction = {
     val stub = new StubDecoder(16)
     udf { (bytes: Array[Byte]) =>
-      if (bytes == null) null else featurize(bytes, 16, stub)
+      if (bytes == null) null else featurize(bytes, stub)
     }
   }
 

@@ -51,13 +51,14 @@ object PerceptualHash {
 
   /** 15-bit energy-delta fingerprint of a DECODED audio clip — the
     * audio analog of [[dHash]] (a chromaprint-style sketch reduced to
-    * what integer-exact SQL can replay): samples split into `nFrames`
+    * what integer-exact SQL can replay): samples split into 16
     * equal frames (floor boundaries), bit `j` set when frame `j+1`'s
     * exact integer energy (Σ s², Long) exceeds frame `j`'s. Comparing
     * energies makes the fingerprint GAIN-INVARIANT (scaling every
     * sample scales every energy; comparisons are unchanged) and robust
     * to small edits localized in one frame. */
-  def energyFingerprint(clip: WavCodec.Clip, nFrames: Int = 16): Int = {
+  def energyFingerprint(clip: WavCodec.Clip): Int = {
+    val nFrames = 16
     val n = clip.samples.length
     val e = new Array[Long](nFrames)
     var j = 0
@@ -118,16 +119,5 @@ object PerceptualHash {
       f += 1
     }
     fp
-  }
-
-  /** Exact bit distance between two band arrays. */
-  def hamming(a: Array[Int], b: Array[Int]): Int = {
-    var d = 0
-    var i = 0
-    while (i < a.length) {
-      d += Integer.bitCount(a(i) ^ b(i))
-      i += 1
-    }
-    d
   }
 }

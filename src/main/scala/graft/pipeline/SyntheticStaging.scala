@@ -4,18 +4,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deterministic EventDTO-shaped staging frame derived from the driver's
-  * TPC-H-ish tables (orders ⋈ customer ⋈ nation), so the full loader
-  * pipeline (§3.3) can run — and be oracle-checked — against the same
-  * parquet the other queries use. Customers play artists, nations play
+  * TPC-H-ish tables (every `o_orderkey % 10 == 0` order ⋈ customer ⋈
+  * nation), so the full loader pipeline (§3.3) can run — and be
+  * oracle-checked — against the same parquet the other queries use. Customers play artists, nations play
   * venues, order rows play scraped events; every `o_orderkey % 97 == 0`
   * row gets a blank artist name to exercise the quarantine path (P10).
   */
 object SyntheticStaging {
 
-  def fromOrders(spark: SparkSession, sfDir: String,
-                 keyFilterMod: Int = 10): DataFrame = {
+  def fromOrders(spark: SparkSession, sfDir: String): DataFrame = {
     val o = graft.Tables.orders(spark, sfDir)
-      .filter(pmod(col("o_orderkey"), lit(keyFilterMod)) === 0)
+      .filter(pmod(col("o_orderkey"), lit(10)) === 0)
     val c = graft.Tables.customer(spark, sfDir)
     val n = graft.Tables.nation(spark, sfDir)
     val joined = o

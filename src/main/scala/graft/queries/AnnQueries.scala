@@ -430,28 +430,7 @@ private[graft] object AnnQueries {
       // same oracle as q39 (16 hash-spread centroids, nProbe 4): the
       // Spark side is the UN-indexed brute-force query shape, so the hash
       // matches only if AnnIndexRule planned it into the stored IVF probe
-      s"""WITH cents AS (
-        | SELECT row_number() OVER (ORDER BY ((vec_id % 1000003) * 2654435761) % 1000003, vec_id)
-        |   - 1 AS cid, embedding AS ce
-        | FROM embeddings
-        | QUALIFY row_number() OVER (ORDER BY ((vec_id % 1000003) * 2654435761) % 1000003, vec_id) <= 16),
-        |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-        |assign AS (SELECT e.vec_id, e.embedding, c.cid,
-        |   row_number() OVER (PARTITION BY e.vec_id ORDER BY
-        |     list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(c.ce AS DOUBLE[])) DESC,
-        |     c.cid) AS rn
-        | FROM embeddings e, cents c),
-        |cells AS (SELECT vec_id, embedding, cid FROM assign WHERE rn = 1),
-        |probe AS (SELECT c.cid FROM cents c, q
-        | ORDER BY list_cosine_similarity(CAST(c.ce AS DOUBLE[]), CAST(q.qe AS DOUBLE[])) DESC, c.cid
-        | LIMIT 4)
-        |SELECT cl.vec_id,
-        | CAST(floor(list_cosine_similarity(CAST(cl.embedding AS DOUBLE[]),
-      |   CAST(q.qe AS DOUBLE[])) * 10000 + 0.5) AS BIGINT) AS score_bp
-        |FROM cells cl, q WHERE cl.cid IN (SELECT cid FROM probe)
-        |ORDER BY list_cosine_similarity(CAST(cl.embedding AS DOUBLE[]), CAST(q.qe AS DOUBLE[])) DESC,
-        | cl.vec_id
-        |LIMIT 20""".stripMargin),
+      IvfProbeOracleSql),
 
     // ---- transparent ANN planning, HNSW flavor: same rule, registered
     // graph index; efSearch covers each stored sub-graph so the probe
@@ -1134,9 +1113,8 @@ private[graft] object AnnQueries {
         |FROM fr WHERE frank <= 10 ORDER BY qid, frank""".stripMargin),
 
     // ---- graph-index maintenance (the graph leg of the four-family
-    // contract, IvfIndex.maintainIndex / PqIndex.maintainIndex's
-    // sibling): a deliberately fill-degraded plain HNSW index — one
-    // weak sub-graph grown by incremental adds to 20x its build size —
+    // contract, IvfIndex.maintainIndex's sibling): a deliberately
+    // fill-degraded plain HNSW index — one weak sub-graph grown by incremental adds to 20x its build size —
     // is DETECTED by the measured recall health probe and REPAIRED by
     // the re-split policy until the measured floor clears. Driver-gated
     // like q185/q186 (the index artifacts live outside the plan); the

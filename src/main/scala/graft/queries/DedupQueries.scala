@@ -280,23 +280,7 @@ private[graft] object DedupQueries {
     }, oracle =
       // same signature/band replay as q23 (no transitive closure), split
       // corpus (< 400) vs batch (>= 400), count shared bands per pair
-      s"""WITH toks AS (
-        | SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS ts FROM documents),
-        |sh AS (
-        | SELECT doc_id, list_distinct(list_transform(range(0, array_length(ts) - 2),
-        |   si -> array_to_string(ts[(si + 1):(si + 3)], ' '))) AS shingles
-        | FROM toks WHERE array_length(ts) >= 3),
-        |hu AS (SELECT doc_id, list_transform(shingles, sg -> ${fnvSql("sg", "f")}) AS us FROM sh),
-        |hm AS (SELECT doc_id, list_transform(us, u ->
-        |   ((${toSignedSql("u")} % $MinhashP) + $MinhashP) % $MinhashP) AS hs FROM hu),
-        |sigs AS (SELECT doc_id, list_transform(range(0, 64), j ->
-        |   list_min(list_transform(hs, h ->
-        |     ((1 + ((j + 1) * 2654435761) % ${MinhashP - 1}) * h +
-        |      ((j + 1) * 1099511628211) % $MinhashP) % $MinhashP))) AS sg
-        | FROM hm),
-        |bkt AS (SELECT doc_id, b,
-        |   array_to_string(sg[(CAST(b AS INT) * 4 + 1):(CAST(b AS INT) * 4 + 4)], ',') AS bucket
-        | FROM sigs, range(0, 16) r(b))
+      s"""WITH $minhashBandCteSql
         |SELECT n.doc_id AS id_new, o.doc_id AS id_old,
         | count(*) AS n_bands_shared
         |FROM bkt n JOIN bkt o ON n.b = o.b AND n.bucket = o.bucket

@@ -84,13 +84,11 @@ private[graft] object QueryHelpers {
 
   val MinhashP = 2038074743L
 
-  /** Shared DuckDB replay of the MinHash-LSH transitive clustering
-    * (shingle → minhash signature → banded buckets → candidate pairs →
-    * recursive min-label closure). Ends after the `lbl` CTE; callers
-    * append either a final SELECT over `lbl` (q23) or further CTEs
-    * (q160's cluster-aware split). */
-  lazy val minhashClusterCteSql: String =
-    s"""WITH RECURSIVE toks AS (
+  /** Shared DuckDB replay of MinHash-LSH banding (shingle → minhash
+    * signature → `bkt(doc_id, b, bucket)` over 16 bands of 4 rows).
+    * Ends after the `bkt` CTE. */
+  lazy val minhashBandCteSql: String =
+    s"""toks AS (
       | SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS ts FROM documents),
       |sh AS (
       | SELECT doc_id, list_distinct(list_transform(range(0, array_length(ts) - 2),
@@ -106,7 +104,15 @@ private[graft] object QueryHelpers {
       | FROM hm),
       |bkt AS (SELECT doc_id, b,
       |   array_to_string(sg[(CAST(b AS INT) * 4 + 1):(CAST(b AS INT) * 4 + 4)], ',') AS bucket
-      | FROM sigs, range(0, 16) r(b)),
+      | FROM sigs, range(0, 16) r(b))""".stripMargin
+
+  /** Shared DuckDB replay of the MinHash-LSH transitive clustering
+    * ([[minhashBandCteSql]] → candidate pairs → recursive min-label
+    * closure). Ends after the `lbl` CTE; callers append either a final
+    * SELECT over `lbl` (q23) or further CTEs (q160's cluster-aware
+    * split). */
+  lazy val minhashClusterCteSql: String =
+    s"""WITH RECURSIVE $minhashBandCteSql,
       |pairs AS (SELECT DISTINCT a.doc_id AS id_a, b2.doc_id AS id_b
       | FROM bkt a JOIN bkt b2 ON a.b = b2.b AND a.bucket = b2.bucket AND a.doc_id < b2.doc_id),
       |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs

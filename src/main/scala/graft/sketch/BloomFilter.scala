@@ -119,9 +119,8 @@ object BloomPrune {
         .toAggregateExpression())
 
   /** Exact `big ⋉ small` on `key` with Bloom pre-pruning of `big`. */
-  def semiJoin(big: DataFrame, small: DataFrame, key: String,
-               numBits: Int = 1 << 20, numHashes: Int = 5): DataFrame = {
-    val bytes = small.agg(bloom_agg(col(key), numBits, numHashes))
+  def semiJoin(big: DataFrame, small: DataFrame, key: String): DataFrame = {
+    val bytes = small.agg(bloom_agg(col(key)))
       .head().getAs[Array[Byte]](0)
     val pruned = prune(big, key, bytes)
     pruned.join(small.select(col(key)).distinct(), Seq(key), "left_semi")

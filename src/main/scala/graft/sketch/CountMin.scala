@@ -93,12 +93,6 @@ object CountMin {
     ColumnBridge.column(
       CmsAgg(ColumnBridge.expression(col), depth, width).toAggregateExpression())
 
-  /** `cms_merge($"sketch")` → BINARY vector-sum of sketches (the rollup
-    * aggregate over stored sketch columns). */
-  def cms_merge(col: Column): Column =
-    ColumnBridge.column(
-      CmsMerge(ColumnBridge.expression(col)).toAggregateExpression())
-
   /** `cms_query($"sketch", $"term")` → estimated count (≥ true count). */
   def cms_query(sketch: Column, term: Column): Column =
     ColumnBridge.column(CmsQuery(

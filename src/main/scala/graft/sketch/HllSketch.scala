@@ -286,13 +286,6 @@ object HllSketch {
       HllMergeAgg(ColumnBridge.expression(col), asEstimate = true)
         .toAggregateExpression())
 
-  /** `hll_merge_sketch($"sketch")` → merged sketch (BINARY), for another
-    * rollup level. */
-  def hll_merge_sketch(col: Column): Column =
-    ColumnBridge.column(
-      HllMergeAgg(ColumnBridge.expression(col), asEstimate = false)
-        .toAggregateExpression())
-
   /** `hll_union_est($"sk_a", $"sk_b")` → scalar union-distinct estimate. */
   def hll_union_est(a: Column, b: Column): Column =
     ColumnBridge.column(HllUnionEst(

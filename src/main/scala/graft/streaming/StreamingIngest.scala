@@ -19,13 +19,12 @@ object StreamingIngest {
       .option("pathGlobFilter", globFilter)
       .parquet(dir)
 
-  /** Tumbling-window event counts with a watermark (the streaming form
-    * of A-agg3 per-date counts). */
-  def windowedCounts(events: DataFrame, window_ : String = "1 hour",
-                     watermark: String = "2 hours"): DataFrame =
+  /** One-hour tumbling-window event counts with a two-hour watermark
+    * (the streaming form of A-agg3 per-date counts). */
+  def windowedCounts(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), window_), col("event_type"))
+      .withWatermark("ts", "2 hours")
+      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         sum(floor(col("value") * lit(100d) + lit(0.5d)).cast("bigint"))
           .as("sum_value_cents"))

@@ -86,11 +86,6 @@ object TextFunctions {
         transform(sequence(lit(0), size(toks) - n),
           i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
 
-  /** Convenience form for small inputs/tests; see [[shinglesFromTokens]]
-    * for the scan-scale path. */
-  def shingles(text: Column, n: Int): Column =
-    shinglesFromTokens(split(trim(text), "\\s+"), n)
-
   /** Adjacent word pairs as ONE map-side array — the bigram-LM lineage
     * (q88 family) without its posexplode + per-doc window-lead, which
     * costs a full token-stream Exchange + Sort per use (guide §2.4:
@@ -214,9 +209,9 @@ object TextFunctions {
   /** Gopher-style repetition filter rules (Rae et al. 2021, appendix A
     * "repetition removal"): per-document mode-word fraction, most-
     * frequent-2-gram fraction, and duplicate-3-gram fraction, plus the
-    * keep flag at the given thresholds. Line/paragraph variants are
-    * meaningless on single-line documents, so the word/n-gram family
-    * carries the rule set here.
+    * keep flag at Gopher's thresholds (≤ 0.15, ≤ 0.08, ≤ 0.01).
+    * Line/paragraph variants are meaningless on single-line documents,
+    * so the word/n-gram family carries the rule set here.
     *
     * This scalar struct form is the ONE definition shared by the
     * DataFrame API ([[gopherRepetition]]) and the SQL surface
@@ -230,18 +225,11 @@ object TextFunctions {
     * @return struct(n_words, top_word_frac, top_2gram_frac,
     *         dup_3gram_frac, keep)
     */
-  def gopherRepetitionStruct(text: Column, topWordMax: Double = 0.15,
-                             top2GramMax: Double = 0.08,
-                             dup3GramMax: Double = 0.01): Column =
-    bound(split(trim(text), "\\s+"))(t =>
-      gopherRepetitionStructFromTokens(t, topWordMax, top2GramMax,
-        dup3GramMax))
+  def gopherRepetitionStruct(text: Column): Column =
+    bound(split(trim(text), "\\s+"))(gopherRepetitionStructFromTokens)
 
   /** [[gopherRepetitionStruct]] over an ALREADY-BOUND token array. */
-  def gopherRepetitionStructFromTokens(t: Column,
-                                       topWordMax: Double = 0.15,
-                                       top2GramMax: Double = 0.08,
-                                       dup3GramMax: Double = 0.01): Column =
+  def gopherRepetitionStructFromTokens(t: Column): Column =
     bound(shinglesFromTokens(t, 2)) { g2 =>
       bound(shinglesFromTokens(t, 3)) { g3 =>
         val topWord = rq4(maxMultiplicity(t), size(t))
@@ -254,8 +242,7 @@ object TextFunctions {
           topWord.as("top_word_frac"),
           top2.as("top_2gram_frac"),
           dup3.as("dup_3gram_frac"),
-          (topWord <= topWordMax && top2 <= top2GramMax &&
-            dup3 <= dup3GramMax).as("keep"))
+          (topWord <= 0.15 && top2 <= 0.08 && dup3 <= 0.01).as("keep"))
       }
     }
 
@@ -372,12 +359,9 @@ object TextFunctions {
     * (idCol, n_words, top_word_frac, top_2gram_frac, dup_3gram_frac,
     * keep). */
   def gopherRepetition(df: org.apache.spark.sql.DataFrame, textCol: String,
-                       idCol: String, topWordMax: Double = 0.15,
-                       top2GramMax: Double = 0.08,
-                       dup3GramMax: Double = 0.01): org.apache.spark.sql.DataFrame =
+                       idCol: String): org.apache.spark.sql.DataFrame =
     df.filter(length(trim(col(textCol))) > 0)
-      .select(col(idCol), gopherRepetitionStruct(col(textCol), topWordMax,
-        top2GramMax, dup3GramMax).as("_g"))
+      .select(col(idCol), gopherRepetitionStruct(col(textCol)).as("_g"))
       .select(col(idCol), col("_g.n_words"), col("_g.top_word_frac"),
         col("_g.top_2gram_frac"), col("_g.dup_3gram_frac"), col("_g.keep"))
 
@@ -398,14 +382,12 @@ object TextFunctions {
     * @return struct(n_words, mean_word_len, alpha_word_frac, stop_hits,
     *         keep)
     */
-  def gopherQualityStruct(text: Column, minWords: Long = 30,
-                          maxWords: Long = 100000): Column =
+  def gopherQualityStruct(text: Column, minWords: Long = 30): Column =
     bound(split(trim(text), "\\s+"))(t =>
-      gopherQualityStructFromTokens(t, minWords, maxWords))
+      gopherQualityStructFromTokens(t, minWords))
 
   /** [[gopherQualityStruct]] over an ALREADY-BOUND token array. */
-  def gopherQualityStructFromTokens(t: Column, minWords: Long = 30,
-                                    maxWords: Long = 100000): Column = {
+  def gopherQualityStructFromTokens(t: Column, minWords: Long = 30): Column = {
     val stopHits = bound(transform(t, x => lower(x))) { lt =>
       GopherStopwords
         .map(w => when(array_contains(lt, w), 1).otherwise(0))
@@ -421,7 +403,7 @@ object TextFunctions {
       alphaFrac.as("alpha_word_frac"),
       stopHits.cast("long").as("stop_hits"),
       (size(t).cast("long") >= minWords &&
-        size(t).cast("long") <= maxWords &&
+        size(t).cast("long") <= 100000L &&
         meanLen >= 3.0 && meanLen <= 10.0 &&
         alphaFrac >= 0.8 && stopHits >= 2).as("keep"))
   }
@@ -445,11 +427,9 @@ object TextFunctions {
     * (idCol, n_words, mean_word_len, alpha_word_frac, stop_hits,
     * keep). */
   def gopherQuality(df: org.apache.spark.sql.DataFrame, textCol: String,
-                    idCol: String, minWords: Long = 30,
-                    maxWords: Long = 100000): org.apache.spark.sql.DataFrame =
+                    idCol: String, minWords: Long = 30): org.apache.spark.sql.DataFrame =
     df.filter(length(trim(col(textCol))) > 0)
-      .select(col(idCol),
-        gopherQualityStruct(col(textCol), minWords, maxWords).as("_g"))
+      .select(col(idCol), gopherQualityStruct(col(textCol), minWords).as("_g"))
       .select(col(idCol), col("_g.n_words"), col("_g.mean_word_len"),
         col("_g.alpha_word_frac"), col("_g.stop_hits"), col("_g.keep"))
 }

@@ -54,28 +54,6 @@ object AbBench {
     annPair("ann_plain_routed_2000x", copies = 2000, kind = "routed",
       filtered = false),
 
-    // round-7 bench recorded nominal regressions on these four queries
-    // (q78 2.40×, q92 2.12×, q59 1.93×, q56 1.54×) with no commit
-    // touching them; an interleaved SELF-pair gives the same-session
-    // constant that adjudicates drift vs real — ratio ≈ 1 by
-    // construction, and medians near the r6 recording mean the r7
-    // numbers were cross-session machine drift, not a plan change.
-    driftPair("q78_hard_negatives"),
-    driftPair("q92_profile_sources"),
-    driftPair("q59_vocab_topk"),
-    driftPair("q56_doc_repetition"),
-
-    // round-9 adjudication of the BENCH_r08 spikes (judge re-measured
-    // q220 at 2.0 s vs the driver's 43.6 s recording — 8-23× one-off
-    // inflation on four queries, far outside the 1.3-1.8× drift band):
-    // same-JVM interleaved runs of the UNCHANGED r7/r8 shapes. Medians
-    // near the judge's re-measurement close the question as machine
-    // contention; ratio ~1.0 by construction.
-    driftPair("q220_bucketed_join"),
-    driftPair("q21_dedup_exact"),
-    driftPair("q225_domain_reweight"),
-    driftPair("q218_token_shards"),
-
     // round-11: the q16 serving read (the reference's one production
     // read path) against two at-rest layouts of the SAME 400x events
     // corpus (40M rows — big enough that the scan, not the one-day
@@ -114,16 +92,6 @@ object AbBench {
         (() => flat, () => pruned)
       }),
   )
-
-  /** Interleaved self-pair of a shipped query: both sides run the same
-    * plan, so the medians are a same-session absolute constant for
-    * drift adjudication against recorded cross-session bench numbers. */
-  private def driftPair(q: String): Pair =
-    Pair(s"drift_$q", "run_a", "run_b",
-      (s, d) => {
-        def run(): DataFrame = graft.SparkEntry.queries(q)(s, d)
-        (() => run(), () => run())
-      })
 
   private def annPair(name: String, copies: Int, kind: String = "hnsw",
                       filtered: Boolean = true): Pair =
@@ -209,7 +177,7 @@ object AbBench {
     } else pairs
     val reps = sys.env.getOrElse("SPARK_GRAFT_AB_REPS", "5").toInt
 
-    val spark = graft.GraftSession.local(32)
+    val spark = graft.GraftSession.local(graft.GraftSession.envCpus)
     spark.range(2000000L).selectExpr("sum(id)").collect()
 
     def median(xs: Seq[Double]): Double = {
@@ -218,9 +186,10 @@ object AbBench {
       else if (s.length % 2 == 1) s(s.length / 2)
       else (s(s.length / 2 - 1) + s(s.length / 2)) / 2
     }
+    // the plan each side declares, through the noop sink (Bench's runner)
     def time(thunk: () => DataFrame): Double = {
       val t0 = System.nanoTime()
-      thunk().count()
+      graft.Bench.runDeclared(thunk())
       val dt = (System.nanoTime() - t0) / 1e9
       spark.catalog.clearCache()
       dt

@@ -13,7 +13,7 @@ object ExplainAudit {
     // arg "full" also prints each filtered query's formatted plan
     val only = args.lift(1).map(_.split(",").toSet)
     val dump = args.lift(2).contains("full")
-    val spark = graft.GraftSession.local(4)
+    val spark = graft.GraftSession.local(graft.GraftSession.envCpus)
     println("| query | exchanges | bcast joins | SMJ | codegen spans | scans | pushed filters |")
     println("|---|---|---|---|---|---|---|")
     graft.SparkEntry.queries.toSeq.sortBy(_._1)

@@ -20,7 +20,7 @@ import scala.collection.mutable
   * [[graft.GraftSession.local]], the config Bench and Verify run under.
   *
   * Usage: runMain graft.tools.Profile <sfDir> <query>[,<query>...]
-  * Env: SPARK_GRAFT_CPUS (default 32).
+  * Env: SPARK_GRAFT_CPUS (default 4).
   */
 object Profile {
 
@@ -34,8 +34,7 @@ object Profile {
     val names: Seq[String] =
       if (args.length > 1) args(1).split(",").toSeq
       else Seq("q01_pricing_summary")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = graft.GraftSession.local(cpus)
+    val spark = graft.GraftSession.local(graft.GraftSession.envCpus)
 
     val stages = mutable.ArrayBuffer[StageRow]()
     // stage -> owning job's description (guide §1.5 labels), so per-phase
@@ -87,8 +86,7 @@ object Profile {
     names.foreach { n =>
       val fn = graft.SparkEntry.queries.getOrElse(n,
         sys.error(s"unknown query: $n"))
-      def runDeclared(): Unit =
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      def runDeclared(): Unit = graft.Bench.runDeclared(fn(spark, sfDir))
       // warmup (codegen + JIT) at the same sf, not listened
       try runDeclared() catch { case e: Throwable =>
         System.err.println(s"[profile] $n warmup failed: ${e.getMessage}")

@@ -701,10 +701,9 @@ object HnswIndex {
     * sub-graphs are not read, shuffled, or rewritten. Cost per batch is
     * therefore O(touched graphs + batch), not O(corpus).
     *
-    * The row cap defaults to the BUILD-TIME cap persisted in the index's
-    * meta sidecar (an index built with a larger cap keeps accepting adds
-    * up to it; one built with a smaller cap is bounded by its own limit)
-    * — pass `maxPartitionRows > 0` only to deliberately override.
+    * The row cap is the BUILD-TIME cap persisted in the index's meta
+    * sidecar (an index built with a larger cap keeps accepting adds up
+    * to it; one built with a smaller cap is bounded by its own limit).
     *
     * SINGLE WRITER: the rewritten sub-graphs are staged off the input
     * files (localCheckpoint) before the overwrite, so a failure mid-add
@@ -720,13 +719,10 @@ object HnswIndex {
   def addToGraphIndex(spark: org.apache.spark.sql.SparkSession,
                       path: String, batch: DataFrame,
                       embCol: String, idCol: String,
-                      params: Params = Params(),
-                      maxPartitionRows: Int = -1): Unit = {
+                      params: Params = Params()): Unit = {
     import spark.implicits._
     val p = params
-    val cap =
-      if (maxPartitionRows > 0) maxPartitionRows
-      else readMeta(spark, path).map(_._3).getOrElse(500000)
+    val cap = readMeta(spark, path).map(_._3).getOrElse(500000)
     val stored = spark.read.parquet(path)
     val gids = stored.select(col("graph_id").cast("int")).as[Int]
       .collect().sorted
@@ -797,16 +793,15 @@ object HnswIndex {
                        params: Params = Params()): DataFrame =
     searchGraphIndexImpl(spark, path, idCol, queries, k, params, None)
 
-  /** [[searchGraphIndex]] plus a per-query rank column (1..k in
+  /** [[searchGraphIndex]] plus a per-query rank column `rn` (1..k in
     * (score desc, id) order) — the output shape of a `row_number()
     * OVER (PARTITION BY qid ...)` top-k, which [[graft.plans.AnnIndexRule]]
     * splices this probe into for the batched lateral/join form. */
   def searchGraphIndexRanked(spark: org.apache.spark.sql.SparkSession,
                              path: String, idCol: String,
                              queries: Seq[(Long, Array[Float])], k: Int,
-                             params: Params = Params(),
-                             rankCol: String = "rn"): DataFrame =
-    searchGraphIndexImpl(spark, path, idCol, queries, k, params, Some(rankCol))
+                             params: Params = Params()): DataFrame =
+    searchGraphIndexImpl(spark, path, idCol, queries, k, params, Some("rn"))
 
   private def searchGraphIndexImpl(spark: org.apache.spark.sql.SparkSession,
                                    path: String, idCol: String,
@@ -837,9 +832,8 @@ object HnswIndex {
   /** Measured recall of a stored graph index against the CURRENT base
     * vectors, over `nQueries` deterministic sample queries (the same
     * multiplicative-hash row pick every family's health metric uses) —
-    * the graph analogue of [[IvfIndex.indexStats]] and
-    * [[PqIndex.adcRecall]], completing the family-wide maintenance
-    * contract. Graph recall at a FIXED probe `efSearch` decays as
+    * the graph analogue of [[IvfIndex.indexStats]], completing the
+    * family-wide maintenance contract. Graph recall at a FIXED probe `efSearch` decays as
     * capped sub-graphs fill with incremental adds: the ef-bounded walk
     * covers an ever-smaller fraction of each sub-graph. This measures
     * that decay directly — against live data, not build-time

@@ -144,24 +144,9 @@ object IvfIndex {
   def readIndex(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
-  /** Incrementally ADD a batch to a stored index: assign each new row
-    * to its centroid cell and APPEND to that cell's partition
-    * directory. Cell assignment is per-row independent, so the grown
-    * index is EXACTLY the index a full rebuild over base ∪ batch would
-    * produce (same cells, same rows — unlike a graph index there is no
-    * insertion-order state), and untouched cells see no IO at all.
-    * Centroids are fixed at build time — the standard IVF serve-time
-    * contract (retrain + rebuild to re-balance cells). */
-  def addToIndex(batch: DataFrame, embCol: String, idCol: String,
-                 cs: Array[(Int, Array[Float])], path: String): Unit =
-    build(batch, embCol, idCol, cs)
-      .repartition(col("centroid_id"))
-      .write.mode("append").partitionBy("centroid_id").parquet(path)
-
   // -------------------------------------------------- maintenance
   //
-  // addToIndex keeps cell ASSIGNMENT exact under growth, but the
-  // centroids themselves are frozen at build time: a drifting corpus
+  // The centroids are frozen at build time: a drifting corpus
   // (new topic cluster, embedding-model refresh) piles its rows into
   // whichever old cells happen to be nearest, and the index degrades in
   // the two ways that matter at scale — cell-size skew (partition
@@ -225,7 +210,7 @@ object IvfIndex {
     *  2. otherwise run k-means over the CURRENT contents and compare
     *     mean intra-cell distance under the candidate vs the live
     *     centroids; adopt the candidate only if it improves by at
-    *     least `1 - improveFactor` (default 10%) — an index that is
+    *     least 10% — an index that is
     *     still well-clustered re-derives (deterministically) the same
     *     centroids and the call is a no-op.
     *
@@ -241,8 +226,7 @@ object IvfIndex {
   def maintainIndex(spark: SparkSession, path: String,
                     embCol: String, idCol: String,
                     cs: Array[(Int, Array[Float])], nCentroids: Int,
-                    maxSkew: Double = 4.0, improveFactor: Double = 0.9,
-                    kmeansIters: Int = 3)
+                    maxSkew: Double = 4.0, kmeansIters: Int = 3)
       : (Array[(Int, Array[Float])], Boolean) = {
     val index = readIndex(spark, path)
     val stats = indexStats(index, embCol, cs)
@@ -258,7 +242,7 @@ object IvfIndex {
       else {
         val candIntra = meanIntraDist(build(data, embCol, idCol, cand)
           .select(col("centroid_id"), col(embCol)), embCol, cand)
-        if (candIntra < improveFactor * stats.meanIntraDist) cand
+        if (candIntra < 0.9 * stats.meanIntraDist) cand
         else return (cs, false)
       }
     }

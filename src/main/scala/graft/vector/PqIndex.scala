@@ -1,6 +1,6 @@
 package graft.vector
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Product quantization (Jégou et al. 2011) — the third at-rest code
@@ -181,49 +181,6 @@ object PqIndex {
       .orderBy(col("score").desc, col(idCol))
       .limit(k)
 
-  /** Incrementally ADD a batch to a stored IVF-PQ index: route each new
-    * row to its cell, encode with the FROZEN codebook, append to that
-    * cell's partition directory. Codes are per-row deterministic
-    * functions of (vector, codebook), so the grown index is exactly the
-    * full-rebuild index — the same contract as [[IvfIndex.addToIndex]];
-    * untouched cells see no IO. Codebook and centroids stay fixed
-    * (retrain + rebuild to re-balance, the IVF maintenance analogue). */
-  def addToIndex(batch: DataFrame, embCol: String, idCol: String,
-                 cs: Array[(Int, Array[Float])], cb: Codebook,
-                 path: String): Unit =
-    encode(IvfIndex.build(batch, embCol, idCol, cs), embCol, idCol, cb,
-        keep = Seq("centroid_id"))
-      .repartition(col("centroid_id"))
-      .write.mode("append").partitionBy("centroid_id").parquet(path)
-
-  /** Persist the codebook next to the index (`_graft_pq/` inside the
-    * index dir — same pattern as the `_graft_ann` descriptor): one row
-    * per (subspace, code) centroid. A fresh session re-attaches with
-    * [[readCodebook]] and probes without retraining — the
-    * CREATE-INDEX-once contract the other three families already keep. */
-  def writeCodebook(spark: SparkSession, cb: Codebook, path: String): Unit = {
-    import spark.implicits._
-    val rows = for {
-      s <- 0 until cb.m; j <- 0 until cb.ksub
-    } yield (s, j, cb.subDim, cb.cents(s)(j).toSeq)
-    rows.toDF("s", "j", "sub_dim", "c")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(path.stripSuffix("/") + "/_graft_pq")
-  }
-
-  def readCodebook(spark: SparkSession, path: String): Codebook = {
-    val rows = spark.read.parquet(path.stripSuffix("/") + "/_graft_pq")
-      .collect()
-    val m = rows.map(_.getInt(0)).max + 1
-    val ksub = rows.map(_.getInt(1)).max + 1
-    val subDim = rows.head.getInt(2)
-    val cents = Array.ofDim[Array[Float]](m, ksub)
-    rows.foreach { r =>
-      cents(r.getInt(0))(r.getInt(1)) = r.getSeq[Float](3).toArray
-    }
-    Codebook(m, subDim, cents)
-  }
-
   // ---------------------------------------------------- residual PQ
   //
   // Raw-vector PQ quantizes the GLOBAL point cloud: on clustered data
@@ -354,95 +311,6 @@ object PqIndex {
         scoreUdf(col("centroid_id"), col("pq")).as("score"))
       .orderBy(col("score").desc, col(idCol))
       .limit(k)
-  }
-
-  /** Measured ADC shortlist recall over `nQueries` deterministic
-    * sample vectors (the same multiplicative-hash row pick as
-    * centroid seeding): for each sampled query, what fraction of the
-    * exact top-`k` appears in the ADC top-`shortlist`. This is the
-    * health metric of a PQ index — codebook drift shows up here first
-    * (the refine stage can only re-rank what the shortlist caught). */
-  def adcRecall(base: DataFrame, codes: DataFrame, embCol: String,
-                idCol: String, cb: Codebook, nQueries: Int = 5,
-                k: Int = 20, shortlist: Int = 200): Double = {
-    val qs = IvfIndex.centroids(base, embCol, idCol, nQueries).map(_._2)
-    val per = qs.map { q =>
-      val exact = VectorFunctions.topK(base, embCol, idCol, q, k)
-        .collect().map(_.get(0)).toSet
-      val short = searchAdc(codes, idCol, cb, q, shortlist)
-        .collect().map(_.get(0)).toSet
-      (exact intersect short).size.toDouble / k
-    }
-    per.sum / per.length
-  }
-
-  /** [[adcRecall]] for RESIDUAL-encoded codes: the shortlist comes from
-    * the residual score path (probing every cell — this is a health
-    * check, not a serve-time probe). Raw [[adcRecall]] on residual
-    * codes decodes garbage and reads ~0 regardless of health. */
-  def residualRecall(base: DataFrame, codes: DataFrame, embCol: String,
-                     idCol: String, cs: Array[(Int, Array[Float])],
-                     cb: Codebook, nQueries: Int = 5, k: Int = 20,
-                     shortlist: Int = 200): Double = {
-    val qs = IvfIndex.centroids(base, embCol, idCol, nQueries).map(_._2)
-    val per = qs.map { q =>
-      val exact = VectorFunctions.topK(base, embCol, idCol, q, k)
-        .collect().map(_.get(0)).toSet
-      val short = searchIvfAdcResidual(codes, idCol, cs, cb, q, shortlist,
-          nProbe = cs.length)
-        .collect().map(_.get(0)).toSet
-      (exact intersect short).size.toDouble / k
-    }
-    per.sum / per.length
-  }
-
-  /** Check a stored IVF-PQ index and retrain when degraded — PQ's
-    * analogue of [[IvfIndex.maintainIndex]] (all four index families
-    * carry the same post-heavy-write maintenance contract). The
-    * codebook was trained on the corpus AS OF build time; after enough
-    * drifted adds the codes quantize the new region poorly and ADC
-    * shortlist recall decays — measured directly, not inferred:
-    *
-    *  1. measure [[adcRecall]] of the stored codes against the CURRENT
-    *     base vectors; at or above `recallFloor` the call is a no-op;
-    *  2. below it, retrain the codebook on the current base, re-encode
-    *     every cell, stage the rebuilt index into a sibling directory,
-    *     atomically swap, and persist the new codebook.
-    *
-    * Single-writer like the other families' maintenance. Returns the
-    * live codebook and whether a rebuild happened. Pass
-    * `residual = true` for an [[encodeResidual]]-built index — the two
-    * code formats are not self-describing, and measuring/rebuilding a
-    * residual index through the raw path silently corrupts it. */
-  def maintainIndex(spark: SparkSession, path: String, base: DataFrame,
-                    embCol: String, idCol: String,
-                    cs: Array[(Int, Array[Float])], cb: Codebook,
-                    dim: Int, residual: Boolean = false,
-                    recallFloor: Double = 0.8,
-                    nQueries: Int = 5, k: Int = 20,
-                    shortlist: Int = 200): (Codebook, Boolean) = {
-    val codes = IvfIndex.readIndex(spark, path)
-    val recall =
-      if (residual) residualRecall(base, codes, embCol, idCol, cs, cb,
-        nQueries, k, shortlist)
-      else adcRecall(base, codes, embCol, idCol, cb, nQueries, k, shortlist)
-    if (recall >= recallFloor) return (cb, false)
-    val index = IvfIndex.build(base, embCol, idCol, cs)
-    val next =
-      if (residual) trainResidual(index, embCol, idCol, cs, dim, cb.m,
-        cb.ksub)
-      else train(base, embCol, idCol, dim, cb.m, cb.ksub)
-    val staging = path.stripSuffix("/") + "._rebuild"
-    IvfIndex.writeIndex(
-      if (residual) encodeResidual(index, embCol, idCol, next, cs)
-      else encode(index, embCol, idCol, next, keep = Seq("centroid_id")),
-      staging)
-    // the codebook is staged WITH the codes: writing it after the swap
-    // leaves a crash window where the old codebook is deleted and the
-    // new one not yet written — an unprobeable index
-    writeCodebook(spark, next, staging)
-    IvfIndex.atomicSwap(spark, path, staging)
-    (next, true)
   }
 
   /** ADC shortlist + exact re-rank (faiss's IndexRefineFlat contract):

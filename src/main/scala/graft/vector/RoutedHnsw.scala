@@ -60,7 +60,7 @@ object RoutedHnsw {
     * O(nCells) (the per-cell counts that size the salts); graphs build
     * inside `mapGroups`, one group (≤ cap rows) in memory at a time.
     *
-    * Cells segment at `maxSegmentRows` (not just the OOM cap): small
+    * Cells segment at 30,000 rows (not just the OOM cap): small
     * segments are the unit of the executor-resident cache, so a serving
     * executor holds hot FRACTIONS of fat cells under its memory budget,
     * and a cold miss re-reads one segment, not an 85 MB cell blob.
@@ -72,11 +72,9 @@ object RoutedHnsw {
                        path: String, cs: Array[(Int, Array[Float])],
                        params: HnswIndex.Params = HnswIndex.Params(),
                        maxPartitionRows: Int = 500000,
-                       quantized: Boolean = false,
-                       maxSegmentRows: Int = 30000): Unit = {
+                       quantized: Boolean = false): Unit = {
     val assigned = assignCells(df, embCol, idCol, cs)
-    buildAndWrite(assigned, path, params, maxPartitionRows, quantized,
-      maxSegmentRows)
+    buildAndWrite(assigned, path, params, maxPartitionRows, quantized)
   }
 
   /** Float AND int8 variants of the same index from ONE routing pass
@@ -90,9 +88,7 @@ object RoutedHnsw {
   def writeRoutedIndexPair(df: DataFrame, embCol: String, idCol: String,
                            pathFloat: String, pathQuant: String,
                            cs: Array[(Int, Array[Float])],
-                           params: HnswIndex.Params = HnswIndex.Params(),
-                           maxPartitionRows: Int = 500000,
-                           maxSegmentRows: Int = 30000): Unit = {
+                           params: HnswIndex.Params = HnswIndex.Params()): Unit = {
     val assigned = assignCells(df, embCol, idCol, cs).persist()
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     implicit val ec: scala.concurrent.ExecutionContext =
@@ -103,7 +99,7 @@ object RoutedHnsw {
         scala.concurrent.Future {
           buildAndWrite(assigned,
             if (q) pathQuant else pathFloat,
-            params, maxPartitionRows, q, maxSegmentRows)
+            params, 500000, q)
         }
       }
       scala.concurrent.Await.result(
@@ -129,9 +125,8 @@ object RoutedHnsw {
   private def buildAndWrite(
       assigned: org.apache.spark.sql.Dataset[(Int, Long, Array[Float])],
       path: String, params: HnswIndex.Params, maxPartitionRows: Int,
-      quantized: Boolean, maxSegmentRows: Int): Unit = {
+      quantized: Boolean): Unit = {
     require(maxPartitionRows > 0, "maxPartitionRows must be positive")
-    require(maxSegmentRows > 0, "maxSegmentRows must be positive")
     val spark = assigned.sparkSession
     import spark.implicits._
     val p = params
@@ -142,7 +137,7 @@ object RoutedHnsw {
     // expectation. Segment grain is the SMALLER of the OOM cap and the
     // cache-granularity target.
     val counts: Map[Int, Long] = assigned.groupByKey(_._1).count().collect().toMap
-    val seg = math.min(cap, maxSegmentRows)
+    val seg = math.min(cap, 30000)
     val headroom = math.max(1, seg - math.max(1, seg / 10))
     val nSaltsByCell: Map[Int, Int] =
       counts.map { case (cid, n) =>
@@ -335,122 +330,6 @@ object RoutedHnsw {
       }
       out.result()
     } finally reader.close()
-  }
-
-  // -------------------------------------------------- incremental add
-
-  /** Incrementally ADD a batch into a stored routed index — family
-    * parity with [[IvfIndex.addToIndex]] and
-    * [[HnswIndex.addToGraphIndex]]. Each batch row is assigned to its
-    * nearest centroid cell (same assignment as the build, so the grown
-    * index routes exactly like a rebuild would), then within the cell
-    * to a salted sub-graph by the same id hash; only the TOUCHED cells'
-    * `centroid_id=` partition directories are read and rewritten
-    * (dynamic overwrite; a cell directory is the rewrite unit, so its
-    * unchanged sibling sub-graphs re-serialize with it) — untouched
-    * cells see no IO at all. Cost per batch is O(touched cells +
-    * batch), not O(corpus).
-    *
-    * The salt count per cell is re-derived from the STORED sub-graph
-    * count, so adds keep landing on the graphs the build created; the
-    * per-graph row cap (from the meta sidecar) still fails fast when a
-    * cell outgrows its salts — rebuild via [[writeRoutedIndex]] (or
-    * [[maintainIndex]], which re-splits) to re-balance, pgvector's
-    * REINDEX-after-heavy-write guidance.
-    *
-    * SINGLE WRITER, like every index mutation here: the rewritten
-    * graphs are staged (localCheckpoint) before the overwrite;
-    * concurrent callers last-write-win whole sub-graphs. */
-  def addToIndex(spark: SparkSession, path: String, batch: DataFrame,
-                 embCol: String, idCol: String,
-                 cs: Array[(Int, Array[Float])],
-                 maxPartitionRows: Int = -1): Unit = {
-    import spark.implicits._
-    val (m, efC, metaCap) = readMeta(spark, path)
-      .getOrElse((HnswIndex.Params().m, HnswIndex.Params().efConstruction,
-        500000))
-    val p = HnswIndex.Params(m = m, efConstruction = efC)
-    val qMode = readMetaQuantized(spark, path)
-    val cap = if (maxPartitionRows > 0) maxPartitionRows else metaCap
-    val stored = spark.read.parquet(path)
-    // sub-graphs per cell, in deterministic (cell, graph order) — the
-    // salt a row lands on must match an existing graph slot
-    val saltCounts: Map[Int, Int] = stored
-      .groupBy(col("centroid_id").cast("int")).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1).toInt).toMap
-    require(saltCounts.nonEmpty, s"no stored routed index at $path")
-    val assigned = IvfIndex.build(
-        batch.select(col(idCol).cast("long").as("_id"), col(embCol).as("_emb"))
-          .filter(col("_id").isNotNull && col("_emb").isNotNull),
-        "_emb", "_id", cs)
-      .select(col("centroid_id"), col("_id"), col("_emb"))
-      .as[(Int, Long, Array[Float])]
-    val batchKeyed = assigned.groupByKey { case (cid, id, _) =>
-      (cid, saltOf(id, saltCounts.getOrElse(cid, 1)))
-    }
-    val touched = batchKeyed.keys.collect().map(_._1).toSet
-    // the stored graphs of the touched cells, keyed (cell, ordinal) so
-    // ordinal == the salt rows hash to; ordering by n_vectors then
-    // graph bytes is deterministic for a deterministic build
-    val storedTouched = stored
-      .filter(col("centroid_id").isin(touched.toSeq.map(Integer.valueOf): _*))
-      .select(col("centroid_id").cast("int"), col("graph"))
-      .as[(Int, Array[Byte])]
-      .groupByKey(_._1)
-      .flatMapGroups { (cid: Int, it: Iterator[(Int, Array[Byte])]) =>
-        // deterministic ordinal assignment: graphs sort by their FIRST
-        // stored id (unique across sub-graphs, content-derived)
-        val graphs = it.map(_._2).toArray
-        def firstId(bytes: Array[Byte]): Long = {
-          val in = new java.io.DataInputStream(
-            new java.io.ByteArrayInputStream(bytes))
-          // v2 (int8-at-rest) blobs lead with a -2 sentinel before n
-          val first = in.readInt()
-          val n = if (first == -2) in.readInt() else first
-          in.readInt(); in.readInt()
-          if (n == 0) Long.MaxValue else in.readLong()
-        }
-        graphs.sortBy(firstId).iterator.zipWithIndex.map {
-          case (g, salt) => ((cid, salt), g)
-        }
-      }
-    val updated = storedTouched.groupByKey(_._1)
-      .cogroup(batchKeyed) { (key, graphs, rows) =>
-        val newRows = rows.toArray.sortBy(_._2)
-        val existing = graphs.toSeq.headOption.map(_._2)
-        if (newRows.isEmpty && existing.isEmpty) Iterator.empty
-        else {
-          // loadFrom auto-detects the blob's mode; the meta flag only
-          // decides the mode of a brand-new sub-graph in an empty cell
-          val index = new HnswIndex.Hnsw(0, p, qMode)
-          existing.foreach(index.loadFrom)
-          require(index.size + newRows.length <= cap,
-            s"routed sub-graph (cell ${key._1}, salt ${key._2}) would grow " +
-              s"past $cap rows (${index.size} + ${newRows.length}); rebuild " +
-              "with writeRoutedIndex/maintainIndex to re-split.")
-          newRows.foreach { case (_, id, v) => index.add(id, v) }
-          val bytes = index.serialize()
-          Iterator.single((key._1, index.size.toLong,
-            HnswIndex.contentKey(bytes), bytes))
-        }
-      }.toDF("centroid_id", "n_vectors", "seg_hash", "graph")
-    // a rewritten sub-graph gets a NEW content key, so stale resident
-    // cache entries simply stop being referenced by the manifest;
-    // pre-manifest indexes keep their legacy schema
-    val shaped =
-      if (stored.schema.fieldNames.contains("seg_hash")) updated
-      else updated.drop("seg_hash")
-    val staged = shaped.localCheckpoint(true)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try staged.repartition(col("centroid_id"))
-      .write.mode("overwrite")
-      .option("parquet.block.size", 8L * 1024 * 1024)
-      .partitionBy("centroid_id").parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
   }
 
   // -------------------------------------------------- maintenance

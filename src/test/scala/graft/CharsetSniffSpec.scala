@@ -113,11 +113,11 @@ class CharsetSniffSpec extends SparkSpec {
     // the five undefined holes pass through as C1 controls (WHATWG index)
     assert(dec(1) == '\u0081' && dec(0x0D) == '\u008D' &&
       dec(0x0F) == '\u008F' && dec(0x10) == '\u0090' && dec(0x1D) == '\u009D')
-    assert(java.util.Arrays.equals(CharsetSniff.encodeCp1252(dec), highs))
+    assert(java.util.Arrays.equals(CharsetSniffSpec.encodeCp1252(dec), highs))
     // latin-1 range and ascii pass through both ways
     val s = "a\u00E9\u00FC~"
     assert(CharsetSniff.decode("t/h; charset=latin1",
-      CharsetSniff.encodeCp1252(s)) == s)
+      CharsetSniffSpec.encodeCp1252(s)) == s)
   }
 
   test("declared utf-8 that lies falls back to the total cp1252 decode") {
@@ -136,4 +136,18 @@ class CharsetSniffSpec extends SparkSpec {
       0x3D, 0xD8.toByte, 0x00, 0xDE.toByte)
     assert(CharsetSniff.decode(null, pair) == new String(Character.toChars(0x1F600)))
   }
+}
+
+object CharsetSniffSpec {
+
+  /** Windows-1252 encoder, the fixture side of the round-trip property:
+    * the inverse of [[CharsetSniff.decode]]'s cp1252 table, unmappable
+    * chars → '?'. */
+  def encodeCp1252(s: String): Array[Byte] = s.map { c =>
+    if (c < 0x80 || (c >= 0xA0 && c <= 0xFF)) c.toByte
+    else {
+      val hi = CharsetSniff.Cp1252High.indexOf(c)
+      if (hi >= 0) (0x80 + hi).toByte else '?'.toByte
+    }
+  }.toArray
 }

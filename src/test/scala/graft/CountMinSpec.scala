@@ -49,7 +49,7 @@ class CountMinSpec extends SparkSpec {
     val df = words(3000).zipWithIndex
       .map { case (w, i) => (i % 5, w) }.toDF("g", "t")
     val fine = df.groupBy("g").agg(CountMin.cms_agg(col("t"), 4, 32).as("sk"))
-    val merged = fine.agg(CountMin.cms_merge(col("sk")))
+    val merged = fine.agg(expr("cms_merge(sk)"))
       .head().getAs[Array[Byte]](0)
     val global = df.agg(CountMin.cms_agg(col("t"), 4, 32))
       .head().getAs[Array[Byte]](0)
@@ -66,7 +66,7 @@ class CountMinSpec extends SparkSpec {
       .write.mode("overwrite").parquet(dir)
     val back = spark.read.parquet(dir)
     // CMS rollup from disk == direct global sketch
-    val mergedCms = back.agg(CountMin.cms_merge(col("cms")))
+    val mergedCms = back.agg(expr("cms_merge(cms)"))
       .head().getAs[Array[Byte]](0)
     val globalCms = df.agg(CountMin.cms_agg(col("t"), 4, 32))
       .head().getAs[Array[Byte]](0)
@@ -84,7 +84,7 @@ class CountMinSpec extends SparkSpec {
       .toDF("a", "b", "t")
     // day → month → total, three levels
     val day = df.groupBy("a", "b").agg(HllSketch.hll_sketch(col("t"), 9).as("sk"))
-    val month = day.groupBy("a").agg(HllSketch.hll_merge_sketch(col("sk")).as("sk"))
+    val month = day.groupBy("a").agg(expr("hll_merge_sketch(sk)").as("sk"))
     val total = month.agg(HllSketch.hll_merge_est(col("sk"))).head().getLong(0)
     val direct = df.agg(HllSketch.hll_distinct(col("t"), 9)).head().getLong(0)
     assert(total == direct)

@@ -195,7 +195,7 @@ class CrawlPropertySpec extends SparkSpec {
   test("CharsetSniff: encode/decode round-trips every cp1252-codable string") {
     import graft.ingest.CharsetSniff
     cases(cp1252TextGen).foreach { t =>
-      val bytes = CharsetSniff.encodeCp1252(t)
+      val bytes = CharsetSniffSpec.encodeCp1252(t)
       assert(CharsetSniff.decode("t/h; charset=windows-1252", bytes) == t,
         t.take(60))
     }
@@ -248,7 +248,7 @@ class CrawlPropertySpec extends SparkSpec {
       assert(java.util.Arrays.equals(r.get.body, body),
         s"body mismatch at $status chunked=$chunked len=${body.length}")
       hs.foreach { case (k, v) =>
-        assert(HttpMessage.header(r.get, k).contains(v), k)
+        assert(HttpMessageSpec.header(r.get, k).contains(v), k)
       }
     }
   }

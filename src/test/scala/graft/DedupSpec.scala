@@ -14,12 +14,6 @@ class DedupSpec extends SparkSpec {
     (5L, "completely different words entirely here now ok"),
   ).toDF("doc_id", "text")
 
-  test("exact dedup keeps min-id survivor per normalized content hash") {
-    val out = Dedup.exact(docs, "text", "doc_id")
-    val ids = out.select("doc_id").as[Long].collect().sorted
-    assert(ids.sameElements(Array(1L, 4L, 5L)))
-  }
-
   test("exactGroups reports group sizes") {
     val g = Dedup.exactGroups(docs, "text", "doc_id")
       .orderBy("survivor_id")
@@ -314,9 +308,8 @@ class DedupSpec extends SparkSpec {
     val spans = run(hashed = true)
     assert(spans == run(hashed = false))
     assert(spans.nonEmpty)
-    // lookupWindow hashes the passage with the xxhash64 EXPRESSION; the
-    // stored index rows come from the single-pass walk — a point lookup
-    // of a multibyte window only hits if the two hashes agree
+    // the stored index rows come from the single-pass walk; the
+    // xxhash64 EXPRESSION of a multibyte window must find its row
     val idx = java.nio.file.Files
       .createTempDirectory("graft-uniwin").toString + "/idx"
     Dedup.writeWindowFingerprints(docs, "text", "doc_id", idx, window = 12)
@@ -324,7 +317,8 @@ class DedupSpec extends SparkSpec {
       base.offsetByCodePoints(0, 8),
       base.offsetByCodePoints(0, 20))
     assert(passage.codePointCount(0, passage.length) == 12)
-    assert(Dedup.lookupWindow(spark, idx, passage).count() == 1L)
+    val h = Seq(passage).toDF("t").select(xxhash64(col("t"))).head().getLong(0)
+    assert(spark.read.parquet(idx).filter(col("win_hash") === h).count() == 1L)
   }
 
   test("incremental ExactSubstr: stored fingerprints == full keep-first " +
@@ -349,6 +343,12 @@ class DedupSpec extends SparkSpec {
     assert(incr.nonEmpty)
   }
 
+  /** Append a batch's (doc_id, text) window fingerprints to the index. */
+  private def appendFingerprints(batch: org.apache.spark.sql.DataFrame,
+                                 idx: String, window: Int = 40): Unit =
+    Dedup.appendWindowFingerprintStats(
+      Dedup.batchWindowStats(batch, "text", "doc_id", window), idx, window)
+
   /** The stored fingerprints, min-merged across appended generations:
     * (win_hash, min_did). */
   private def fingerprints(path: String) = spark.read.parquet(path)
@@ -361,7 +361,7 @@ class DedupSpec extends SparkSpec {
     val g1 = Seq((1L, "A" * 60)).toDF("doc_id", "text")
     val g2 = Seq((2L, "B" * 60)).toDF("doc_id", "text")
     Dedup.writeWindowFingerprints(g1, "text", "doc_id", idx, window = 20)
-    Dedup.appendWindowFingerprints(g2, "text", "doc_id", idx, window = 20)
+    appendFingerprints(g2, idx, window = 20)
     // batch: doc 10 repeats g2's text (indexed via append → flagged);
     // docs 11/12 share NEW text the corpus lacks → only 12 flagged;
     // doc 13 is unique → clean
@@ -385,7 +385,7 @@ class DedupSpec extends SparkSpec {
     // min-merge keeps the logical fingerprints, probes still flag doc 10
     val before = fp.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    Dedup.appendWindowFingerprints(batch, "text", "doc_id", idx, window = 20)
+    appendFingerprints(batch, idx, window = 20)
     assert(spark.read.parquet(idx).count() >
       spark.read.parquet(idx).select("win_hash").distinct().count())
     val merged = fingerprints(idx).collect()
@@ -411,9 +411,8 @@ class DedupSpec extends SparkSpec {
     // must still match
     Dedup.writeWindowFingerprints(docs.filter(col("doc_id") < 150),
       "text", "doc_id", idx)
-    Dedup.appendWindowFingerprints(
-      docs.filter(col("doc_id") >= 150 && col("doc_id") < 250),
-      "text", "doc_id", idx)
+    appendFingerprints(
+      docs.filter(col("doc_id") >= 150 && col("doc_id") < 250), idx)
     val batch = docs.filter(col("doc_id") >= 250)
     def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
       df.select("doc_id").collect().map(_.getLong(0)).toSet
@@ -458,44 +457,6 @@ class DedupSpec extends SparkSpec {
         Dedup.gramSet(bench, "text"), "text", "doc_id")
       .collect().map(_.getLong(0)).toSet
     assert(viaSemi == viaCounts && viaSemi.nonEmpty)
-  }
-
-  test("fingerprint point-lookup prunes to one bucket partition") {
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft-fp-lookup").toString + "/idx"
-    val docs = spark.read
-      .parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    Dedup.writeWindowFingerprints(docs, "text", "doc_id", idx, window = 40)
-    val passage = docs.filter(col("doc_id") === 3)
-      .select(substring(col("text"), 5, 40)).head().getString(0)
-    val hit = Dedup.lookupWindow(spark, idx, passage)
-    hit.collect()
-    assert(hit.count() == 1L &&
-      hit.head().getLong(1) <= 3L) // doc 3 or an earlier owner
-    // the scan reads only the hash's bucket directory
-    def scans(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => Seq(f)
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        scans(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        scans(q.plan)
-      case other => other.children.flatMap(scans)
-    }
-    val scan = scans(hit.queryExecution.executedPlan)
-      .headOption.getOrElse(fail("no file scan in lookup plan"))
-    assert(scan.toString.contains("PartitionFilters") &&
-      scan.toString.contains("bucket"), s"no bucket filter:\n$scan")
-    val full = spark.read.parquet(idx).agg(count(lit(1)))
-    full.collect()
-    val fullBytes = scans(full.queryExecution.executedPlan)
-      .head.metrics("filesSize").value
-    val lookupBytes = scan.metrics("filesSize").value
-    assert(lookupBytes * 4 < fullBytes,
-      s"lookup read $lookupBytes of $fullBytes bytes — not bucket-pruned")
-    // an unseen passage returns empty
-    assert(Dedup.lookupWindow(spark, idx, "~" * 40).count() == 0L)
   }
 
   test("exciseSpans stitches kept segments; no-span docs pass through") {
@@ -573,7 +534,7 @@ class DedupSpec extends SparkSpec {
     Dedup.writeWindowFingerprints(g1, "text", "doc_id", idx, window = 20)
     assert(Dedup.readFpMeta(spark, idx).contains((20, 1, 64)))
     val batch = Seq((10L, "A" * 60)).toDF("doc_id", "text")
-    // matching probe works; mismatched window / stride throw
+    // matching probe works; a mismatched window throws
     assert(Dedup.crossDocSpansIncremental(spark, idx, batch,
       "text", "doc_id", window = 20).count() > 0)
     val e1 = intercept[IllegalArgumentException] {
@@ -582,28 +543,21 @@ class DedupSpec extends SparkSpec {
     }
     assert(e1.getMessage.contains("window=20"))
     intercept[IllegalArgumentException] {
-      Dedup.contaminationSpansIncremental(spark, idx, batch,
-        "text", "doc_id", window = 20, stride = 2)
+      Dedup.dupDocIdsIncremental(spark, idx, batch,
+        "text", "doc_id", window = 40)
     }
     intercept[IllegalArgumentException] {
-      Dedup.appendWindowFingerprints(batch, "text", "doc_id", idx,
-        window = 40)
+      appendFingerprints(batch, idx, window = 40)
     }
     // an append with a different BUCKET count must throw too: old rows
     // sit in pmod(hash, 64) directories, and re-stamping nBuckets=8
     // would make pruned lookups silently miss them
     val eNb = intercept[IllegalArgumentException] {
-      Dedup.appendWindowFingerprints(batch, "text", "doc_id", idx,
+      Dedup.appendWindowFingerprintStats(
+        Dedup.batchWindowStats(batch, "text", "doc_id", 20), idx,
         window = 20, nBuckets = 8)
     }
     assert(eNb.getMessage.contains("nBuckets=8"))
     assert(Dedup.readFpMeta(spark, idx).contains((20, 1, 64))) // unstamped
-    // lookupWindow: passage length must equal the stored window, and
-    // the STORED bucket count wins over a wrong caller value
-    intercept[IllegalArgumentException] {
-      Dedup.lookupWindow(spark, idx, "A" * 40)
-    }
-    assert(Dedup.lookupWindow(spark, idx, "A" * 20, nBuckets = 7)
-      .count() == 1L)
   }
 }

@@ -94,7 +94,6 @@ class ExtractorSpec extends SparkSpec {
     val listings = Seq(("2025-03-21", listingHtml)).toDF("scrape_date", "html")
     val events = Extractor.eventsFromListings(listings)
     assert(events.count() == 3)
-    assert(Extractor.frontier(events, "venue_href").count() == 2) // memoized
 
     val venuePages = Seq(("/venues/123", venueHtml), ("/venues/99", "")).toDF("href", "html")
     val artistPages = Seq(("Ellis Marsalis Quartet", artistHtml)).toDF("artist_name", "html")

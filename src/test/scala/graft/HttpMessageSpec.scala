@@ -16,9 +16,9 @@ class HttpMessageSpec extends SparkSpec {
       Seq("Content-Type" -> "text/html; charset=utf-8"), body, chunked = false)
     val r = HttpMessage.parse(wire).get
     assert(r.status == 200)
-    assert(HttpMessage.header(r, "Content-Type")
+    assert(HttpMessageSpec.header(r, "Content-Type")
       .contains("text/html; charset=utf-8"))
-    assert(HttpMessage.header(r, "content-length")
+    assert(HttpMessageSpec.header(r, "content-length")
       .contains(body.length.toString))
     assert(java.util.Arrays.equals(r.body, body))
   }
@@ -27,7 +27,7 @@ class HttpMessageSpec extends SparkSpec {
     val body = ("x" * 200).getBytes(UTF_8) // > WriteChunkBytes: 4 chunks
     val wire = HttpMessage.write(200, "OK", Seq.empty, body, chunked = true)
     val r = HttpMessage.parse(wire).get
-    assert(HttpMessage.header(r, "transfer-encoding").contains("chunked"))
+    assert(HttpMessageSpec.header(r, "transfer-encoding").contains("chunked"))
     assert(java.util.Arrays.equals(r.body, body))
     // empty body: just the terminal chunk
     val empty = HttpMessage.write(204, "No Content", Seq.empty,
@@ -42,7 +42,7 @@ class HttpMessageSpec extends SparkSpec {
     for (wire <- Seq(crlf, lf)) {
       val r = HttpMessage.parse(b(wire)).get
       assert(r.status == 301)
-      assert(HttpMessage.header(r, "location").contains("http://x/y"))
+      assert(HttpMessageSpec.header(r, "location").contains("http://x/y"))
       assert(r.body.isEmpty)
     }
     // chunked with LF endings
@@ -55,7 +55,7 @@ class HttpMessageSpec extends SparkSpec {
     val wire = "HTTP/1.1 200 OK\r\nSet-Cookie: a=1\r\nSET-COOKIE: b=2\r\n" +
       "Content-Length: 0\r\n\r\n"
     val r = HttpMessage.parse(b(wire)).get
-    assert(HttpMessage.header(r, "set-cookie").contains("a=1, b=2"))
+    assert(HttpMessageSpec.header(r, "set-cookie").contains("a=1, b=2"))
     assert(r.headers.map(_._1) == Seq("set-cookie", "content-length"))
   }
 
@@ -63,7 +63,7 @@ class HttpMessageSpec extends SparkSpec {
     val wire = "HTTP/1.1 200 OK\r\nX-Long: first\r\n  second\r\n" +
       "Content-Length: 0\r\n\r\n"
     val r = HttpMessage.parse(b(wire)).get
-    assert(HttpMessage.header(r, "x-long").contains("first second"))
+    assert(HttpMessageSpec.header(r, "x-long").contains("first second"))
   }
 
   test("chunk extensions are ignored, trailers are skipped") {
@@ -71,7 +71,7 @@ class HttpMessageSpec extends SparkSpec {
       "5;ext=1\r\nhello\r\n0\r\nX-Trailer: v\r\n\r\n"
     val r = HttpMessage.parse(b(wire)).get
     assert(new String(r.body, UTF_8) == "hello")
-    assert(HttpMessage.header(r, "x-trailer").isEmpty) // not interpreted
+    assert(HttpMessageSpec.header(r, "x-trailer").isEmpty) // not interpreted
   }
 
   test("chunked beats Content-Length when both present (RFC 7230 3.3.3)") {
@@ -109,5 +109,15 @@ class HttpMessageSpec extends SparkSpec {
     assert(HttpMessage.parse(
       b("HTTP/1.1 500 Internal Server Error\r\nContent-Length: 0\r\n\r\n"))
       .get.status == 500)
+  }
+}
+
+object HttpMessageSpec {
+
+  /** Case-insensitive header lookup over a parsed response (names are
+    * lowercased at parse; this lowercases the probe). */
+  def header(r: HttpMessage.Response, name: String): Option[String] = {
+    val n = name.toLowerCase(java.util.Locale.ROOT)
+    r.headers.collectFirst { case (k, v) if k == n => v }
   }
 }

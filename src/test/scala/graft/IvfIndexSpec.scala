@@ -168,30 +168,6 @@ class IvfIndexSpec extends SparkSpec {
       f"(${probedBytes.toDouble / fullBytes * 100}%.1f%%)")
   }
 
-  test("incremental add: grown index answers exactly like a full rebuild") {
-    val rng = new scala.util.Random(47)
-    val centers = Array.fill(6)(Array.fill(16)(rng.nextGaussian().toFloat * 5))
-    val all = (0 until 900).map { i =>
-      val c = centers(i % 6)
-      (i.toLong, c.map(x => (x + rng.nextGaussian() * 0.2).toFloat))
-    }.toDF("id", "emb")
-    val base = all.filter($"id" < 600)
-    val batch = all.filter($"id" >= 600)
-    val cs = IvfIndex.centroids(base, "emb", "id", 6)
-    val dir = java.nio.file.Files.createTempDirectory("ivf-incr").toString
-
-    IvfIndex.writeIndex(IvfIndex.build(base, "emb", "id", cs), s"$dir/incr")
-    IvfIndex.addToIndex(batch, "emb", "id", cs, s"$dir/incr")
-    IvfIndex.writeIndex(IvfIndex.build(all, "emb", "id", cs), s"$dir/full")
-
-    assert(spark.read.parquet(s"$dir/incr").count() == 900)
-    val q = centers(2)
-    def ids(p: String) = IvfIndex.search(IvfIndex.readIndex(spark, p),
-        "emb", "id", cs, q, k = 15, nProbe = 2)
-      .collect().map(_.getLong(0)).toSeq
-    assert(ids(s"$dir/incr") == ids(s"$dir/full"))
-  }
-
   test("maintenance: angular drift detected via intra-cell distance, re-cluster repairs recall") {
     val rng = new scala.util.Random(23)
     val dim = 8
@@ -226,8 +202,12 @@ class IvfIndexSpec extends SparkSpec {
     // stay balanced — the skew check alone cannot see this — but every
     // drifted row sits ~90° from its cell centroid, so the mean
     // intra-cell distance explodes.
+    // The drifted index routes every row through the OLD centroids.
     val drift = cluster(yPos, 240, 1000)
-    IvfIndex.addToIndex(drift.toDF("id", "emb"), "emb", "id", cs0, s"$dir/idx")
+    IvfIndex.writeIndex(IvfIndex.build((base ++ drift).toDF("id", "emb"),
+      "emb", "id", cs0), s"$dir/idx")
+    graft.plans.AnnCatalog.persistDescriptor(
+      graft.plans.AnnCatalog.IvfEntry(s"$dir/idx", "emb", "id", cs0, 1))
     val drifted = IvfIndex.indexStats(
       IvfIndex.readIndex(spark, s"$dir/idx"), "emb", cs0)
     assert(drifted.meanIntraDist > healthy.meanIntraDist * 3,

@@ -29,11 +29,21 @@ class PerceptualHashSpec extends AnyFunSuite {
     assert(PerceptualHash.dHash(up).sameElements(PerceptualHash.dHash(base)))
   }
 
+  /** Exact bit distance between two band arrays: the reference for the
+    * queries' `bit_count(xor(a, b))` over the packed 64-bit hash. */
+  private def hamming(a: Array[Int], b: Array[Int]): Int =
+    a.indices.map(i => Integer.bitCount(a(i) ^ b(i))).sum
+
+  /** The 64-bit word the queries compare: the 16-hex-char rendering. */
+  private def packed(bands: Array[Int]): Long =
+    java.lang.Long.parseUnsignedLong(PerceptualHash.hex(bands), 16)
+
   test("hamming counts exact bit differences across bands") {
     val a = Array(0x00, 0xff, 0x0f, 0xa5, 0, 0, 0, 0)
     val b = Array(0x01, 0xff, 0xf0, 0x5a, 0, 0, 0, 0)
-    assert(PerceptualHash.hamming(a, a) == 0)
-    assert(PerceptualHash.hamming(a, b) == 1 + 0 + 8 + 8)
+    assert(hamming(a, a) == 0)
+    assert(hamming(a, b) == 1 + 0 + 8 + 8)
+    assert(java.lang.Long.bitCount(packed(a) ^ packed(b)) == hamming(a, b))
   }
 
   test("pigeonhole: any two hashes within hamming 7 share at least one band") {
@@ -46,7 +56,7 @@ class PerceptualHashSpec extends AnyFunSuite {
         val bit = rnd.nextInt(64)
         b(bit / 8) ^= (1 << (bit % 8))
       }
-      if (PerceptualHash.hamming(a, b) <= 7)
+      if (hamming(a, b) <= 7)
         assert((0 until 8).exists(i => a(i) == b(i)),
           s"no shared band: ${a.toSeq} vs ${b.toSeq}")
     }

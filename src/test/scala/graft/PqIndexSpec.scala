@@ -96,42 +96,6 @@ class PqIndexSpec extends SparkSpec {
     assert(ivfAdc(stored, cs, cb, centers(1), k = 20, nProbe = 3).nonEmpty)
   }
 
-  test("codebook persists at rest; incremental adds equal the rebuild") {
-    val cs = IvfIndex.centroids(data, "emb", "id", 8)
-    val base = data.filter($"id" < 3000L)
-    val batch = data.filter($"id" >= 3000L)
-    val tmp = java.nio.file.Files.createTempDirectory("pq-add").toString
-    // base index + codebook at rest, then grow by the batch
-    IvfIndex.writeIndex(
-      PqIndex.encode(IvfIndex.build(base, "emb", "id", cs), "emb", "id",
-        cb, keep = Seq("centroid_id")), s"$tmp/idx")
-    PqIndex.writeCodebook(spark, cb, s"$tmp/idx")
-    PqIndex.addToIndex(batch, "emb", "id", cs, cb, s"$tmp/idx")
-
-    val cb2 = PqIndex.readCodebook(spark, s"$tmp/idx")
-    assert(cb2.m == cb.m && cb2.ksub == cb.ksub && cb2.subDim == cb.subDim)
-    assert(cb2.cents(3)(7).toSeq == cb.cents(3)(7).toSeq)
-
-    // the grown index is row-for-row the full-rebuild index
-    val grown = IvfIndex.readIndex(spark, s"$tmp/idx")
-      .select($"id", $"centroid_id", $"pq")
-      .collect().map(r => (r.getLong(0), r.getInt(1),
-        r.getAs[Array[Byte]](2).toSeq)).toSet
-    val rebuilt = PqIndex.encode(IvfIndex.build(data, "emb", "id", cs),
-        "emb", "id", cb, keep = Seq("centroid_id"))
-      .collect().map(r => (r.getLong(1), r.getInt(0),
-        r.getAs[Array[Byte]](2).toSeq)).toSet
-    assert(grown == rebuilt)
-
-    // probing through the re-read codebook matches the live one
-    val q = centers(6)
-    val a = ivfAdc(IvfIndex.readIndex(spark, s"$tmp/idx"), cs, cb2, q,
-      k = 10, nProbe = 3)
-    val b = ivfAdc(IvfIndex.readIndex(spark, s"$tmp/idx"), cs, cb, q,
-      k = 10, nProbe = 3)
-    assert(a == b)
-  }
-
   /** ADC top-k over the codes of the `nProbe` cells nearest `q`. */
   private def ivfAdc(codes: org.apache.spark.sql.DataFrame,
                      cs: Array[(Int, Array[Float])], cb: PqIndex.Codebook,
@@ -152,48 +116,6 @@ class PqIndexSpec extends SparkSpec {
       }
       (cid, if (nq == 0 || nc == 0) 0.0 else dot / math.sqrt(nq * nc))
     }.sortBy { case (cid, s) => (-s, cid) }.take(nProbe).map(_._1)
-  }
-
-  test("maintenance: drifted corpus detected by ADC recall and repaired") {
-    // the index was built for THIS distribution...
-    val cs0 = IvfIndex.centroids(data, "emb", "id", 8)
-    // ...but the corpus has since drifted to entirely new clusters
-    val drng = new scala.util.Random(37)
-    val dcenters = Array.fill(8)(
-      Array.fill(dim)(50f + drng.nextGaussian().toFloat * 5))
-    val drifted = (0 until 4000).map { i =>
-      val c = dcenters(i % 8)
-      (i.toLong, c.map(x => (x + drng.nextGaussian() * 1.0).toFloat))
-    }.toDF("id", "emb")
-    val csD = IvfIndex.centroids(drifted, "emb", "id", 8)
-    val tmp = java.nio.file.Files.createTempDirectory("pq-maint").toString
-
-    // stale codebook (trained on `data`) encoding the DRIFTED corpus
-    IvfIndex.writeIndex(
-      PqIndex.encode(IvfIndex.build(drifted, "emb", "id", csD),
-        "emb", "id", cb, keep = Seq("centroid_id")), s"$tmp/idx")
-    val before = PqIndex.adcRecall(drifted,
-      IvfIndex.readIndex(spark, s"$tmp/idx"), "emb", "id", cb,
-      nQueries = 3, k = 10, shortlist = 50)
-
-    val (cb2, rebuilt) = PqIndex.maintainIndex(spark, s"$tmp/idx",
-      drifted, "emb", "id", csD, cb, dim, recallFloor = 0.8,
-      nQueries = 3, k = 10, shortlist = 50)
-    assert(rebuilt, s"stale codebook not detected (recall was $before)")
-    assert(before < 0.8)
-
-    val after = PqIndex.adcRecall(drifted,
-      IvfIndex.readIndex(spark, s"$tmp/idx"), "emb", "id", cb2,
-      nQueries = 3, k = 10, shortlist = 50)
-    assert(after >= 0.8, s"retrain did not repair recall: $before -> $after")
-    // the persisted codebook is the retrained one
-    val stored = PqIndex.readCodebook(spark, s"$tmp/idx")
-    assert(stored.cents(0)(0).toSeq == cb2.cents(0)(0).toSeq)
-    // a healthy index is a no-op
-    val (cb3, again) = PqIndex.maintainIndex(spark, s"$tmp/idx",
-      drifted, "emb", "id", csD, cb2, dim, recallFloor = 0.8,
-      nQueries = 3, k = 10, shortlist = 50)
-    assert(!again && (cb3 eq cb2))
   }
 
   test("residual PQ halves reconstruction error on many-cluster data " +
@@ -281,48 +203,4 @@ class PqIndexSpec extends SparkSpec {
     assert(res >= raw - 0.05, s"residual recall $res regressed vs raw $raw")
   }
 
-  test("residual maintenance: measured through the residual path, " +
-       "rebuild keeps the residual format") {
-    val cs = IvfIndex.kmeansCentroids(data, "emb", "id", 8, iters = 2)
-    val index = IvfIndex.build(data, "emb", "id", cs)
-    val rcb = PqIndex.trainResidual(index, "emb", "id", cs, dim,
-      m = 8, ksub = 64, iters = 2)
-    val tmp = java.nio.file.Files.createTempDirectory("pq-rmaint").toString
-    IvfIndex.writeIndex(
-      PqIndex.encodeResidual(index, "emb", "id", rcb, cs), s"$tmp/idx")
-    PqIndex.writeCodebook(spark, rcb, s"$tmp/idx")
-
-    // healthy residual index must be a NO-OP through the residual path
-    // (the raw path would misread the codes as garbage and force a
-    // rebuild every call — the corruption this guard exists for)
-    val (same, rebuilt) = PqIndex.maintainIndex(spark, s"$tmp/idx", data,
-      "emb", "id", cs, rcb, dim, residual = true, recallFloor = 0.6,
-      nQueries = 3, k = 10, shortlist = 100)
-    assert(!rebuilt && (same eq rcb))
-
-    // a STALE residual codebook (trained on different data) rebuilds
-    // through the residual path, and the swapped index still probes
-    // correctly in residual form with the returned codebook
-    val xrng = new scala.util.Random(59)
-    val xcb = {
-      val other = (0 until 2000).map { i =>
-        (i.toLong, Array.fill(dim)(30f + xrng.nextGaussian().toFloat))
-      }.toDF("id", "emb")
-      PqIndex.trainResidual(IvfIndex.build(other, "emb", "id", cs),
-        "emb", "id", cs, dim, m = 8, ksub = 64, iters = 1)
-    }
-    IvfIndex.writeIndex(
-      PqIndex.encodeResidual(index, "emb", "id", xcb, cs), s"$tmp/idx2")
-    val (fresh, did) = PqIndex.maintainIndex(spark, s"$tmp/idx2", data,
-      "emb", "id", cs, xcb, dim, residual = true, recallFloor = 0.9,
-      nQueries = 3, k = 10, shortlist = 100)
-    assert(did)
-    val after = PqIndex.residualRecall(data,
-      IvfIndex.readIndex(spark, s"$tmp/idx2"), "emb", "id", cs, fresh,
-      nQueries = 3, k = 10, shortlist = 100)
-    assert(after >= 0.9, s"rebuild did not restore residual recall: $after")
-    // and the staged codebook survived the swap
-    val stored = PqIndex.readCodebook(spark, s"$tmp/idx2")
-    assert(stored.cents(2)(5).toSeq == fresh.cents(2)(5).toSeq)
-  }
 }

@@ -6,17 +6,21 @@ import org.apache.xbean.asm9.ClassReader
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-/** Every compiled `graft.*` class is reached, by class reference, from
-  * one of the program's roots: the query families, the kept mains, the
-  * session factory, and each `graft.*` name the daily-run benchmark
-  * imports or loads by `format(...)`. A class that nothing reaches is
-  * code that no query, main or daily run can execute; delete it.
+/** Every compiled `graft.*` class, and every public method of a `graft`
+  * object, is reached from one of the program's roots: the query
+  * families, the kept mains, the session factory, and what the daily-run
+  * benchmark imports, calls or loads by `format(...)`. Code that nothing
+  * reaches is code that no query, main or daily run can execute; delete
+  * it. A defaulted parameter that no caller passes is a setting with one
+  * value in use; make it a constant.
   *
-  * The walk is at class level over the compiled bytecode. A class
-  * reaches every class its constant pool names: class and member
-  * references, descriptors, and string constants such as
+  * The class walk reads the compiled constant pools. A class reaches
+  * every class its constant pool names: class and member references,
+  * descriptors, and string constants such as
   * `format("graft.sources.KvCacheSink")`. A Scala object, its companion
-  * and its nested and anonymous classes count as one unit. */
+  * and its nested and anonymous classes count as one unit. The method
+  * walk is [[CallGraph]]'s; the benchmark's calls and named arguments are
+  * read from its source. */
 class ReachabilitySpec extends AnyFunSuite {
 
   private val kept = Seq("graft.Bench", "graft.Verify", "graft.tools.Profile",
@@ -69,15 +73,20 @@ class ReachabilitySpec extends AnyFunSuite {
     }.toSet
   }
 
-  /** `graft.*` names that the `.scala` files in `dailybench/src/dailybench`
-    * import or pass to `format(...)`, read from that source. */
-  private lazy val dailyNames: Set[String] = {
+  /** The `.scala` sources in `dailybench/src/dailybench`. */
+  private lazy val dailyTexts: List[String] = {
     val dir = Paths.get("dailybench/src/dailybench")
     assert(Files.isDirectory(dir), s"run from the project root: $dir")
     val files = Files.list(dir)
-    val texts = try files.iterator().asScala
+    try files.iterator().asScala
       .filter(_.toString.endsWith(".scala")).map(Files.readString).toList
     finally files.close()
+  }
+
+  /** `graft.*` names that the daily-run sources import or pass to
+    * `format(...)`. */
+  private lazy val dailyNames: Set[String] = {
+    val texts = dailyTexts
     val Import = """(?m)^\s*import\s+graft\.([\w.]+?)(?:\.\{([^}]*)\})?\s*$""".r
     val Format = """format\("(graft\.[\w.]+)"\)""".r
     texts.flatMap { t =>
@@ -130,5 +139,105 @@ class ReachabilitySpec extends AnyFunSuite {
     // GraftSession installs the extensions; families reach the registry
     assert(graph("graft/GraftSession").contains("graft/GraftExtensions"))
     assert(graph("graft/queries/WarehouseQueries").contains("graft/queries/QuerySpec"))
+  }
+
+  // ------------------------------------------------------ method level
+
+  /** Public object methods allowed to stay unreached, each with its
+    * reason. */
+  private val allowedMethods: Map[String, String] = Map(
+    "graft.ingest.StagingReader.readStagedSafe" ->
+      "quarantines malformed staging files, input from outside the program",
+    "graft.ingest.StagingReader.writeStaged" ->
+      "the staging write that ROADMAP item 2 routes the daily run through",
+    "graft.SparkEntry.entry" -> "the smoke entry an outside harness calls by name")
+
+  private lazy val testClassesDir: Path =
+    Paths.get(classOf[ReachabilitySpec].getProtectionDomain.getCodeSource.getLocation.toURI)
+
+  private lazy val program = CallGraph.load(Seq(classesDir), Seq("graft/"))
+  private lazy val withTests =
+    CallGraph.load(Seq(classesDir, testClassesDir).distinct, Seq("graft/"))
+
+  /** One call in the daily-run source: `Obj.method(args)` or
+    * `Obj(args)` on an imported `graft` object, with its positional
+    * argument count and its named arguments. */
+  private case class SourceCall(owner: String, method: String,
+                                positional: Int, named: Set[String])
+
+  private lazy val dailyCalls: Seq[SourceCall] = {
+    val objects = dailyNames.map(_.replace('.', '/') + "$").filter(program.classes.contains)
+    val Named = """(?s)^\s*(\w+)\s*=(?![=>]).*""".r
+    // comments name methods the code does not call
+    val code = dailyTexts.map(_.replaceAll("""(?s)/\*.*?\*/""", "")
+      .replaceAll("""(?m)(^|\s)//.*$""", "$1"))
+    for {
+      t <- code
+      o <- objects.toSeq
+      simple = o.stripSuffix("$").split('/').last
+      m <- s"\\b$simple(?:\\.(\\w+))?\\s*(\\()?".r.findAllMatchIn(t).toSeq
+      if m.group(1) != null || m.group(2) != null
+    } yield {
+      val args = if (m.group(2) == null) Nil else topLevelArgs(t, m.end - 1)
+      val named = args.collect { case Named(n) => n }
+      SourceCall(o, Option(m.group(1)).getOrElse("apply"), args.size - named.size, named.toSet)
+    }
+  }
+
+  /** The top-level comma-separated arguments of the parenthesised list
+    * that opens at `open`. */
+  private def topLevelArgs(t: String, open: Int): Seq[String] = {
+    val args = Seq.newBuilder[String]
+    var depth = 0; var i = open; var start = open + 1; var inString = false
+    while (i < t.length && !(depth == 1 && !inString && t(i) == ')')) {
+      val c = t(i)
+      if (inString) { if (c == '\\') i += 1 else if (c == '"') inString = false }
+      else if (c == '\'' && i + 2 < t.length && t(i + 2) == '\'') i += 2 // a char literal
+      else if (c == '"') inString = true
+      else if ("([{".contains(c)) depth += 1
+      else if (")]}".contains(c)) depth -= 1
+      else if (c == ',' && depth == 1) { args += t.substring(start, i); start = i + 1 }
+      i += 1
+    }
+    val last = t.substring(start, i)
+    (args.result() ++ Seq(last).filter(_.trim.nonEmpty)).toSeq
+  }
+
+  private def methodRootUnit(u: String): Boolean =
+    (u.startsWith("graft/queries/") && u.endsWith("Queries")) ||
+      kept.map(_.replace('.', '/')).contains(u)
+
+  private lazy val unreachedMethods: Set[String] = {
+    val reached = program.reach(program.roots(methodRootUnit) ++
+      dailyCalls.map(c => CallGraph.Ref(c.owner, c.method, null)))
+    assert(reached.exists(r => r.owner == "graft/extract/Extractor$" && r.name == "run"),
+      "the daily run's calls did not resolve")
+    program.modules.filterNot(c => methodRootUnit(c.name.takeWhile(_ != '$'))).flatMap { c =>
+      val inherited = program.inheritedNames(c)
+      program.publicMethods(c).filterNot(m => inherited(m.name) ||
+          reached(CallGraph.Ref(c.name, m.name, m.desc)))
+        .map(m => s"${CallGraph.display(c.name)}.${m.name}")
+    }.toSet
+  }
+
+  test("every public method of a graft object is reached from a query " +
+       "family, a kept main, the session factory or the daily run") {
+    val dead = unreachedMethods.diff(allowedMethods.keySet).toSeq.sorted
+    if (dead.nonEmpty)
+      fail(s"${dead.size} methods nothing calls: ${dead.mkString(", ")}")
+    val stale = allowedMethods.keySet.diff(unreachedMethods).toSeq.sorted
+    if (stale.nonEmpty) fail(s"method allowlist entries to drop: ${stale.mkString(", ")}")
+  }
+
+  test("every defaulted parameter of a graft object method is passed by " +
+       "some caller in the program, the tests or the daily run") {
+    val params = program.modules.flatMap(program.defaulted)
+    assert(params.exists(p => p.owner == "graft/vector/HnswIndex$" && p.name == "params"),
+      "no defaulted parameters found")
+    val unset = params.filterNot(p => withTests.passedByCode(p) || dailyCalls.exists(c =>
+      c.owner == p.owner && c.method == p.method &&
+        (c.positional >= p.index || c.named(p.name))))
+    if (unset.nonEmpty)
+      fail(s"${unset.size} parameters no caller passes: ${unset.map(_.toString).sorted.mkString(", ")}")
   }
 }

@@ -146,7 +146,8 @@ class StreamingSpec extends SparkSpec {
             .collect().map(_.getLong(0))
         }
         // probe-then-append: this batch's text now owns its windows
-        Dedup.appendWindowFingerprints(batch, "text", "doc_id", idx)
+        Dedup.appendWindowFingerprintStats(
+          Dedup.batchWindowStats(batch, "text", "doc_id"), idx)
         ()
       }.start()
     q.processAllAvailable(); q.stop()
@@ -154,50 +155,6 @@ class StreamingSpec extends SparkSpec {
     // b1: the corpus copy flags, the fresh text doesn't; b2: the copy
     // of b1's fresh text flags (via the append), the unique doc doesn't
     assert(flagged.toSet == Set(100001L, 200001L), s"got ${flagged.toSet}")
-  }
-
-  test("streaming contamination probe: per-batch spans against the " +
-       "stored benchmark index union to the one-shot batch answer") {
-    import graft.dedup.Dedup
-    val docs = spark.read
-      .parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(col("doc_id"), col("text")).cache()
-    docs.count()
-    val bench = docs.filter(col("doc_id") % 7 === 0)
-    val train = docs.filter(col("doc_id") % 7 =!= 0)
-    // benchmark fingerprints are written ONCE; unlike the ExactSubstr
-    // stream there is no append — contamination is existence-only
-    val idx = Files.createTempDirectory("graft-contam-fp").toString + "/idx"
-    Dedup.writeWindowFingerprints(bench, "text", "doc_id", idx)
-
-    val dir = Files.createTempDirectory("graft-contam-docs").toString
-    train.filter(col("doc_id") % 2 === 0).coalesce(1).write.json(s"$dir/b1")
-    train.filter(col("doc_id") % 2 === 1).coalesce(1).write.json(s"$dir/b2")
-
-    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    val stream = spark.readStream
-      .schema("doc_id LONG, text STRING")
-      .option("maxFilesPerTrigger", 1)
-      .json(s"$dir/*")
-    val ckpt = Files.createTempDirectory("graft-contam-ckpt").toString
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val spans = Dedup.contaminationSpansIncremental(
-          spark, idx, batch, "text", "doc_id")
-        got.synchronized {
-          got ++= spans.collect()
-            .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        }
-        ()
-      }.start()
-    q.processAllAvailable(); q.stop()
-
-    val want = Dedup.contaminationSpans(train, bench, "text", "doc_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(got.toSet == want, s"streaming=${got.toSet} batch=$want")
-    assert(want.nonEmpty) // sf0.001 has verbatim leaks at mod 7 (q251)
-    docs.unpersist()
   }
 
   test("custom sketch aggregates work in streaming: hll_distinct per group") {

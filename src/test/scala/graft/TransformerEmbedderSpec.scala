@@ -71,7 +71,7 @@ class TransformerEmbedderSpec extends SparkSpec {
     val vocab = Seq("[PAD]", "[UNK]", "[CLS]", "[SEP]",
       "un", "##want", "##wa", "##ed", "unwant", "play", "##ing", "x")
     TransformerEmbedder.save(f, vocabTokens = vocab)
-    val m = TransformerEmbedder.testLoad(f)
+    val m = TransformerEmbedder.load(f)
     def ids(s: String) = TransformerEmbedder.tokenize(m, s).toSeq
     def id(t: String) = vocab.indexOf(t)
     // word-initial longest-first: "unwant" wins over "un"
@@ -89,7 +89,7 @@ class TransformerEmbedderSpec extends SparkSpec {
     val f = dir.resolve("wp2.gft3").toString
     val vocab = Seq("[PAD]", "[UNK]", "[CLS]", "[SEP]", "a", "##b", ",")
     TransformerEmbedder.save(f, vocabTokens = vocab)
-    val m = TransformerEmbedder.testLoad(f)
+    val m = TransformerEmbedder.load(f)
     def ids(s: String) = TransformerEmbedder.tokenize(m, s).toSeq
     def id(t: String) = vocab.indexOf(t)
     // "q" has no vocab entry at position 0 → whole word is [UNK];
@@ -107,7 +107,7 @@ class TransformerEmbedderSpec extends SparkSpec {
     val f = dir.resolve("wp3.gft3").toString
     val vocab = Seq("[PAD]", "[UNK]", "[CLS]", "[SEP]", "a", "##a")
     TransformerEmbedder.save(f, vocabTokens = vocab, maxLen = 8)
-    val m = TransformerEmbedder.testLoad(f)
+    val m = TransformerEmbedder.load(f)
     val toks = TransformerEmbedder.tokenize(m, Array.fill(50)("aaa").mkString(" "))
     assert(toks.length == 8, s"len=${toks.length}")
     assert(toks.head == vocab.indexOf("[CLS]") && toks.last == vocab.indexOf("[SEP]"))
@@ -121,7 +121,7 @@ class TransformerEmbedderSpec extends SparkSpec {
     // the default vocab carries every letter/digit as word-initial AND
     // ## continuation — the char-level fallback of real vocabs
     TransformerEmbedder.save(f, maxLen = 256)
-    val m = TransformerEmbedder.testLoad(f)
+    val m = TransformerEmbedder.load(f)
     val idToTok = TransformerEmbedder.defaultVocab.zipWithIndex
       .map(_.swap).toMap
     val rng = new scala.util.Random(7)
@@ -206,7 +206,7 @@ class TransformerEmbedderSpec extends SparkSpec {
     TransformerEmbedder.save(gft2, wordPiece = false)
     // widths and row counts that are no multiple of any vector width
     TransformerEmbedder.save(odd, d = 36, nHeads = 4, ffDim = 100, nLayers = 3)
-    val m = TransformerEmbedder.testLoad(gft3)
+    val m = TransformerEmbedder.load(gft3)
     assert(pinnedTexts.map(t => TransformerEmbedder.tokenize(m, t).length) ==
       Seq(3, 11, 62, 64, 31, 3, 2))
     assert(Seq(gft3, gft2, odd).map(embeddingSha) == Seq(
