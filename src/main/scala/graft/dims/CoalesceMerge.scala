@@ -1,7 +1,9 @@
 package graft.dims
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** The reference loader's upsert semantics (SURVEY.md §2.10), re-expressed
   * set-oriented: instead of row-at-a-time `INSERT ... ON CONFLICT`, one
@@ -67,8 +69,14 @@ object CoalesceMerge {
     *         column ("insert" | "update" | "keep") for A-agg1 counters.
     */
   def upsert(target: DataFrame, source: DataFrame, keys: Seq[String],
-             rules: Map[String, Rule] = Map.empty): DataFrame = {
-    val src = dedupDeterministic(source, keys)
+             rules: Map[String, Rule] = Map.empty): DataFrame =
+    upsertUnique(target, dedupDeterministic(source, keys), keys, rules)
+
+  /** [[upsert]] of a source that already holds one row per key, reduced by
+    * [[dedupDeterministic]] so columns derived from the survivors (an
+    * embedding) are computed once per key. */
+  def upsertUnique(target: DataFrame, src: DataFrame, keys: Seq[String],
+                   rules: Map[String, Rule] = Map.empty): DataFrame = {
     if (knownEmpty(target)) return insertAll(target, src, keys)
     // Presence markers, not key-nullness: a null-key target row must read
     // as "target present, unmatched" (keep), not as an insert.
@@ -125,15 +133,35 @@ object CoalesceMerge {
 
   /** A1 — insert-if-absent (get-or-create): anti-join then union; no
     * matched-row updates at all. Cheaper than full-outer when the rule
-    * set is pure InsertOnly. */
+    * set is pure InsertOnly.
+    *
+    * A stored target bucketed on exactly `keys` ([[bucketedOn]]) is
+    * anti-joined by sort-merge (`merge` hint): it is read in its buckets
+    * with no exchange and only the source is shuffled. A broadcast of it
+    * would build a hash relation keyed by a string or by two longs, a
+    * whole 16 MB memory page however small the target ([[HashLookup]]).
+    * Any other target is left to the planner. */
   def insertIfAbsent(target: DataFrame, source: DataFrame, keys: Seq[String],
                      dedupSource: Boolean = true): DataFrame = {
     val src = if (dedupSource) dedupDeterministic(source, keys) else source
     if (knownEmpty(target))
       return target.unionByName(src, allowMissingColumns = true)
-    val fresh = src.join(target.select(keys.map(col): _*), keys, "left_anti")
+    val targetKeys = target.select(keys.map(col): _*)
+    val fresh = src.join(if (bucketedOn(target, keys)) targetKeys.hint("merge") else targetKeys,
+      keys, "left_anti")
     target.unionByName(fresh, allowMissingColumns = true)
   }
+
+  /** True when `df` scans a table bucketed on exactly `keys` into at least
+    * `spark.sql.shuffle.partitions` buckets. Only then does a sort-merge
+    * join keep the table's own partitioning: with fewer buckets than the
+    * other side's shuffle partitions, the planner re-shuffles the table. */
+  private def bucketedOn(df: DataFrame, keys: Seq[String]): Boolean =
+    df.queryExecution.optimizedPlan match {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.bucketSpec.exists(b =>
+        b.bucketColumnNames == keys && b.numBuckets >= SQLConf.get.numShufflePartitions)
+      case _ => false
+    }
 
   /** A-agg1 — operation summary counters over the merge's `_action`. */
   def operationSummary(merged: DataFrame): DataFrame =

@@ -1,5 +1,6 @@
 package graft.extract
 
+import graft.dims.HashLookup
 import graft.parse.Parsers
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -8,8 +9,8 @@ import org.apache.spark.sql.functions._
   * nested sequential crawl becomes
   *
   *   raw_pages(url, html) → parseListing explode → event rows
-  *     → dropDuplicates on venue/artist href (D1 crawl memoization)
-  *     → join venue-detail + artist-detail page frames back (P2/P3)
+  *     → one detail page per venue href / artist (D1 crawl memoization)
+  *     → broadcast-join venue + artist details back by key hash (P2/P3)
   *     → performance-time parse (P5) → EventDTO-shaped staging frame
   *
   * The fetch itself (S1) is environment I/O: in production a connector
@@ -34,17 +35,17 @@ object Extractor {
     * (venue_pages/artist_pages: (href, html)). */
   def run(listings: DataFrame, venuePages: DataFrame, artistPages: DataFrame): DataFrame = {
     val events = eventsFromListings(listings)
-
-    val venueDetails = venuePages.dropDuplicates("href")
-      .select(col("href").as("venue_href"), venueUdf(col("html")).as("vd"))
+    // one detail page per key, looked up by its 64-bit hash; the parse
+    // runs on the surviving page only
+    val venueDetails = HashLookup.keyed(venuePages, "href")
+      .withColumn("vd", venueUdf(col("html"))).drop("html")
     // artist detail pages keyed by artist name (the reference's href
     // backfill from event pages, P4, is not reproduced)
-    val artistDetails = artistPages.dropDuplicates("artist_name")
-      .select(col("artist_name"), artistUdf(col("html")).as("ad"))
+    val artistDetails = HashLookup.keyed(artistPages, "artist_name")
+      .withColumn("ad", artistUdf(col("html"))).drop("html")
 
-    events
-      .join(broadcast(venueDetails), Seq("venue_href"), "left")
-      .join(broadcast(artistDetails), Seq("artist_name"), "left")
+    HashLookup.lookup(HashLookup.lookup(events, col("venue_href"), venueDetails),
+        col("artist_name"), artistDetails)
       .select(
         struct(
           col("artist_name").as("name"),

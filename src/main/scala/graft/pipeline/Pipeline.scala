@@ -81,20 +81,23 @@ object Pipeline {
         dedupSource = false).cache()
 
     // ---- artists (A2 COALESCE-per-column) ----
-    val batchArtists = valid.select(
+    // deduplicated before the embed, so each artist is embedded once; the
+    // winner is the same, as the embedding is a function of the other
+    // value columns
+    val batchArtists = CoalesceMerge.dedupDeterministic(valid.select(
         trim(col("artist_data.name")).as("name"),
         col("artist_data.wwoz_artist_href").as("wwoz_artist_href"),
         col("artist_data.description").as("description"),
         col("artist_data.website").as("website"))
       .withColumn("id", idOf(col("name")))
-      .withColumn("popularity_score", lit(null).cast("double"))
+      .withColumn("popularity_score", lit(null).cast("double")), Seq("name"))
     val artistText = Parsers.composeEmbedText(Seq(
       "" -> col("name"), "" -> col("description"), "Website" -> col("website")))
     val artistsEmbedded = EmbedStage.embedColumn(
       batchArtists.withColumn("_text", artistText),
       "_text", "description_embedding", embedder).drop("_text")
     val artists = CoalesceMerge
-      .upsert(prev.artists, artistsEmbedded, Seq("name")).cache()
+      .upsertUnique(prev.artists, artistsEmbedded, Seq("name")).cache()
     val artistSummary = CoalesceMerge.operationSummary(artists)
 
     // ---- venues (A3 mixed rules + J5 geocode + P7 flags) ----
@@ -125,8 +128,9 @@ object Pipeline {
           org.apache.spark.sql.types.DoubleType),
         org.apache.spark.sql.types.StructField("lon",
           org.apache.spark.sql.types.DoubleType))))
-    val batchVenuesGeo = Geocode.enrich(
-      batchVenues0, emptyCache, "full_address", to_date(lit(today)))
+    val venueKey = Seq("name", "full_address")
+    val batchVenuesGeo = CoalesceMerge.dedupDeterministic(Geocode.enrich(
+      batchVenues0, emptyCache, "full_address", to_date(lit(today))), venueKey)
     val venueText = Parsers.composeEmbedText(Seq(
       "" -> col("name"), "Address" -> col("full_address"),
       "" -> when(col("is_indoors"), lit("indoor venue"))
@@ -134,8 +138,7 @@ object Pipeline {
     val venuesEmbedded = EmbedStage.embedColumn(
       batchVenuesGeo.withColumn("_text", venueText),
       "_text", "venue_info_embedding", embedder).drop("_text")
-    val venues = CoalesceMerge.upsert(prev.venues, venuesEmbedded,
-      Seq("name", "full_address"),
+    val venues = CoalesceMerge.upsertUnique(prev.venues, venuesEmbedded, venueKey,
       Map("is_active" -> Overwrite, "latitude" -> Overwrite,
         "longitude" -> Overwrite, "last_geocoded" -> Overwrite,
         "is_indoors" -> Overwrite, "is_streaming" -> Overwrite)).cache()
@@ -211,18 +214,17 @@ object Pipeline {
       .withColumn("is_indoors", Parsers.isIndoors(col("venue_name")))
       .withColumn("is_streaming", Parsers.isStreaming(col("venue_name")))
       .drop("_venue_addr", "_event_date", "_perf_raw", "_scrape_raw")
-    val eventsEmbedded = EmbedStage.embedColumn(
-      EmbedStage.embedColumn(batchEvents0, "description", "description_embedding",
-        embedder)
-        .withColumn("_text", concat_ws(" ",
-          col("artist_name"), col("venue_name"), col("description"))),
-      "_text", "event_text_embedding", embedder).drop("_text")
-    // A4: matched rows only gain a previously-missing description
-    val events = CoalesceMerge.upsert(prev.events, eventsEmbedded,
+    // A4: matched rows only gain a previously-missing description; the
+    // two embeddings are InsertOnly, so only inserted rows are embedded
+    val eventsMerged = CoalesceMerge.upsert(prev.events, batchEvents0,
       Seq("wwoz_event_href"),
       prev.events.columns.filterNot(Seq("wwoz_event_href", "description")
         .contains).map(_ -> CoalesceMerge.InsertOnly).toMap ++
-        Map("description" -> CoalesceNewWins)).cache()
+        Map("description" -> CoalesceNewWins))
+    val events = embedInserted(embedInserted(eventsMerged, col("description"),
+        "description_embedding", embedder),
+      concat_ws(" ", col("artist_name"), col("venue_name"), col("description")),
+      "event_text_embedding", embedder).cache()
     val eventSummary = CoalesceMerge.operationSummary(events)
 
     // A-agg1 counters in ONE collect: the branches union into a single
@@ -245,6 +247,17 @@ object Pipeline {
     Warehouse(genres, artistsAll, venues.drop("_action"),
       events.drop("_action"), artistGenres, venueGenres, eventGenres,
       artistRelations, quarantine, summary)
+  }
+
+  /** `outCol` of a merged frame, embedded from `text` on the rows its
+    * `_action` marks "insert"; every other row keeps its stored value. */
+  private def embedInserted(merged: DataFrame, text: org.apache.spark.sql.Column,
+                            outCol: String, embedder: Embedder): DataFrame = {
+    val inserted = col("_action") === "insert"
+    EmbedStage.embedColumn(merged.withColumn("_text", when(inserted, text)),
+        "_text", "_emb", embedder)
+      .withColumn(outCol, when(inserted, col("_emb")).otherwise(col(outCol)))
+      .drop("_text", "_emb")
   }
 
   /** M4 — genre description fallback corpus (loader/service.py:220-240). */

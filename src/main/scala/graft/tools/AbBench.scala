@@ -168,6 +168,19 @@ object AbBench {
          () => { AnnCatalog.register(s"$tmp/base", entry); query() })
       })
 
+  /** Runs `body` (one pair) and then undoes what a pair leaves on the
+    * shared session: every session conf it set or unset (`annPair` turns
+    * the ANN cost gate off) and the `AnnCatalog` registrations, so the
+    * next pair plans as it would alone. */
+  private[graft] def isolated[T](spark: SparkSession)(body: => T): T = {
+    val conf = spark.conf.getAll
+    try body finally {
+      spark.conf.getAll.keys.filterNot(conf.contains).foreach(spark.conf.unset)
+      conf.foreach { case (k, v) => if (!spark.conf.getOption(k).contains(v)) spark.conf.set(k, v) }
+      graft.plans.AnnCatalog.clear()
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outPath = if (args.length > 1) args(1) else "target/ab.json"
@@ -195,7 +208,7 @@ object AbBench {
       dt
     }
 
-    val results = selected.map { p =>
+    val results = selected.map { p => isolated(spark) {
       val (a, b) = p.prepare(spark, sfDir)
       time(a); time(b) // one un-recorded warm lap each (JIT, codegen, footers)
       val runs = (1 to reps).map(_ => (time(a), time(b)))
@@ -208,7 +221,7 @@ object AbBench {
          |    "b_runs": [${rb.map(t => f"$t%.4f").mkString(",")}],
          |    "a_median": $ma, "b_median": $mb,
          |    "ratio_b_over_a": ${mb / ma}}""".stripMargin
-    }
+    } }
     val json = s"""{"sf": "$sfDir", "reps": $reps, "interleaved": true,
        |"pairs": {
        |${results.mkString(",\n")}

@@ -1,6 +1,9 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import scala.collection.mutable
 
@@ -16,7 +19,13 @@ import scala.collection.mutable
   * declares. `count()` would re-plan with an Aggregate on top, which
   * lets Catalyst prune payload columns and drop left joins against
   * unique-key sides — the very work a profile is after (q182's excision
-  * fold and md5 vanish under `count()`). The session is
+  * fold and md5 vanish under `count()`).
+  *
+  * The header also counts the broadcast hash joins in the plans the timed
+  * run executed (`bhj`) and those among them that build a hash relation
+  * not keyed by one integral column (`paged`): each of those takes a
+  * whole 16 MB memory page however small its build side
+  * ([[PlanWalk.pagedBroadcasts]]). The session is
   * [[graft.GraftSession.local]], the config Bench and Verify run under.
   *
   * Usage: runMain graft.tools.Profile <sfDir> <query>[,<query>...]
@@ -83,6 +92,21 @@ object Profile {
       }
     }
 
+    // the physical plans the timed run executed, for the broadcast counts
+    val plans = mutable.ArrayBuffer[SparkPlan]()
+    val planListener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.synchronized { plans += qe.executedPlan }
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    /** Plan nodes, each counted once however many plans reach it (a
+      * cached frame's plan appears under every action that reads it). */
+    def distinct(xs: Seq[SparkPlan]): Int = {
+      val seen = java.util.Collections.newSetFromMap(
+        new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean])
+      xs.count(seen.add)
+    }
+
     names.foreach { n =>
       val fn = graft.SparkEntry.queries.getOrElse(n,
         sys.error(s"unknown query: $n"))
@@ -93,7 +117,9 @@ object Profile {
       }
       graft.GraftSession.dropLeftoverState(spark)
       stages.clear()
+      plans.synchronized(plans.clear())
       spark.sparkContext.addSparkListener(listener)
+      spark.listenerManager.register(planListener)
       val t0 = System.nanoTime()
       val status = try { runDeclared(); "ok" } catch {
         case e: Throwable => s"failed(${e.getClass.getSimpleName})"
@@ -101,13 +127,17 @@ object Profile {
       val wall = (System.nanoTime() - t0) / 1e9
       Thread.sleep(300) // let the listener bus drain
       spark.sparkContext.removeSparkListener(listener)
+      spark.listenerManager.unregister(planListener)
+      val ran = plans.synchronized(plans.toVector)
+      val bhj = distinct(ran.flatMap(p => PlanWalk.nodes(p).filter(_.isInstanceOf[BroadcastHashJoinExec])))
+      val paged = distinct(ran.flatMap(PlanWalk.pagedBroadcasts))
       graft.GraftSession.dropLeftoverState(spark)
       val snap = stages.synchronized(stages.toVector)
       val descSnap = stages.synchronized(stageDesc.toMap)
       stages.synchronized { stageDesc.clear(); stagePeakMem.clear(); stageSpill.clear() }
       val stageSum = snap.map(_.durMs).sum / 1e3
       println(f"%n===== $n  wall=${wall}%.2fs  $status  " +
-        f"stages=${snap.size} stage-sum=${stageSum}%.2fs =====")
+        f"stages=${snap.size} stage-sum=${stageSum}%.2fs bhj=$bhj paged=$paged =====")
       // per-job-description rollup (labels set via setJobDescription)
       val byDesc = snap.groupBy(r => descSnap.getOrElse(r.id, ""))
         .map { case (d, rs) => (d, rs.map(_.durMs).sum, rs.size) }

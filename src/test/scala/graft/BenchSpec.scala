@@ -24,4 +24,22 @@ class BenchSpec extends SparkSpec {
     val r = Bench.timeQuery(spark, "unused", 2, (s, _) => s.range(10).toDF())
     assert(r.exists(_ >= 0.0), s"expected a time: $r")
   }
+
+  test("an AbBench pair leaves no session conf or ANN registration behind") {
+    val key = "spark.graft.ann.minTableBytes"
+    val before = spark.conf.getOption(key)
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    graft.tools.AbBench.isolated(spark) {
+      spark.conf.set(key, "0")
+      spark.conf.set("spark.sql.shuffle.partitions", "1")
+      spark.conf.set("spark.graft.test.isolated", "set")
+      graft.plans.AnnCatalog.register("/tmp/graft-ab-isolated",
+        graft.plans.AnnCatalog.HnswEntry("/tmp/graft-ab-isolated-index", "embedding", "vec_id",
+          graft.vector.HnswIndex.Params()))
+    }
+    assert(spark.conf.getOption(key) == before)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == partitions)
+    assert(spark.conf.getOption("spark.graft.test.isolated").isEmpty)
+    assert(graft.plans.AnnCatalog.lookup(Seq("/tmp/graft-ab-isolated")).isEmpty)
+  }
 }

@@ -2,6 +2,7 @@ package graft
 
 import graft.dims.CoalesceMerge
 import graft.dims.CoalesceMerge.{CoalesceNewWins, InsertOnly, Overwrite}
+import graft.tools.PlanWalk
 import org.apache.spark.sql.Row
 
 /** The three merge rule families of the reference loader (SURVEY §2.10):
@@ -105,5 +106,37 @@ class CoalesceMergeSpec extends SparkSpec {
     val sums = CoalesceMerge.operationSummary(merged)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(sums == Map("insert" -> 1L, "update" -> 1L, "keep" -> 1L))
+  }
+
+  test("insertIfAbsent against a bucketed target: sort-merge anti-join, no target exchange") {
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    val buckets = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val names = Seq("jazz", "funk", "blues", "zydeco")
+    graft.store.BucketedStore.saveBucketed(
+      names.map(n => (n, n.length.toLong)).toDF("name", "id"), "cm_genres", Seq("name"), buckets)
+    val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L)).toDF("artist_id", "genre_id")
+    graft.store.BucketedStore.saveBucketed(edges, "cm_edges", Seq("artist_id", "genre_id"), buckets)
+    try {
+      val cases = Seq(
+        (spark.table("cm_genres"), Seq(("jazz", 4L), ("bounce", 6L)).toDF("name", "id"), Seq("name"), 5L),
+        (spark.table("cm_edges"), Seq((1L, 2L), (9L, 9L)).toDF("artist_id", "genre_id"),
+          Seq("artist_id", "genre_id"), 4L))
+      cases.foreach { case (target, source, keys, rows) =>
+        val out = CoalesceMerge.insertIfAbsent(target, source, keys)
+        assert(out.collect().length == rows)
+        val plan = out.queryExecution.executedPlan
+        assert(PlanWalk.pagedBroadcasts(plan).isEmpty)
+        val anti = PlanWalk.nodes(plan).collect {
+          case j: SortMergeJoinExec if j.joinType == LeftAnti => j }
+        assert(anti.size == 1, plan.toString)
+        assert(PlanWalk.nodes(anti.head.right).collect { case e: ShuffleExchangeExec => e }.isEmpty,
+          s"target side exchanged:\n${anti.head}")
+      }
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS cm_genres")
+      spark.sql("DROP TABLE IF EXISTS cm_edges")
+    }
   }
 }

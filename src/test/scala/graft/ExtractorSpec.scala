@@ -1,6 +1,9 @@
 package graft
 
+import graft.dims.HashLookup
 import graft.extract.{Extractor, HtmlParse}
+import graft.tools.PlanWalk
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 
 /** Extractor stage over the reference's fixture HTML shapes
@@ -106,5 +109,31 @@ class ExtractorSpec extends SparkSpec {
     assert(vd.getAs[String]("full_address") == "626 Frenchmen St, New Orleans, LA 70116")
     // performance time: 8:00pm CDT -> 01:00 UTC next day
     assert(ellis.getAs[String]("performance_time") == "2025-03-22T01:00:00Z")
+  }
+
+  test("detail lookups join on the 64-bit key hash: no 16 MB broadcast page") {
+    val listings = Seq(("2025-03-21", listingHtml)).toDF("scrape_date", "html")
+    val venuePages = Seq(("/venues/123", venueHtml), ("/venues/99", "")).toDF("href", "html")
+    val artistPages = Seq(("Ellis Marsalis Quartet", artistHtml)).toDF("artist_name", "html")
+    val dto = Extractor.run(listings, venuePages, artistPages)
+    dto.collect()
+    val plan = dto.queryExecution.executedPlan
+    assert(PlanWalk.nodes(plan).count(_.isInstanceOf[BroadcastHashJoinExec]) == 2)
+    assert(PlanWalk.pagedBroadcasts(plan).isEmpty)
+  }
+
+  test("hash lookup: a colliding or duplicated build key never attaches or duplicates") {
+    val probe = Seq("a", "b", null).toDF("k")
+    val table = Seq(("a", 1), ("a", 2), ("b", 3)).toDF("k", "v")
+    val keyed = HashLookup.keyed(table, "k")
+    assert(keyed.count() == 2) // one row per hash
+    val out = HashLookup.lookup(probe, col("k"), keyed)
+      .collect().map(r => Option(r.getString(0)) -> Option(r.get(1))).toMap
+    assert(out.size == 3 && Set[Option[Any]](Some(1), Some(2)).contains(out(Some("a"))))
+    assert(out(Some("b")) == Some(3) && out(None).isEmpty)
+    // a build row whose hash matches but whose key differs: a collision
+    val collided = keyed.withColumn("_lk_k", lit("other"))
+    val miss = HashLookup.lookup(probe, col("k"), collided).collect()
+    assert(miss.length == 3 && miss.forall(_.isNullAt(1)))
   }
 }

@@ -1,8 +1,10 @@
 package graft
 
 import graft.ingest.StagingReader
-import graft.pipeline.Pipeline
+import graft.pipeline.{Pipeline, Warehouse}
+import graft.tools.PlanWalk
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** End-to-end loader pipeline over fixture JSON shaped like the
@@ -233,5 +235,42 @@ class PipelineSpec extends SparkSpec {
     // staging a read-back frame again drops its partition columns first
     StagingReader.writeStaged(back, dir)
     assert(StagingReader.readStaged(spark, dir).count() == 12)
+  }
+
+  test("a stored warehouse's next daily run builds no 16 MB broadcast page against a stored table") {
+    // day one stored the way the daily run stores it: bucketed on each
+    // table's merge key, one bucket per shuffle partition
+    val w1 = Pipeline.run(spark, staged, Pipeline.emptyWarehouse(spark), today = "2025-03-20")
+    val buckets = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val tables = Seq[(String, Seq[String], Warehouse => DataFrame)](
+      ("genres", Seq("name"), _.genres), ("artists", Seq("name"), _.artists),
+      ("venues", Seq("name", "full_address"), _.venues),
+      ("events", Seq("wwoz_event_href"), _.events),
+      ("artist_genres", Seq("artist_id", "genre_id"), _.artistGenres),
+      ("venue_genres", Seq("venue_id", "genre_id"), _.venueGenres),
+      ("event_genres", Seq("event_id", "genre_id"), _.eventGenres),
+      ("artist_relations", Seq("artist_id", "related_artist_id"), _.artistRelations))
+    tables.foreach { case (t, keys, f) =>
+      graft.store.BucketedStore.saveBucketed(f(w1), s"pw_$t", keys, buckets) }
+    try {
+      def t(n: String) = spark.table(s"pw_$n")
+      val prev = Pipeline.emptyWarehouse(spark).copy(genres = t("genres"), artists = t("artists"),
+        venues = t("venues"), events = t("events"), artistGenres = t("artist_genres"),
+        venueGenres = t("venue_genres"), eventGenres = t("event_genres"),
+        artistRelations = t("artist_relations"))
+      val nextDay = staged.withColumn("event_data", col("event_data")
+        .withField("wwoz_event_href", concat(col("event_data.wwoz_event_href"), lit("-2"))))
+      val w2 = Pipeline.run(spark, staged.unionByName(nextDay), prev, today = "2025-03-21")
+      assert(w2.summary("events_created") == 2)
+      // the one target that is not a stored table: the related-artist
+      // get-or-create against the day's merged artists, left to the planner
+      tables.foreach { case (name, _, f) =>
+        val df = f(w2)
+        df.collect()
+        val paged = PlanWalk.pagedBroadcasts(df.queryExecution.executedPlan)
+        val allowed = if (name == "artists") 1 else 0
+        assert(paged.size <= allowed, s"$name builds a paged broadcast:\n${paged.mkString("\n")}")
+      }
+    } finally tables.foreach { case (t, _, _) => spark.sql(s"DROP TABLE IF EXISTS pw_$t") }
   }
 }
